@@ -13,8 +13,13 @@ What survives as real code is the *front-end contract*:
   name, not a catalog (query_planner.rs:96-109);
 - empty-prune short-circuit → empty result, not an error (fuse_service.rs:80-83).
 
-Each step's SQL runs through ``spark.sql`` against temp views; step N's result
-is registered under ``step.name`` for step N+1 (the reference's
+Each query plans in its own session, cloned from the engine's session at the
+top of ``run`` (the reference gives every plan a fresh DataFusion context,
+query_planner.rs:47-51).  Catalog frames, the manifest view behind
+``partition_filter`` and each step's output are temp views of that clone
+only, so two queries, even on two threads, never share a table namespace,
+and the caller's own temp views are neither read nor overwritten.  Step N's
+result is registered under ``step.name`` for step N+1 (the reference's
 HBee→Flight→HComb hand-off collapses into DataFrame lineage).  Because the
 chain stays one lazy plan, Catalyst optimizes *across* steps: a reduce-side
 filter pushes down into the map scan, map-side partial aggregation happens
@@ -59,6 +64,22 @@ def _execution_root_cause(exc: Exception) -> str:
     tail = causes[-1] if causes else text
     first_line = tail.strip().splitlines()[0] if tail.strip() else text
     return f"query execution failed: {first_line}"
+
+
+def _plan_step(
+    session: SparkSession, step: BuzzStep, frames: dict[str, DataFrame]
+) -> DataFrame:
+    """Register ``frames`` under their table names, plan the step's SQL, and
+    register the result under the step's name for the steps after it.  The
+    frames were built on ``session``, so their views land there."""
+    for name, df in frames.items():
+        df.createOrReplaceTempView(name)
+    try:
+        out = session.sql(step.sql)
+    except AnalysisException as exc:
+        raise BuzzPlanError(f"step {step.name!r} failed to plan: {exc}") from exc
+    out.createOrReplaceTempView(step.name)
+    return out
 
 
 class CatalogSource(Protocol):
@@ -129,11 +150,12 @@ class BuzzEngine:
     def run(self, query: BuzzQuery) -> DataFrame:
         """Plan the query and return the (lazy) result DataFrame.
 
-        Session-state contract: catalog and step names referenced by the
-        query are CLAIMED as temp views for the duration of planning and
-        dropped afterward — a pre-existing user temp view with a colliding
-        name is overwritten and then removed.  Run engine queries on a
-        session (or name catalogs) so these namespaces don't collide."""
+        Planning happens in a session cloned from the engine's: the clone
+        starts with the engine session's confs, temp views and functions,
+        and every view the query registers stays in the clone, so the
+        engine's session is left exactly as it was.  The result is bound to
+        that clone: a conf set on the engine's session after ``run``
+        returns does not reach it."""
         if self.strict:
             query.validate_strict()
         elif not query.steps:
@@ -143,57 +165,38 @@ class BuzzEngine:
         for spec in query.catalogs:
             sources[spec.name.lower()] = self._resolve_catalog(spec)
 
+        session = SparkSession(
+            self.spark.sparkContext, self.spark._jsparkSession.cloneSession()
+        )
         if query.capacity and query.capacity.zones > 1:
-            zoned = self._run_zoned(query, sources)
+            zoned = self._run_zoned(query, sources, session)
             if zoned is not None:
                 return zoned
 
         step_views: set[str] = set()
-        registered_views: list[str] = []
-        result: DataFrame | None = None
-        try:
-            for i, step in enumerate(query.steps):
-                refs = referenced_tables(self.spark, step.sql)
-                self._validate_step(i, step, refs, sources, step_views)
-                for ref in refs:
-                    if ref in step_views:
-                        continue
-                    source = sources.get(ref)
-                    if source is not None:
-                        if step.stats_filter is not None:
-                            df = source.to_dataframe(
-                                self.spark,
-                                step.partition_filter,
-                                stats_filter=step.stats_filter,
-                            )
-                        else:
-                            df = source.to_dataframe(
-                                self.spark, step.partition_filter
-                            )
-                        df.createOrReplaceTempView(ref)
-                        registered_views.append(ref)
-                try:
-                    result = self.spark.sql(step.sql)
-                except AnalysisException as exc:
-                    raise BuzzPlanError(
-                        f"step {step.name!r} failed to plan: {exc}"
-                    ) from exc
-                result.createOrReplaceTempView(step.name)
-                step_views.add(step.name.lower())
-                registered_views.append(step.name)
-        finally:
-            for view in registered_views:
-                try:
-                    self.spark.catalog.dropTempView(view)
-                except Exception:
-                    pass
-        assert result is not None
+        for i, step in enumerate(query.steps):
+            refs = referenced_tables(session, step.sql)
+            self._validate_step(i, step, refs, sources, step_views)
+            frames = {
+                ref: sources[ref].to_dataframe(
+                    session, step.partition_filter, step.stats_filter
+                )
+                for ref in refs
+                if ref not in step_views and ref in sources
+            }
+            result = _plan_step(session, step, frames)
+            step_views.add(step.name.lower())
         return result
 
     def run_json(self, query_json: str) -> DataFrame:
         return self.run(BuzzQuery.from_json(query_json))
 
-    def _run_zoned(self, query: BuzzQuery, sources: dict[str, CatalogSource]):
+    def _run_zoned(
+        self,
+        query: BuzzQuery,
+        sources: dict[str, CatalogSource],
+        session: SparkSession,
+    ):
         """Multi-zone execution (reference: query_planner.rs:111-132 +
         fuse_service.rs:130-135): hbee splits (catalog files) are distributed
         round-robin across ``min(zones, nb_files)`` zones, each zone's HComb
@@ -218,14 +221,14 @@ class BuzzEngine:
             return None
         if s1.step_type is not BuzzStepType.HCOMB:
             return None
-        refs0 = referenced_tables(self.spark, s0.sql)
+        refs0 = referenced_tables(session, s0.sql)
         if len(refs0) != 1:
             return None
         (ref,) = tuple(refs0)
         src = sources.get(ref)
         if not isinstance(src, StaticCatalog):
             return None
-        refs1 = referenced_tables(self.spark, s1.sql)
+        refs1 = referenced_tables(session, s1.sql)
         # Same validation (and error parity) as the single-zone path.
         self._validate_step(0, s0, refs0, sources, set())
         self._validate_step(1, s1, refs1, sources, {s0.name.lower()})
@@ -238,7 +241,7 @@ class BuzzEngine:
         if any(r != s0.name.lower() for r in refs1):
             return None
 
-        files = src.pruned_files(self.spark, s0.partition_filter)
+        files = src.pruned_files(session, s0.partition_filter)
         used = min(query.capacity.zones, len(files))
         if used <= 1:
             return None  # 0 files → canonical empty path; 1 file → single zone
@@ -249,24 +252,9 @@ class BuzzEngine:
             # files[z::used] == {i : i % used == z} — the reference's
             # round-robin assignment (query_planner.rs:126-132).
             zcat = replace(src, files=files[z::used])
-            zdf = zcat.to_dataframe(self.spark, None)  # already pruned
-            zdf.createOrReplaceTempView(ref)
-            try:
-                for step in (s0, s1):
-                    try:
-                        out = self.spark.sql(step.sql)
-                    except AnalysisException as exc:
-                        raise BuzzPlanError(
-                            f"step {step.name!r} failed to plan: {exc}"
-                        ) from exc
-                    out.createOrReplaceTempView(step.name)
-                results.append(out)
-            finally:
-                for view in (ref, s0.name, s1.name):
-                    try:
-                        self.spark.catalog.dropTempView(view)
-                    except Exception:
-                        pass
+            zdf = zcat.to_dataframe(session, None)  # already pruned
+            _plan_step(session, s0, {ref: zdf})
+            results.append(_plan_step(session, s1, {}))
         merged = results[0]
         for r in results[1:]:
             merged = merged.unionByName(r)

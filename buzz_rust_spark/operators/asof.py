@@ -48,19 +48,23 @@ def asof_join(
     for c in by:
         if c not in left.columns or c not in right.columns:
             raise BuzzBadRequestError(f"asof 'by' column {c!r} missing from input")
-    # The implementation derives __event_ts's type locally from the inputs
-    # (no mid-plan .schema analysis).  That is only sound when both sides
-    # carry the SAME timestamp type: unionByName would otherwise silently
-    # widen (INT/LONG, DATE/TIMESTAMP, NTZ/LTZ) and the tolerance's
-    # epoch_seconds would dispatch on the pre-widening type — wrong
-    # distances instead of an error (ADVICE r12).  Mixed-type as-of inputs
-    # are ambiguous anyway; make the caller cast explicitly.
+    for c, df, side in ((left_ts, left, "left"), (right_ts, right, "right")):
+        if c not in df.columns:
+            raise BuzzBadRequestError(
+                f"asof timestamp column {c!r} missing from {side} input"
+            )
     lt, rt = left.schema[left_ts].dataType, right.schema[right_ts].dataType
-    if lt != rt:
+    # The tolerance's epoch_seconds dispatches on each side's own timestamp
+    # type, derived locally (no mid-plan .schema analysis).  unionByName
+    # widens mixed types (INT/LONG, DATE/TIMESTAMP, NTZ/LTZ), so with a
+    # tolerance the distance would be computed on the pre-widening type:
+    # wrong distances instead of an error (ADVICE r12).  Without a tolerance
+    # only the ordering uses the widened column, which is sound.
+    if tolerance_seconds is not None and lt != rt:
         raise BuzzBadRequestError(
-            f"asof timestamp types must match: {left_ts!r} is "
-            f"{lt.simpleString()}, {right_ts!r} is {rt.simpleString()} — "
-            "cast one side explicitly"
+            f"asof timestamp types must match when a tolerance is set: "
+            f"{left_ts!r} is {lt.simpleString()}, {right_ts!r} is "
+            f"{rt.simpleString()} — cast one side explicitly"
         )
 
     left_cols = left.columns
@@ -142,11 +146,9 @@ def asof_join(
         # Derived locally — sound because the lt == rt guard above rejects
         # inputs unionByName would widen; avoids another mid-plan .schema
         # analysis, same rationale as _rval_type.
-        ts_type = lt
-        match_ts_type = rt
         distance = F.abs(
-            epoch_seconds(F.col("__event_ts"), ts_type)
-            - epoch_seconds(F.col("__match.__ts"), match_ts_type)
+            epoch_seconds(F.col("__event_ts"), lt)
+            - epoch_seconds(F.col("__match.__ts"), rt)
         )
         carried = carried.withColumn(
             "__match",

@@ -4,92 +4,51 @@ Reference parity: ``find_table_name`` walks the plan to its leaf TableScan
 (code/src/services/utils.rs:8-45) and the planner validates that the reduce
 step reads exactly the map step's output by name (query_planner.rs:96-109).
 Here the walk runs on Spark's *parsed* (unresolved) plan, so validation can
-happen before any view is registered.
+happen before any view is registered.  The plan crosses the JVM gateway once,
+as the JSON of ``parsePlan(sql).toJSON()``, and is walked in Python: every
+``UnresolvedRelation`` is a table read, including those inside subquery
+expressions and CTE bodies, and the names a ``WITH`` clause defines
+(``UnresolvedWith.cteRelations``) are statement-local, not tables.
 """
 
 from __future__ import annotations
 
-import re
+import json
 
+from pyspark.errors import ParseException
 from pyspark.sql import SparkSession
 
 from ..errors import BuzzPlanError
 
 
-def _collect_unresolved_relations(jplan) -> set[str]:
-    """Recurse a Catalyst TreeNode (via py4j) collecting UnresolvedRelation
-    table names.  Covers FROM/JOIN/set-op children; subqueries inside
-    expressions are additionally handled by ``innerChildren``."""
-    names: set[str] = set()
-
-    def visit(node) -> None:
-        cls = node.getClass().getSimpleName()
-        if cls == "UnresolvedRelation":
-            names.add(node.tableName().lower())
-        children = node.children()
-        for i in range(children.size()):
-            visit(children.apply(i))
-        inner = node.innerChildren()
-        for i in range(inner.size()):
-            visit(inner.apply(i))
-
-    visit(jplan)
-    return names
-
-
-_FROM_RE = re.compile(
-    r"\b(?:from|join)\s+([a-zA-Z_][\w.]*)", flags=re.IGNORECASE
-)
-
-# SQL text → referenced-table set.  The result is a pure function of the
-# statement text (the parse stops at the UNRESOLVED plan — no catalog or
-# session state is consulted), but computing it walks the Catalyst tree over
-# py4j — one gateway round trip per node, ~100+ per statement.  An engine
-# that re-runs the same BuzzQuery pays that on every call (profiled round
-# 12: ~150 ms of b01's driver time is per-call engine setup; VERDICT r12
-# #7).  Bounded so a query-generating service can't grow it without limit.
-_REFERENCED_TABLES_MEMO: dict[str, frozenset[str]] = {}
-_REFERENCED_TABLES_MEMO_MAX = 1024
+def _walk(node, relations: set[str], ctes: set[str]) -> None:
+    if isinstance(node, list):
+        for item in node:
+            _walk(item, relations, ctes)
+        return
+    if not isinstance(node, dict):
+        return
+    cls = node.get("class", "")
+    if cls.endswith(".UnresolvedRelation"):
+        # multipartIdentifier is rendered as "[cat, db, tbl]"
+        parts = node["multipartIdentifier"].strip("[]").split(", ")
+        relations.add(".".join(parts).lower())
+    elif cls.endswith(".UnresolvedWith"):
+        ctes.update(rel["_1"].lower() for rel in node["cteRelations"])
+    for value in node.values():
+        _walk(value, relations, ctes)
 
 
 def referenced_tables(spark: SparkSession, sql: str) -> set[str]:
-    """Return the set of (lower-cased) table names the statement reads.
-
-    CTE names defined in the statement itself are excluded.  Uses Spark's own
-    SQL parser; falls back to a regex scan if the JVM gateway is unavailable
-    (e.g. Spark Connect).  Successful results are memoized by statement text
-    (see ``_REFERENCED_TABLES_MEMO``)."""
-    hit = _REFERENCED_TABLES_MEMO.get(sql)
-    if hit is not None:
-        return set(hit)
+    """Return the set of (lower-cased, dotted) table names the statement
+    reads.  CTE names defined in the statement itself are excluded.  A
+    statement Spark's parser rejects raises :class:`BuzzPlanError`."""
+    parser = spark._jsparkSession.sessionState().sqlParser()
     try:
-        parser = spark._jsparkSession.sessionState().sqlParser()
-        jplan = parser.parsePlan(sql)
-        names = _collect_unresolved_relations(jplan)
-    except BuzzPlanError:
-        raise
-    except Exception as exc:  # py4j parse error or Connect-mode gateway absence
-        msg = str(exc)
-        if "ParseException" in msg or "PARSE_SYNTAX_ERROR" in msg:
-            raise BuzzPlanError(f"invalid SQL: {msg}") from exc
-        # Regex fallback: scrub string literals (a FROM inside '...' is not
-        # a table ref) and EXTRACT(unit FROM expr) calls before scanning.
-        scrubbed = re.sub(r"'(?:[^'']|'')*'", "''", sql)
-        scrubbed = re.sub(
-            r"\bextract\s*\([^()]*\)", "extract()", scrubbed, flags=re.IGNORECASE
-        )
-        names = {m.group(1).lower() for m in _FROM_RE.finditer(scrubbed)}
-    # Strip CTE-local names.  No \b before the comma branch: a word boundary
-    # there can never match (the comma always follows ')' or whitespace), so
-    # every CTE after the first leaked into the referenced set and valid
-    # multi-CTE queries failed validation.
-    cte_names = {
-        m.group(1).lower()
-        for m in re.finditer(
-            r"(?:\bwith|,)\s*([a-zA-Z_]\w*)\s+as\s*\(", sql, re.IGNORECASE
-        )
-    }
-    result = {n for n in names if n not in cte_names}
-    if len(_REFERENCED_TABLES_MEMO) < _REFERENCED_TABLES_MEMO_MAX:
-        _REFERENCED_TABLES_MEMO[sql] = frozenset(result)
-    return result
+        plan = parser.parsePlan(sql).toJSON()
+    except ParseException as exc:
+        raise BuzzPlanError(f"invalid SQL: {exc}") from exc
+    relations: set[str] = set()
+    ctes: set[str] = set()
+    _walk(json.loads(plan), relations, ctes)
+    return relations - ctes

@@ -371,7 +371,11 @@ def test_runtime_task_failure_surfaces_typed_error(spark, tmp_path):
     assert engine2.run_collect(q)[0]["n"] == 6
 
 
-def zones_query(zones, hcomb_sql="SELECT COUNT(data_col) AS n FROM map_step"):
+def zones_query(
+    zones,
+    hcomb_sql="SELECT COUNT(data_col) AS n FROM map_step",
+    partition_filter=None,
+):
     return BuzzQuery.from_dict(
         {
             "steps": [
@@ -379,6 +383,7 @@ def zones_query(zones, hcomb_sql="SELECT COUNT(data_col) AS n FROM map_step"):
                     "sql": "SELECT data_col FROM mock_split",
                     "name": "map_step",
                     "step_type": "HBee",
+                    "partition_filter": partition_filter,
                 },
                 {"sql": hcomb_sql, "name": "reduce_step", "step_type": "HComb"},
             ],
@@ -611,3 +616,104 @@ def test_stats_filter_on_query_json(spark, sf_dir):
     # unknown column → typed plan error, not a raw AnalysisException
     with pytest.raises(BuzzPlanError, match="stats_filter"):
         engine.run_json(json.dumps(q(stats_filter="no_such_col < 10")))
+
+
+COUNT_SUM = "SELECT COUNT(data_col) AS n, SUM(data_col) AS s FROM map_step"
+
+
+def _duckdb_count_sum(cat, partition_filter):
+    """DuckDB over the same files: the filter runs on a manifest table named
+    like the catalog, then the surviving files are read directly."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE mock_split (key VARCHAR, part_key_1 VARCHAR)")
+    con.executemany(
+        "INSERT INTO mock_split VALUES (?, ?)",
+        [(f.key, f.partition_value("part_key_1")) for f in cat.files],
+    )
+    keys = [
+        k for (k,) in con.execute(
+            f"SELECT key FROM mock_split WHERE {partition_filter}"
+        ).fetchall()
+    ]
+    if not keys:
+        return (0, None)
+    paths = ", ".join(f"'{k}'" for k in keys)
+    return con.execute(
+        f"SELECT COUNT(data_col), SUM(data_col) FROM read_parquet([{paths}])"
+    ).fetchone()
+
+
+def test_concurrent_queries_on_one_session_are_isolated(spark, tmp_path):
+    """Eight threads query the same catalog name with different partition
+    filters at once; each query plans in its own session, so every answer
+    equals DuckDB's over the same files (no thread sees another's views)."""
+    import threading
+
+    cat = mock_split_catalog(spark, tmp_path, n_files=8)
+    engine = BuzzEngine(spark, strict=True)
+    engine.register_source(cat)
+    filters = ["part_key_1 = 'no_such_value'"] + [
+        f"part_key_1 <= 'part_value_{t:03d}'" for t in range(1, 8)
+    ]
+    expected = [_duckdb_count_sum(cat, f) for f in filters]
+    assert expected[0] == (0, None) and len(set(expected)) == len(filters)
+
+    barrier = threading.Barrier(len(filters))
+    got: dict[int, list] = {t: [] for t in range(len(filters))}
+    errors: list[BaseException] = []
+
+    def worker(t):
+        try:
+            barrier.wait()
+            for _ in range(4):
+                # odd threads take the zoned path: one row per zone
+                rows = engine.execute(
+                    engine.run(zones_query(1 + t % 2, COUNT_SUM, filters[t]))
+                )
+                sums = [r["s"] for r in rows if r["s"] is not None]
+                got[t].append((sum(r["n"] for r in rows), sum(sums) if sums else None))
+        except BaseException as exc:  # surfaced in the main thread below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=worker, args=(t,)) for t in range(len(filters))]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    assert not errors, errors
+    for t, want in enumerate(expected):
+        assert got[t] == [want] * 4, (filters[t], got[t], want)
+
+
+def test_user_temp_view_with_catalog_name_survives_run(spark, tmp_path):
+    """A caller's temp view named like a catalog is neither read nor
+    replaced nor dropped by a query: the query's views live in its own
+    session."""
+    cat = mock_split_catalog(spark, tmp_path, n_files=3)
+    engine = BuzzEngine(spark, strict=True)
+    engine.register_source(cat)
+    spark.range(2).createOrReplaceTempView("mock_split")
+    try:
+        rows = engine.execute(
+            engine.run(zones_query(1, COUNT_SUM, "part_key_1 <= 'part_value_002'"))
+        )
+        assert [(r["n"], r["s"]) for r in rows] == [(6, 10 + 11 + 12 + 20 + 21 + 22)]
+        assert spark.table("mock_split").columns == ["id"]
+        assert spark.table("mock_split").count() == 2
+    finally:
+        spark.catalog.dropTempView("mock_split")
+
+
+def test_failed_plan_leaves_session_tables_unchanged(spark, tmp_path):
+    """A query that fails to plan at its second step leaves no view behind
+    in the engine's session."""
+    cat = mock_split_catalog(spark, tmp_path, n_files=3)
+    engine = BuzzEngine(spark, strict=True)
+    engine.register_source(cat)
+    before = sorted(t.name for t in spark.catalog.listTables())
+    bad = zones_query(1, "SELECT COUNT(no_such_col) AS n FROM map_step")
+    with pytest.raises(BuzzPlanError, match="reduce_step"):
+        engine.run(bad)
+    assert sorted(t.name for t in spark.catalog.listTables()) == before

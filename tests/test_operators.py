@@ -424,6 +424,69 @@ def test_asof_join_backward_forward_tolerance(spark):
     assert tol == {1: 101, 2: None, 3: None, 4: None}
 
 
+def test_asof_join_missing_ts_column_is_bad_request(spark):
+    from datetime import datetime
+
+    from buzz_rust_spark import BuzzBadRequestError
+    from buzz_rust_spark.operators.asof import asof_join
+
+    left = spark.createDataFrame([(1, datetime(2024, 1, 1))], ["id", "t"])
+    right = spark.createDataFrame([(2, datetime(2024, 1, 1))], ["rid", "t"])
+    with pytest.raises(BuzzBadRequestError, match="'ts'.*left"):
+        asof_join(left, right, left_ts="ts", right_ts="t")
+    with pytest.raises(BuzzBadRequestError, match="'ts'.*right"):
+        asof_join(left, right, left_ts="t", right_ts="ts")
+
+
+def test_asof_join_widens_mixed_ts_types_without_tolerance(spark):
+    """DATE/TIMESTAMP and INT/LONG sides join on the widened type when no
+    tolerance is set; with a tolerance the types must match."""
+    from datetime import date, datetime
+
+    from buzz_rust_spark import BuzzBadRequestError
+    from buzz_rust_spark.operators.asof import asof_join
+
+    left = spark.createDataFrame(
+        [(1, date(2024, 1, 2)), (2, date(2024, 1, 1))], ["id", "d"]
+    )
+    right = spark.createDataFrame(
+        [(100, datetime(2024, 1, 1, 12)), (101, datetime(2023, 12, 31))],
+        ["rid", "t"],
+    )
+    got = {
+        r["id"]: r["r_rid"]
+        for r in asof_join(left, right, "d", "t", right_prefix="r_").collect()
+    }
+    assert got == {1: 100, 2: 101}
+    with pytest.raises(BuzzBadRequestError, match="tolerance"):
+        asof_join(left, right, "d", "t", tolerance_seconds=60)
+
+    ileft = spark.createDataFrame([(1, 5), (2, 15)], ["id", "k"]).withColumn(
+        "k", F.col("k").cast("int")
+    )
+    iright = spark.createDataFrame([(100, 4), (101, 10)], ["rid", "k"])
+    got = {
+        r["id"]: r["r_rid"]
+        for r in asof_join(ileft, iright, "k", "k", right_prefix="r_").collect()
+    }
+    assert got == {1: 100, 2: 101}
+
+
+def test_row_count_sums_a_directory_of_parquet_files(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from buzz_rust_spark.queries.registry import row_count
+
+    table_dir = tmp_path / "docs.parquet"
+    table_dir.mkdir()
+    pq.write_table(pa.table({"x": list(range(3))}), table_dir / "part-0.parquet")
+    pq.write_table(pa.table({"x": list(range(4))}), table_dir / "part-1.parquet")
+    pq.write_table(pa.table({"x": list(range(5))}), tmp_path / "single.parquet")
+    assert row_count(str(tmp_path), "docs") == 7
+    assert row_count(str(tmp_path), "single") == 5
+
+
 def test_duplicate_clusters_matches_union_find(spark):
     """Min-label propagation must agree with a driver-side union-find."""
     from buzz_rust_spark.operators.dedup import duplicate_clusters

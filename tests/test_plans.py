@@ -171,19 +171,48 @@ def test_simhash_pairs_single_python_kernel(spark, sf_dir):
     release_operator_caches()
 
 
-def test_multi_cte_and_literal_from_not_reported(spark):
-    """Review fixes: every CTE name (not just the first) is stripped, and the
-    regex fallback is only a fallback — the parser path must handle
-    FROM-in-literal and EXTRACT correctly."""
+@pytest.mark.parametrize(
+    "sql, expected",
+    [
+        pytest.param(
+            "WITH a AS (SELECT 1), b AS (SELECT 2) SELECT * FROM a JOIN b JOIN ev",
+            {"ev"},
+            id="multi_cte",
+        ),
+        pytest.param(
+            "SELECT extract(year FROM ts) FROM events WHERE note = 'from backup'",
+            {"events"},
+            id="literal_and_extract_from",
+        ),
+        pytest.param(
+            "SELECT * FROM orders WHERE o_custkey IN (SELECT c_custkey FROM customer)",
+            {"orders", "customer"},
+            id="in_subquery",
+        ),
+        pytest.param(
+            "SELECT * FROM orders o WHERE EXISTS "
+            "(SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)",
+            {"orders", "lineitem"},
+            id="exists_subquery",
+        ),
+        pytest.param(
+            "WITH m AS (SELECT * FROM lineitem) SELECT COUNT(*) FROM m",
+            {"lineitem"},
+            id="cte_reads_catalog",
+        ),
+        pytest.param("SELECT * FROM Cat.DB.Tbl", {"cat.db.tbl"}, id="multipart_name"),
+        pytest.param("SELEC * FRM lineitem", None, id="syntax_error"),
+    ],
+)
+def test_multi_cte_and_literal_from_not_reported(spark, sql, expected):
+    """Tables come from the parsed plan: CTE names are statement-local, a
+    FROM inside a literal or EXTRACT is no table, subqueries and CTE bodies
+    count, multi-part names are dotted, and a syntax error is a plan error."""
+    from buzz_rust_spark.errors import BuzzPlanError
     from buzz_rust_spark.plans.analysis import referenced_tables
 
-    refs = referenced_tables(
-        spark,
-        "WITH a AS (SELECT 1), b AS (SELECT 2) SELECT * FROM a JOIN b JOIN ev",
-    )
-    assert refs == {"ev"}
-    refs2 = referenced_tables(
-        spark,
-        "SELECT extract(year FROM ts) FROM events WHERE note = 'from backup'",
-    )
-    assert refs2 == {"events"}
+    if expected is None:
+        with pytest.raises(BuzzPlanError, match="invalid SQL"):
+            referenced_tables(spark, sql)
+    else:
+        assert referenced_tables(spark, sql) == expected
