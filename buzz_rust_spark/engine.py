@@ -15,13 +15,13 @@ What survives as real code is the *front-end contract*:
 
 Each query plans in its own session, cloned from the engine's session at the
 top of ``run`` (the reference gives every plan a fresh DataFusion context,
-query_planner.rs:47-51).  Catalog frames, the manifest view behind
-``partition_filter`` and each step's output are temp views of that clone
-only, so two queries, even on two threads, never share a table namespace,
-and the caller's own temp views are neither read nor overwritten.  Step N's
-result is registered under ``step.name`` for step N+1 (the reference's
-HBee→Flight→HComb hand-off collapses into DataFrame lineage).  Because the
-chain stays one lazy plan, Catalyst optimizes *across* steps: a reduce-side
+query_planner.rs:47-51).  Catalog frames and each step's output are temp
+views of that clone only, so two queries, even on two threads, never share
+a table namespace, and the caller's own temp views are neither read nor
+overwritten.  Step N's result is registered under ``step.name`` for step
+N+1 (the reference's HBee→Flight→HComb hand-off collapses into DataFrame
+lineage).  Because the chain stays one lazy plan, Catalyst optimizes
+*across* steps: a reduce-side
 filter pushes down into the map scan, map-side partial aggregation happens
 automatically, and the user's manual COUNT→SUM split still produces a single
 two-phase hash aggregation.
@@ -30,6 +30,7 @@ two-phase hash aggregation.
 from __future__ import annotations
 
 from typing import Protocol
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.utils import AnalysisException
@@ -52,6 +53,18 @@ def _meta_catalog(name: str, fmt: str, base_uri: str, table: str):
     from .sources.metadata_tables import MetadataTableCatalog
 
     return MetadataTableCatalog(name, fmt, base_uri, table)
+
+
+def _local_static_only(sources) -> bool:
+    """Every source is a static catalog whose files resolve to local paths."""
+    return all(
+        isinstance(src, StaticCatalog)
+        and all(
+            urlparse(src.resolve_key(f.key)).scheme in ("", "file")
+            for f in src.files
+        )
+        for src in sources
+    )
 
 
 def _execution_root_cause(exc: Exception) -> str:
@@ -155,7 +168,14 @@ class BuzzEngine:
         and every view the query registers stays in the clone, so the
         engine's session is left exactly as it was.  The result is bound to
         that clone: a conf set on the engine's session after ``run``
-        returns does not reach it."""
+        returns does not reach it.
+
+        When every source is a static catalog of local files, the clone
+        alone sets ``parallelPartitionDiscovery.threshold`` above any file
+        count, so the scans list those files on the driver instead of in a
+        Spark listing job (faster at every size measured, see CHANGES.md).
+        Object-store listing was not measured, so other catalogs keep
+        Spark's parallel listing."""
         if self.strict:
             query.validate_strict()
         elif not query.steps:
@@ -168,6 +188,10 @@ class BuzzEngine:
         session = SparkSession(
             self.spark.sparkContext, self.spark._jsparkSession.cloneSession()
         )
+        if _local_static_only(sources.values()):
+            session.conf.set(
+                "spark.sql.sources.parallelPartitionDiscovery.threshold", 2**31 - 1
+            )
         if query.capacity and query.capacity.zones > 1:
             zoned = self._run_zoned(query, sources, session)
             if zoned is not None:

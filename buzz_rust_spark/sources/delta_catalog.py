@@ -33,7 +33,7 @@ from pyspark.sql.types import StructField, StructType
 
 from ..errors import BuzzExecutionError
 from .logstore import LogStore
-from .manifest import CatalogFile
+from .manifest import CatalogFile, manifest_df
 from .static_catalog import StaticCatalog
 
 _LOG = "_delta_log"
@@ -557,11 +557,12 @@ class DeltaCatalog:
         O(partitions) union plan).  DV decode itself is driver-side
         metadata work, like the log replay (bitmaps are compressed;
         cardinality is bounded by writer compaction policy)."""
+        from dataclasses import replace
         from functools import reduce
 
         from pyspark.sql import functions as F
         from pyspark.sql.functions import broadcast
-        from pyspark.sql.types import StringType, StructField, StructType
+        from pyspark.sql.types import StringType
 
         from .deletion_vectors import filter_deleted_rows, read_dv_positions
         from .uris import normalized_key
@@ -588,20 +589,11 @@ class DeltaCatalog:
             clean = filter_deleted_rows(
                 scan, deleted, spark, self.DV_BROADCAST_MAX, drop_path=False
             )
-            manifest = spark.createDataFrame(
-                [
-                    (normalized_key(f.key),)
-                    + tuple(f.partition_value(c) for c in self.partition_cols)
-                    for f in files
-                ],
-                StructType(
-                    [StructField("__path", StringType(), False)]
-                    + [
-                        StructField(c, StringType(), True)
-                        for c in self.partition_cols
-                    ]
-                ),
-            )
+            manifest = manifest_df(
+                spark,
+                [replace(f, key=normalized_key(f.key)) for f in files],
+                self.partition_cols,
+            ).select(F.col("key").alias("__path"), *self.partition_cols)
             # inner: every scanned row's file is in the manifest by
             # construction (the scan reads exactly these files)
             return clean.join(broadcast(manifest), on="__path").drop("__path")

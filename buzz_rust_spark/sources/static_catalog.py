@@ -9,6 +9,8 @@ and attaching partition values as string columns.
 Scale design:
 - Pruning happens *before* the read, on the manifest — the scan never lists or
   opens pruned files (the reference's catalog-level pruning, catalog/mod.rs:43-99).
+  The manifest is an Arrow-backed ``LocalRelation``, so the filter runs on the
+  driver with no Spark job.
 - Partition values are attached one of two ways, chosen automatically:
   *union* (few distinct partition tuples): one scan per tuple with literal
   columns — no join, no shuffle, mirrors a hive-partitioned directory plan;
@@ -31,10 +33,11 @@ from functools import reduce
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..errors import BuzzPlanError
-from .manifest import CatalogFile, prune_manifest
+from .manifest import CatalogFile, manifest_df, prune_manifest
 from .schema_check import verify_files
 
 
@@ -161,8 +164,13 @@ class StaticCatalog:
     ) -> DataFrame:
         if not files:
             # Empty split set → empty result with the full schema, not an error
-            # (reference: query_planner.rs:85-90, fuse_service.rs:80-83).
-            return spark.createDataFrame([], schema=self.full_schema())
+            # (reference: query_planner.rs:85-90, fuse_service.rs:80-83).  An
+            # empty LocalRelation: PropagateEmptyRelation folds the query, so
+            # executing it launches no job.
+            schema = self.full_schema()
+            return spark.createDataFrame(
+                to_arrow_schema(schema).empty_table(), schema=schema
+            )
         self._apply_s3_conf(spark)
         if self.verify_schemas:
             # verify_max_files=16 (the default) is a SAMPLE — only the first
@@ -219,7 +227,6 @@ class StaticCatalog:
         # input_file_name().  The union strategy tolerates directory keys.
         from pyspark.sql.functions import broadcast
 
-        from .manifest import manifest_df
         from .uris import normalized_path_col, strip_scheme
 
         scan = self._scan(spark, [self.resolve_key(f.key) for f in files])

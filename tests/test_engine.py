@@ -621,26 +621,38 @@ def test_stats_filter_on_query_json(spark, sf_dir):
 COUNT_SUM = "SELECT COUNT(data_col) AS n, SUM(data_col) AS s FROM map_step"
 
 
+def _duckdb_keys(files, partition_cols, partition_filter, table="cat"):
+    """DuckDB's answer: the filter over a manifest table named ``table``."""
+    import duckdb
+
+    con = duckdb.connect()
+    cols = "".join(f', "{c}" VARCHAR' for c in partition_cols)
+    con.execute(f'CREATE TABLE "{table}" (key VARCHAR, length BIGINT{cols})')
+    marks = ", ".join("?" * (2 + len(partition_cols)))
+    con.executemany(
+        f'INSERT INTO "{table}" VALUES ({marks})',
+        [
+            (f.key, f.length, *[f.partition_value(c) for c in partition_cols])
+            for f in files
+        ],
+    )
+    return {
+        k for (k,) in con.execute(
+            f'SELECT key FROM "{table}" WHERE {partition_filter}'
+        ).fetchall()
+    }
+
+
 def _duckdb_count_sum(cat, partition_filter):
     """DuckDB over the same files: the filter runs on a manifest table named
     like the catalog, then the surviving files are read directly."""
     import duckdb
 
-    con = duckdb.connect()
-    con.execute("CREATE TABLE mock_split (key VARCHAR, part_key_1 VARCHAR)")
-    con.executemany(
-        "INSERT INTO mock_split VALUES (?, ?)",
-        [(f.key, f.partition_value("part_key_1")) for f in cat.files],
-    )
-    keys = [
-        k for (k,) in con.execute(
-            f"SELECT key FROM mock_split WHERE {partition_filter}"
-        ).fetchall()
-    ]
+    keys = _duckdb_keys(cat.files, ["part_key_1"], partition_filter, cat.name)
     if not keys:
         return (0, None)
-    paths = ", ".join(f"'{k}'" for k in keys)
-    return con.execute(
+    paths = ", ".join(f"'{k}'" for k in sorted(keys))
+    return duckdb.connect().execute(
         f"SELECT COUNT(data_col), SUM(data_col) FROM read_parquet([{paths}])"
     ).fetchone()
 
@@ -717,3 +729,195 @@ def test_failed_plan_leaves_session_tables_unchanged(spark, tmp_path):
     with pytest.raises(BuzzPlanError, match="reduce_step"):
         engine.run(bad)
     assert sorted(t.name for t in spark.catalog.listTables()) == before
+
+
+# -- manifest parity: the Arrow-backed LocalRelation manifest ---------------
+
+
+def valued_catalog(spark, tmp_path, values, name="mock_split"):
+    """``mock_split_catalog`` with one file per entry of ``values``, file i
+    carrying ``values[i]`` as its ``part_key_1`` (None is a null value)."""
+    from dataclasses import replace
+
+    cat = mock_split_catalog(spark, tmp_path, n_files=len(values))
+    files = [
+        replace(f, partitions=(("part_key_1", v),)) for f, v in zip(cat.files, values)
+    ]
+    return replace(cat, name=name, files=files)
+
+
+def _count_for(files, keep):
+    """Python oracle for ``run_two_step``: 3 rows in each kept file."""
+    return 3 * sum(1 for f in files if keep(f.partition_value("part_key_1")))
+
+
+def test_manifest_null_partition_value_is_sql_null(spark, tmp_path):
+    cat = valued_catalog(spark, tmp_path, ["a", None, "b", "None"])
+    for pf, keep in [
+        ("part_key_1 IS NULL", lambda v: v is None),
+        ("part_key_1 = 'None'", lambda v: v == "None"),
+        ("part_key_1 IS NOT NULL", lambda v: v is not None),
+        ("part_key_1 <> 'a'", lambda v: v is not None and v != "a"),
+    ]:
+        got = {f.key for f in cat.pruned_files(spark, pf)}
+        assert got == _duckdb_keys(cat.files, ["part_key_1"], pf, cat.name), pf
+        assert run_two_step(spark, cat, pf).collect()[0]["n"] == _count_for(
+            cat.files, keep
+        ), pf
+    null_key = cat.files[1].key
+    assert {f.key for f in cat.pruned_files(spark, "part_key_1 IS NULL")} == {null_key}
+    assert null_key not in {
+        f.key for f in cat.pruned_files(spark, "part_key_1 = 'None'")
+    }
+
+
+def test_manifest_value_with_single_quote(spark, tmp_path):
+    cat = valued_catalog(spark, tmp_path, ["o'brien", "obrien", "o''brien"])
+    for pf in ["part_key_1 = \"o'brien\"", "part_key_1 = 'o\\'brien'"]:
+        got = {f.key for f in cat.pruned_files(spark, pf)}
+        assert got == {cat.files[0].key}, pf
+        assert run_two_step(spark, cat, pf).collect()[0]["n"] == 3, pf
+    # a LIKE pattern is spelled the same in both dialects
+    assert {f.key for f in cat.pruned_files(spark, "part_key_1 LIKE 'o_brien'")} == (
+        _duckdb_keys(cat.files, ["part_key_1"], "part_key_1 LIKE 'o_brien'")
+    )
+
+
+def test_manifest_filter_qualified_by_catalog_name_with_dash(spark, tmp_path):
+    cat = valued_catalog(
+        spark, tmp_path, ["2020-01", "2020-02", "2021-01"], name="nyc-taxi"
+    )
+    pf = "`nyc-taxi`.part_key_1 LIKE '2020-%'"
+    got = {f.key for f in cat.pruned_files(spark, pf)}
+    assert got == {f.key for f in cat.files if f.partition_value("part_key_1") < "2021"}
+    assert got == _duckdb_keys(
+        cat.files, ["part_key_1"], "\"nyc-taxi\".part_key_1 LIKE '2020-%'", "nyc-taxi"
+    )
+    rows = cat.to_dataframe(spark, pf).collect()
+    assert sorted(r["data_col"] for r in rows) == [10, 11, 12, 20, 21, 22]
+
+
+@pytest.mark.parametrize(
+    "partition_filter",
+    ["data_col = 1", "part_key_1 = = 'x'", "part_key_1 = 'unterminated"],
+    ids=["non_partition_column", "syntax_error", "unterminated_literal"],
+)
+def test_manifest_bad_filter_is_plan_error(spark, tmp_path, partition_filter):
+    cat = valued_catalog(spark, tmp_path, ["a", "b"])
+    with pytest.raises(BuzzPlanError, match="partition_filter"):
+        cat.pruned_files(spark, partition_filter)
+
+
+def test_manifest_empty_prune_has_full_schema_and_no_rows(spark, tmp_path):
+    cat = valued_catalog(spark, tmp_path, ["a", "b"])
+    pf = "part_key_1 = 'no_such_value'"
+    out = cat.to_dataframe(spark, pf)
+    assert out.select("*").schema == cat.full_schema()
+    assert out.collect() == []
+    assert _duckdb_keys(cat.files, ["part_key_1"], pf) == set()
+
+
+def test_manifest_10k_rows_prune_like_python(spark):
+    from buzz_rust_spark.sources.manifest import prune_manifest
+
+    files = [
+        CatalogFile(
+            key=f"/data/f{i:05d}.parquet",
+            length=i,
+            partitions=(
+                ("year", str(2000 + i % 25)),
+                ("month", None if i % 97 == 0 else f"{1 + i % 12:02d}"),
+            ),
+        )
+        for i in range(10_000)
+    ]
+    pf = "(year = '2010' AND month IN ('01', '05')) OR month IS NULL OR year > '2023'"
+
+    def keep(f):
+        y, m = f.partition_value("year"), f.partition_value("month")
+        return (y == "2010" and m in ("01", "05")) or m is None or y > "2023"
+
+    got = [f.key for f in prune_manifest(spark, files, ["year", "month"], pf, "cat")]
+    want = [f.key for f in files if keep(f)]
+    assert 0 < len(want) < len(files)
+    assert got == want
+    assert set(got) == _duckdb_keys(files, ["year", "month"], pf)
+
+
+# -- planning launches no Spark job -----------------------------------------
+
+
+def _jobs_launched(spark, fn):
+    """Run ``fn`` under a job group of its own; return its result and the
+    number of Spark jobs it launched (read through ``statusTracker``)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_planning_launches_no_spark_job(spark, tmp_path):
+    cat = mock_split_catalog(spark, tmp_path, n_files=40)
+    assert len(cat.files) > cat.union_max_groups  # no filter → join attach
+    engine = BuzzEngine(spark, strict=True)
+    engine.register_source(cat)
+    grouped = (
+        "SELECT data_col % 2 AS odd, COUNT(data_col) AS n FROM map_step GROUP BY 1"
+    )
+
+    def plan(pf, hcomb=COUNT_SUM):
+        return _jobs_launched(spark, lambda: engine.run(zones_query(1, hcomb, pf)))
+
+    filtered, jobs = plan("part_key_1 <= 'part_value_005'")
+    assert jobs == 0
+    full, jobs = plan(None)
+    assert jobs == 0
+    empty, jobs = plan("part_key_1 = 'no_such_value'", grouped)
+    assert jobs == 0
+
+    rows, jobs = _jobs_launched(spark, lambda: engine.execute(empty))
+    assert rows == [] and jobs == 0
+    # the counter does see jobs: executing a non-empty query launches some
+    rows, jobs = _jobs_launched(spark, lambda: engine.execute(filtered))
+    want = sum(10 * i + j for i in range(1, 6) for j in range(3))
+    assert [(r["n"], r["s"]) for r in rows] == [(15, want)]
+    assert jobs >= 1
+    assert engine.execute(full)[0]["n"] == 3 * 40
+
+    before = sorted(t.name for t in spark.catalog.listTables())
+    cat.to_dataframe(spark, "part_key_1 = 'part_value_001'")
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+
+
+def test_driver_listing_only_for_local_static_catalogs(spark, tmp_path):
+    from dataclasses import replace
+
+    from buzz_rust_spark.engine import _local_static_only
+    from buzz_rust_spark.sources import ParquetDirCatalog
+
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    cat = mock_split_catalog(spark, tmp_path, n_files=2)
+    assert _local_static_only([cat])
+    rel = [replace(f, key=os.path.basename(f.key)) for f in cat.files]
+    assert _local_static_only(
+        [replace(cat, files=rel, bucket=str(tmp_path), scheme="file")]
+    )
+    # object-store and directory catalogs keep Spark's parallel listing
+    assert not _local_static_only([replace(cat, bucket="bucket")])
+    assert not _local_static_only(
+        [cat, ParquetDirCatalog(name="d", path=str(tmp_path))]
+    )
+
+    engine = BuzzEngine(spark, strict=True)
+    engine.register_source(cat)
+    default = spark.conf.get(threshold)
+    out = engine.run(zones_query(1, COUNT_SUM, None))
+    assert out.sparkSession.conf.get(threshold) == str(2**31 - 1)
+    assert spark.conf.get(threshold) == default

@@ -344,11 +344,16 @@ def test_delta_files_distributed_from_checkpoint(spark, tmp_path, monkeypatch):
     from buzz_rust_spark.sources.delta_writer import delete_delta, write_delta
 
     root = str(tmp_path / "t")
-    df = spark.range(20).select("id", F.col("id").alias("v"))
+    # Explicit partition counts fix the written layout at any core count:
+    # two files at v0, then three appended, of which only [23, 25] holds a
+    # row the delete matches.  The delete rewrites three files into as many
+    # as the core count packs them, but the two untouched appended files
+    # keep at least three live files.
+    df = spark.range(0, 20, 1, 2).select("id", F.col("id").alias("v"))
     # checkpoint at v0, then a tail: append + cow delete (remove + add)
-    write_delta(df.coalesce(2), root, checkpoint_interval=1)
+    write_delta(df, root, checkpoint_interval=1)
     write_delta(
-        spark.range(20, 30).select("id", F.col("id").alias("v")).coalesce(1),
+        spark.range(20, 30, 1, 3).select("id", F.col("id").alias("v")),
         root, mode="append",
     )
     delete_delta(spark, root, "id % 7 = 3")
