@@ -33,7 +33,7 @@ from pyspark.sql.types import StructField, StructType
 
 from ..errors import BuzzExecutionError
 from .logstore import LogStore
-from .manifest import CatalogFile, manifest_df
+from .manifest import CatalogFile, attach_partitions, join_partitions
 from .static_catalog import StaticCatalog
 
 _LOG = "_delta_log"
@@ -466,21 +466,8 @@ class DeltaCatalog:
         else:
             self.schema = StructType(data_fields)
 
-        def _pv(add: dict, c: str) -> str | None:
-            # Delta serializes a null partition value as JSON null — keep it
-            # None (→ SQL NULL) rather than stringifying to 'None', which
-            # would break `col IS NULL` pruning and wrongly match = 'None'
-            v = add.get("partitionValues", {}).get(phys.get(c, c))
-            return None if v is None else str(v)
-
         self.files = [
-            CatalogFile(
-                key=store.spark_path(add["path"]),
-                length=int(add.get("size", 0)),
-                # tuple keys are LOGICAL names (how callers filter); values
-                # looked up by the physical key the log actually uses
-                partitions=tuple((c, _pv(add, c)) for c in self.partition_cols),
-            )
+            _log_file(store, add["path"], add, self.partition_cols, phys)
             for add in live.values()
         ]
         # Deletion vectors (reader protocol 3): descriptor per data file whose
@@ -536,33 +523,23 @@ class DeltaCatalog:
     # writer's rewrite-compaction policy is off, and an 8 GB broadcast OOM is
     # a worse failure than one shuffle of the filter relation
     DV_BROADCAST_MAX = 2_000_000
-    # above this many distinct partition tuples the DV scan switches from
-    # per-tuple unions to one scan + broadcast manifest join (same bound as
-    # StaticCatalog.union_max_groups, same reason: bounded plan size)
-    DV_UNION_MAX_GROUPS = 32
 
     def _dv_scan(self, spark: SparkSession, files: list[CatalogFile]) -> DataFrame:
         """Scan data files that carry a deletion vector, with deleted rows
         filtered out.
 
-        Shape: a parquet scan selecting the data columns plus
-        ``_metadata.row_index`` (the file-ordinal Delta DVs index by), then
-        ONE anti-join of (file, row index) against the decoded deleted
+        Shape: each parquet scan selects the data columns plus
+        ``_metadata.row_index`` (the file-ordinal Delta DVs index by);
+        partition values attach through :func:`~.manifest.attach_partitions`
+        (per-tuple literal unions, or one scan + broadcast manifest join on
+        the normalized file path past its bound — a broad DV delete over a
+        date-partitioned table must not build an O(partitions) union plan);
+        then ONE anti-join of (file, row index) against the decoded deleted
         positions — broadcast below DV_BROADCAST_MAX, so the common case
-        adds zero shuffles to the plan.  Partition values attach like
-        StaticCatalog's two strategies: per-tuple scans with literal
-        columns up to DV_UNION_MAX_GROUPS distinct tuples, and one scan +
-        broadcast manifest join on the normalized file path above that (a
-        broad DV delete over a date-partitioned table must not build an
-        O(partitions) union plan).  DV decode itself is driver-side
+        adds zero shuffles to the plan.  DV decode itself is driver-side
         metadata work, like the log replay (bitmaps are compressed;
         cardinality is bounded by writer compaction policy)."""
-        from dataclasses import replace
-        from functools import reduce
-
         from pyspark.sql import functions as F
-        from pyspark.sql.functions import broadcast
-        from pyspark.sql.types import StringType
 
         from .deletion_vectors import filter_deleted_rows, read_dv_positions
         from .uris import normalized_key
@@ -572,47 +549,20 @@ class DeltaCatalog:
             for f in files
             for p in read_dv_positions(self._store, self._dv_by_key[f.key])
         ]
-
-        groups: dict[tuple, list[str]] = {}
-        for f in files:
-            values = tuple(f.partition_value(c) for c in self.partition_cols)
-            groups.setdefault(values, []).append(f.key)
-
-        if len(groups) > self.DV_UNION_MAX_GROUPS:
-            scan = spark.read.schema(self.schema).parquet(
-                *[f.key for f in files]
-            ).select(
+        scan = attach_partitions(
+            spark,
+            files,
+            self.partition_cols,
+            # _metadata resolves only on a scan relation, never through a
+            # union: the select happens inside each scan
+            lambda paths: spark.read.schema(self.schema)
+            .parquet(*paths)
+            .select(
                 "*",
                 F.col("_metadata.file_path").alias("__rawpath"),
                 F.col("_metadata.row_index").alias("__ridx"),
-            )
-            clean = filter_deleted_rows(
-                scan, deleted, spark, self.DV_BROADCAST_MAX, drop_path=False
-            )
-            manifest = manifest_df(
-                spark,
-                [replace(f, key=normalized_key(f.key)) for f in files],
-                self.partition_cols,
-            ).select(F.col("key").alias("__path"), *self.partition_cols)
-            # inner: every scanned row's file is in the manifest by
-            # construction (the scan reads exactly these files)
-            return clean.join(broadcast(manifest), on="__path").drop("__path")
-
-        def _group_key(item):
-            values, _ = item
-            return tuple((v is not None, v or "") for v in values)
-
-        scans = []
-        for values, paths in sorted(groups.items(), key=_group_key):
-            df = spark.read.schema(self.schema).parquet(*paths).select(
-                "*",
-                F.col("_metadata.file_path").alias("__rawpath"),
-                F.col("_metadata.row_index").alias("__ridx"),
-            )
-            for col, value in zip(self.partition_cols, values):
-                df = df.withColumn(col, F.lit(value).cast(StringType()))
-            scans.append(df)
-        scan = reduce(DataFrame.unionByName, scans)
+            ),
+        )
         return filter_deleted_rows(scan, deleted, spark, self.DV_BROADCAST_MAX)
 
     def to_dataframe(
@@ -731,6 +681,30 @@ class DeltaCatalog:
                     f"{exc.getMessage() if hasattr(exc, 'getMessage') else exc}"
                 ) from exc
         return df
+
+
+def _log_file(
+    store: LogStore,
+    path: str,
+    entry: dict,
+    partition_cols: list[str],
+    phys_all: dict[str, str],
+) -> CatalogFile:
+    """The CatalogFile of one add/cdc log entry.  Partition tuple keys are
+    LOGICAL names (how callers filter); ``partitionValues`` keys are
+    PHYSICAL under both mapping modes, hence the lookup through
+    ``phys_all``.  Delta serializes a null partition value as JSON null: it
+    stays None (→ SQL NULL), never the string 'None', which would break
+    ``col IS NULL`` pruning and wrongly match ``= 'None'``."""
+    pv = entry.get("partitionValues") or {}
+    return CatalogFile(
+        key=store.spark_path(path),
+        length=int(entry.get("size", 0)),
+        partitions=tuple(
+            (c, None if (v := pv.get(phys_all.get(c, c))) is None else str(v))
+            for c in partition_cols
+        ),
+    )
 
 
 def read_delta_changes(
@@ -879,24 +853,7 @@ def read_delta_changes(
             schema=data_schema,
             partition_cols=partition_cols,
             files=[
-                CatalogFile(
-                    key=store.spark_path(add["path"]),
-                    length=int(add.get("size", 0)),
-                    # null partition values stay None → SQL NULL (same as
-                    # the snapshot path's _pv); partitionValues keys are
-                    # PHYSICAL under both mapping modes, hence phys_all
-                    partitions=tuple(
-                        (
-                            c,
-                            (lambda v: None if v is None else str(v))(
-                                add.get("partitionValues", {}).get(
-                                    phys_all.get(c, c)
-                                )
-                            ),
-                        )
-                        for c in partition_cols
-                    ),
-                )
+                _log_file(store, add["path"], add, partition_cols, phys_all)
                 for add in adds
             ],
         )
@@ -987,7 +944,6 @@ def read_delta_changelog(
     reconstruction is not implemented for the changelog) — a cleaned log
     is a typed error, re-bootstrap from a full snapshot."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import broadcast
 
     from .deletion_vectors import filter_deleted_rows, read_dv_positions
     from .uris import normalized_key
@@ -1094,7 +1050,8 @@ def read_delta_changelog(
         """Logical rows of ``entries`` (each file's DV applied as an
         anti-filter) unioned with the rows AT ``coords`` (a (path, pos)
         semi-filter over those files) — one scan per group, partition
-        values re-attached from the log via a broadcast manifest join."""
+        values re-attached from the log by
+        :func:`~.manifest.join_partitions`."""
         files = dict(entries)
         coord_paths = {p for p, _ in coords}
         parts_out = []
@@ -1143,35 +1100,18 @@ def read_delta_changelog(
             return None
         from functools import reduce
 
-        out = reduce(DataFrame.unionByName, parts_out)
-        # partition values from the log (physical keys), as strings —
-        # exactly how StaticCatalog attaches them on the snapshot path
-        all_entries = dict(files)
-        all_entries.update(
-            {p: (base.get(p) or live.get(p)) for p in coord_paths}
-        )
-        manifest = spark.createDataFrame(
+        # partition values from the log, joined on the scans' __path
+        logged = dict(files)
+        logged.update({p: (base.get(p) or live.get(p)) for p in coord_paths})
+        out = join_partitions(
+            spark,
+            reduce(DataFrame.unionByName, parts_out),
             [
-                (normalized_key(store.spark_path(p)),)
-                + tuple(
-                    (lambda v: None if v is None else str(v))(
-                        (a.get("partitionValues") or {}).get(
-                            phys_all.get(c, c)
-                        )
-                    )
-                    for c in partition_cols
-                )
-                for p, a in all_entries.items()
+                _log_file(store, p, a, partition_cols, phys_all)
+                for p, a in logged.items()
             ],
-            StructType(
-                [StructField("__path", StringType(), False)]
-                + [
-                    StructField(c, StringType(), True)
-                    for c in partition_cols
-                ]
-            ),
+            partition_cols,
         )
-        out = out.join(broadcast(manifest), on="__path", how="left")
         return out.select(
             *[
                 F.col(phys.get(n, n)).alias(n)
@@ -1220,30 +1160,15 @@ def read_delta_changelog(
                         normalized_path_col(F.col("_metadata.file_path")),
                     )
                 )
-                manifest = spark.createDataFrame(
+                scan = join_partitions(
+                    spark,
+                    scan,
                     [
-                        (normalized_key(store.spark_path(c["path"])),)
-                        + tuple(
-                            (lambda x: None if x is None else str(x))(
-                                # cdc partitionValues keys are PHYSICAL
-                                # under both mapping modes, like adds'
-                                (c.get("partitionValues") or {}).get(
-                                    phys_all.get(cc, cc)
-                                )
-                            )
-                            for cc in partition_cols
-                        )
+                        _log_file(store, c["path"], c, partition_cols, phys_all)
                         for c in cdcs
                     ],
-                    StructType(
-                        [StructField("__path", StringType(), False)]
-                        + [
-                            StructField(cc, StringType(), True)
-                            for cc in partition_cols
-                        ]
-                    ),
+                    partition_cols,
                 )
-                scan = scan.join(broadcast(manifest), on="__path", how="left")
                 frames.append(
                     scan.select(
                         # name mode reads physical column names (mapped

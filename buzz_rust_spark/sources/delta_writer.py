@@ -38,6 +38,7 @@ from ..errors import (
     BuzzExecutionError,
     BuzzSchemaError,
 )
+from .manifest import CatalogFile, attach_partitions, join_partitions
 from .write_store import commit_with_retry, default_store
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -2480,13 +2481,6 @@ def _hive_complete(rel: str, phys_parts: list[str]) -> bool:
     return all(p in segs for p in phys_parts)
 
 
-# above this many distinct partition tuples among non-hive files the scan
-# switches from per-tuple literal unions to one scan + broadcast manifest
-# join (bounded plan size — same bound and reason as
-# DeltaCatalog.DV_UNION_MAX_GROUPS)
-_SCAN_UNION_MAX_GROUPS = 32
-
-
 def _files_scan(
     spark,
     table_dir: str,
@@ -2501,18 +2495,15 @@ def _files_scan(
     registered without hive layout — :func:`add_files_delta` external
     absolute paths or in-table flat files — take their partition values
     from the ADD ACTION's ``partitionValues`` (the spec's authoritative
-    source), attached as per-tuple literal columns, or past
-    ``_SCAN_UNION_MAX_GROUPS`` tuples via one broadcast manifest join.
-    ``with_meta`` additionally selects ``__rawpath``/``__ridx``
-    (``_metadata`` resolves only on a scan relation, never through a
-    union, so the select happens inside each branch)."""
+    source) through :func:`~.manifest.attach_partitions`, then cast to the
+    declared types.  ``with_meta`` additionally selects
+    ``__rawpath``/``__ridx`` (``_metadata`` resolves only on a scan
+    relation, never through a union, so the select happens inside each
+    scan)."""
     from functools import reduce
 
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import broadcast
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from .uris import normalized_key, normalized_path_col
+    from pyspark.sql.types import StructType
 
     mode, phys, _ = _writer_mapping(meta)
     if mode == "id":
@@ -2562,49 +2553,28 @@ def _files_scan(
             .select("*", *_meta_cols())
         )
     if flat:
-        groups: dict[tuple, list[str]] = {}
-        for r in flat:
-            pv = live[r].get("partitionValues") or {}
-            values = tuple(pv.get(p) for p in phys_parts)
-            groups.setdefault(values, []).append(
-                os.path.join(table_dir, r)
-            )
-        if len(groups) <= _SCAN_UNION_MAX_GROUPS:
-            for values in sorted(
-                groups, key=lambda t: tuple((v is None, v or "") for v in t)
-            ):
-                d = spark.read.schema(data_phys).parquet(
-                    *groups[values]
-                ).select("*", *_meta_cols())
-                for p, v in zip(phys_parts, values):
-                    d = d.withColumn(p, F.lit(v).cast(part_types[p]))
-                branches.append(d)
-        else:
-            raw = spark.read.schema(data_phys).parquet(
-                *[p for ps in groups.values() for p in ps]
-            )
-            scan = raw.select(
-                "*",
-                normalized_path_col(F.col("_metadata.file_path")).alias(
-                    "__path"
-                ),
-                *_meta_cols(),
-            )
-            manifest = spark.createDataFrame(
-                [
-                    (normalized_key(p),) + values
-                    for values, ps in groups.items()
-                    for p in ps
-                ],
-                StructType(
-                    [StructField("__path", StringType(), False)]
-                    + [StructField(p, StringType(), True) for p in phys_parts]
-                ),
-            )
-            d = scan.join(broadcast(manifest), on="__path").drop("__path")
-            for p in phys_parts:
-                d = d.withColumn(p, F.col(p).cast(part_types[p]))
-            branches.append(d)
+        # an absent partitionValues key stays None, like a null value
+        d = attach_partitions(
+            spark,
+            [
+                CatalogFile(
+                    key=os.path.join(table_dir, r),
+                    length=0,
+                    partitions=tuple(
+                        (p, (live[r].get("partitionValues") or {}).get(p))
+                        for p in phys_parts
+                    ),
+                )
+                for r in flat
+            ],
+            phys_parts,
+            lambda paths: spark.read.schema(data_phys)
+            .parquet(*paths)
+            .select("*", *_meta_cols()),
+        )
+        branches.append(
+            d.withColumns({p: F.col(p).cast(part_types[p]) for p in phys_parts})
+        )
     return reduce(DataFrame.unionByName, branches)
 
 
@@ -4457,50 +4427,35 @@ def _enforce_registered_files(
     let a CHECK-constrained table onboard violating rows (round-11
     verdict, wrong #1)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import broadcast
-    from pyspark.sql.types import StringType, StructField, StructType
 
-    from .uris import normalized_key, normalized_path_col
+    from .uris import normalized_path_col
 
     checks, invariants, generated = _table_rules(meta)
     if not (checks or invariants or generated):
         return
     data_logical = [f.name for f in declared.fields if f.name not in part_cols]
     df = spark.read.schema(read_schema).parquet(*[ap for ap, _ in reg])
-    if part_cols:
-        # pv values are keyed by PHYSICAL names (the log's convention);
-        # the manifest re-surfaces them under the logical names
-        manifest = spark.createDataFrame(
-            [
-                (normalized_key(ap),)
-                + tuple(pv.get(phys.get(c, c)) for c in part_cols)
-                for ap, pv in reg
-            ],
-            StructType(
-                [StructField("__path", StringType(), False)]
-                + [StructField(c, StringType(), True) for c in part_cols]
-            ),
-        )
-        df = (
-            df.select(
-                *[
-                    F.col(phys.get(c, c)).alias(c)
-                    for c in data_logical
-                ],
-                normalized_path_col(F.col("_metadata.file_path")).alias(
-                    "__path"
-                ),
+    df = df.select(
+        *[F.col(phys.get(c, c)).alias(c) for c in data_logical],
+        normalized_path_col(F.col("_metadata.file_path")).alias("__path"),
+    )
+    # pv values are keyed by PHYSICAL names (the log's convention); the
+    # manifest re-surfaces them under the logical names
+    df = join_partitions(
+        spark,
+        df,
+        [
+            CatalogFile(
+                key=ap,
+                length=0,
+                partitions=tuple((c, pv.get(phys.get(c, c))) for c in part_cols),
             )
-            .join(broadcast(manifest), on="__path")
-            .drop("__path")
-        )
-        types = {f.name: f.dataType for f in declared.fields}
-        for c in part_cols:
-            df = df.withColumn(c, F.col(c).cast(types[c]))
-    else:
-        df = df.select(
-            *[F.col(phys.get(c, c)).alias(c) for c in data_logical]
-        )
+            for ap, pv in reg
+        ],
+        part_cols,
+    )
+    types = {f.name: f.dataType for f in declared.fields}
+    df = df.withColumns({c: F.col(c).cast(types[c]) for c in part_cols})
     _enforce_table_rules(df, meta, "add_files_delta")
 
 

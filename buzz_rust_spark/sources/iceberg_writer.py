@@ -4631,8 +4631,12 @@ def _derive_partition_tuples(
             else _transform_column(pf)
         )
         cols.append(e.alias(f"__g{i}"))
+    # _metadata.file_path, not input_file_name(): the pandas UDF consumes
+    # its input ahead of its output, so input_file_name() beside it names
+    # whichever file the task read last — in a task that reads several
+    # files, rows land on the wrong file.  _metadata is a per-row column.
     df = spark.read.schema(sub).parquet(*paths).select(
-        F.input_file_name().alias("__f"), *cols
+        F.col("_metadata.file_path").alias("__f"), *cols
     )
     tup = F.struct(*[f"__g{i}" for i in range(len(part_fields))])
     rows = (

@@ -4,7 +4,10 @@ Reference semantics (code/src/datasource/catalog/mod.rs:123-137): the file list
 is materialized as an in-memory table with schema
 ``(key Utf8, length UInt64, <partition col> Utf8 ...)`` and the user's
 ``partition_filter`` runs as plain SQL over it; surviving rows become the scan
-set.  Partition values are always strings (README.md:113).
+set.  Partition values are always strings (README.md:113), and they belong to
+a file, not to a row: :func:`attach_partitions` is the one place a file's
+partition tuple reaches its scanned rows, for the static and Delta catalogs
+and the Delta rewrite scans alike.
 
 Scale note: the manifest is metadata (one row per file).  At 100 TB / ~128 MiB
 files that is ~800k rows.  It is built as a ``pyarrow.Table``, which
@@ -19,15 +22,23 @@ collected, which is exactly what any Spark file index collects.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import reduce
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 from pyspark.sql.utils import AnalysisException
 
 from ..errors import BuzzPlanError
+from .uris import normalized_path_col, strip_scheme
+
+# attach_partitions' default bound: above this many distinct partition
+# tuples a scan attaches values by manifest join instead of per-tuple unions
+UNION_MAX_GROUPS = 32
 
 
 @dataclass(frozen=True)
@@ -54,6 +65,20 @@ class CatalogFile:
         return any(k == col for k, _ in self.partitions)
 
 
+def partition_values(
+    f: CatalogFile, partition_cols: list[str]
+) -> tuple[str | None, ...]:
+    """``f``'s partition tuple in ``partition_cols`` order.  A ``None`` VALUE
+    is a legitimate null partition (Delta); an ABSENT column is a malformed
+    catalog and a plan error."""
+    missing = [c for c in partition_cols if not f.has_partition(c)]
+    if missing:
+        raise BuzzPlanError(
+            f"catalog file {f.key!r} is missing partition values for {missing}"
+        )
+    return tuple(f.partition_value(c) for c in partition_cols)
+
+
 def manifest_schema(partition_cols: list[str]) -> StructType:
     """reference: catalog/mod.rs:128-137 (``key``, ``length``, partition cols
     as Utf8; UInt64 length narrowed to LongType — file sizes << 2^63).
@@ -73,15 +98,10 @@ def manifest_df(
 ) -> DataFrame:
     """The manifest as an Arrow-backed ``LocalRelation`` (see the scale
     note); a ``None`` partition value stays SQL NULL."""
-    for f in files:
-        missing = [c for c in partition_cols if not f.has_partition(c)]
-        if missing:
-            raise BuzzPlanError(
-                f"catalog file {f.key!r} is missing partition values for {missing}"
-            )
     schema = manifest_schema(partition_cols)
+    values = [partition_values(f, partition_cols) for f in files]
     columns = [[f.key for f in files], [int(f.length) for f in files]]
-    columns += [[f.partition_value(c) for f in files] for c in partition_cols]
+    columns += [[v[i] for v in values] for i in range(len(partition_cols))]
     table = pa.Table.from_arrays(columns, schema=to_arrow_schema(schema))
     return spark.createDataFrame(table, schema=schema)
 
@@ -122,3 +142,93 @@ def prune_manifest(
         ) from exc
     surviving_keys = {r["key"] for r in survivors}
     return [f for f in files if f.key in surviving_keys]
+
+
+def attach_partitions(
+    spark: SparkSession,
+    files: list[CatalogFile],
+    partition_cols: list[str],
+    scan: Callable[[list[str]], DataFrame],
+    strategy: str = "auto",
+    max_groups: int | None = None,
+) -> DataFrame:
+    """Rows of ``files`` with their partition values as string columns.
+
+    ``scan(keys)`` reads the data files at ``keys``.  A partition value
+    belongs to a file, not to a row (reference: catalog/mod.rs:123-137), so
+    attaching it is one choice, made here for every file-list scan:
+
+    - *union* (at most ``max_groups`` distinct tuples, default
+      :data:`UNION_MAX_GROUPS`): one scan per tuple with literal columns —
+      no join, no shuffle, the plan of a hive-partitioned directory;
+    - *join* (more tuples): ONE scan of every file, keyed by its file path,
+      then :func:`join_partitions` — plan size stays O(1) however many
+      tuples there are.
+
+    ``strategy`` ``"union"``/``"join"`` forces one side."""
+    groups: dict[tuple[str | None, ...], list[str]] = {}
+    for f in files:
+        groups.setdefault(partition_values(f, partition_cols), []).append(f.key)
+    if strategy == "auto":
+        bound = UNION_MAX_GROUPS if max_groups is None else max_groups
+        strategy = "union" if len(groups) <= bound else "join"
+    if strategy == "union":
+        scans = []
+        # nulls first: a deterministic union order
+        for values in sorted(
+            groups, key=lambda t: tuple((v is not None, v or "") for v in t)
+        ):
+            df = scan(groups[values])
+            for c, v in zip(partition_cols, values):
+                df = df.withColumn(c, F.lit(v).cast(StringType()))
+            scans.append(df)
+        return reduce(DataFrame.unionByName, scans)
+    # input_file_name() projected directly on the scan, where it names the
+    # file each row came from.  Keys must be individual FILES here (the
+    # reference's SizedFile contract, models/mod.rs:13-16): a directory key
+    # equals no scanned file path.  The union strategy tolerates them.
+    keyed = scan([f.key for f in files]).withColumn(
+        "__path", normalized_path_col(F.input_file_name())
+    )
+    return join_partitions(spark, keyed, files, partition_cols)
+
+
+def join_partitions(
+    spark: SparkSession,
+    keyed: DataFrame,
+    files: list[CatalogFile],
+    partition_cols: list[str],
+) -> DataFrame:
+    """The join half of :func:`attach_partitions`: ``keyed`` carries a
+    ``__path`` column (:func:`~.uris.normalized_path_col` of its file path),
+    which is broadcast-joined to the manifest of ``files``; ``__path`` is
+    dropped from the result.
+
+    A scanned file missing from the manifest fails LOUDLY when its
+    partition value is read, never as silent NULLs a filter then drops to
+    zero rows.  The check lives inside the plan: a query that never reads
+    the partition columns lets Catalyst prune check and join both — which
+    is exactly when a miss is harmless."""
+    if not partition_cols:
+        return keyed.drop("__path")
+    manifest = manifest_df(spark, files, partition_cols).select(
+        strip_scheme(F.col("key")).alias("__path"),
+        F.lit(True).alias("__matched"),
+        *partition_cols,
+    )
+    miss = F.raise_error(
+        F.concat(
+            F.lit("catalog join-attach matched no manifest key for scanned file "),
+            F.col("__path"),
+        )
+    ).cast(StringType())
+    return (
+        keyed.join(F.broadcast(manifest), on="__path", how="left")
+        .withColumns(
+            {
+                c: F.when(F.col("__matched").isNotNull(), F.col(c)).otherwise(miss)
+                for c in partition_cols
+            }
+        )
+        .drop("__path", "__matched")
+    )

@@ -11,12 +11,12 @@ Scale design:
   opens pruned files (the reference's catalog-level pruning, catalog/mod.rs:43-99).
   The manifest is an Arrow-backed ``LocalRelation``, so the filter runs on the
   driver with no Spark job.
-- Partition values are attached one of two ways, chosen automatically:
-  *union* (few distinct partition tuples): one scan per tuple with literal
-  columns — no join, no shuffle, mirrors a hive-partitioned directory plan;
-  *join* (many tuples): ONE scan of all surviving files, then a broadcast hash
-  join of ``input_file_name()`` against the (tiny) manifest — plan size stays
-  O(1) no matter how many partitions survive pruning.
+- Partition values are attached by :func:`.manifest.attach_partitions`, the
+  one attach path every file-list scan shares (Delta DV, changelog and
+  rewrite scans too): per-tuple literal *unions* up to ``union_max_groups``
+  tuples, above that ONE scan broadcast-joined to the manifest on the
+  normalized ``input_file_name()`` — plan size stays O(1) no matter how many
+  partitions survive pruning.  ``attach_strategy`` forces either side.
 - A declared schema is passed to every read: no footer-sniffing job at plan
   time, and column pruning/pushdown still apply.
 
@@ -27,17 +27,20 @@ first-class string columns — a documented superset (SURVEY.md §1.3).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from functools import reduce
+from dataclasses import dataclass, field, replace
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..errors import BuzzPlanError
-from .manifest import CatalogFile, manifest_df, prune_manifest
+from .manifest import (
+    UNION_MAX_GROUPS,
+    CatalogFile,
+    attach_partitions,
+    prune_manifest,
+)
 from .schema_check import verify_files
 
 
@@ -69,10 +72,11 @@ class StaticCatalog:
     # the scan sites below route through _scan so every strategy (plain /
     # union / join) supports both
     fmt: str = "parquet"  # "parquet" | "orc"
-    # partition-attach strategy: "auto" switches from per-tuple unions to a
-    # single scan + broadcast manifest join above this many distinct tuples
+    # partition-attach strategy (manifest.attach_partitions): "auto"
+    # switches from per-tuple unions to a single scan + broadcast manifest
+    # join above union_max_groups distinct tuples
     attach_strategy: str = "auto"  # "auto" | "union" | "join"
-    union_max_groups: int = 32
+    union_max_groups: int = UNION_MAX_GROUPS
 
     def _scan(self, spark: SparkSession, paths: list[str]) -> DataFrame:
         """One declared-schema scan of ``paths`` in the catalog's format."""
@@ -136,8 +140,6 @@ class StaticCatalog:
         the scan, so results are exact regardless."""
         files = self.pruned_files(spark, partition_filter)
         if stats_filter is not None and files and self.fmt == "parquet":
-            from dataclasses import replace
-
             from .zonemap import (
                 prune_catalog_by_stats,
                 stats_conjuncts_from_sql,
@@ -172,101 +174,25 @@ class StaticCatalog:
                 to_arrow_schema(schema).empty_table(), schema=schema
             )
         self._apply_s3_conf(spark)
+        # keys resolve to full URIs first, so the join half matches the
+        # scanned paths of bucketed (relative-key) catalogs too
+        resolved = [replace(f, key=self.resolve_key(f.key)) for f in files]
         if self.verify_schemas:
             # verify_max_files=16 (the default) is a SAMPLE — only the first
             # 16 footers are checked; None = full check, distributed over
             # executors above schema_check.DISTRIBUTE_THRESHOLD files.
             verify_files(
                 self.schema,
-                [self.resolve_key(f.key) for f in files],
+                [f.key for f in resolved],
                 self.verify_max_files,
                 spark=spark,
                 fmt=self.fmt,
             )
-
-        if not self.partition_cols:
-            return self._scan(spark, [self.resolve_key(f.key) for f in files])
-
-        # Group files by partition tuple.  A None VALUE is a legitimate null
-        # partition (Delta); only an ABSENT column is a malformed catalog.
-        groups: dict[tuple[str | None, ...], list[str]] = {}
-        for f in files:
-            missing = [c for c in self.partition_cols if not f.has_partition(c)]
-            if missing:
-                raise BuzzPlanError(
-                    f"file {f.key!r} lacks values for partition columns "
-                    f"{missing}"
-                )
-            values = tuple(f.partition_value(c) for c in self.partition_cols)
-            groups.setdefault(values, []).append(self.resolve_key(f.key))
-
-        strategy = self.attach_strategy
-        if strategy == "auto":
-            strategy = "union" if len(groups) <= self.union_max_groups else "join"
-
-        if strategy == "union":
-            # One scan per distinct tuple with literal partition columns
-            # (nulls sort first in the deterministic group order).
-            def _group_key(item):
-                values, _ = item
-                return tuple((v is not None, v or "") for v in values)
-
-            scans = []
-            for values, paths in sorted(groups.items(), key=_group_key):
-                df = self._scan(spark, paths)
-                for col, value in zip(self.partition_cols, values):
-                    df = df.withColumn(col, F.lit(value).cast(StringType()))
-                scans.append(df)
-            return reduce(DataFrame.unionByName, scans)
-
-        # "join": one scan of everything + broadcast manifest lookup by file
-        # path.  input_file_name() returns the file URI; normalize both sides
-        # to scheme-less absolute paths before joining.  Catalog keys must be
-        # individual parquet FILES for this strategy (the reference's SizedFile
-        # contract, models/mod.rs:13-16) — a directory key would not equal any
-        # input_file_name().  The union strategy tolerates directory keys.
-        from pyspark.sql.functions import broadcast
-
-        from .uris import normalized_path_col, strip_scheme
-
-        scan = self._scan(spark, [self.resolve_key(f.key) for f in files])
-        # Manifest keys resolve to full URIs before normalization so the join
-        # key equals input_file_name() for bucketed (relative-key) catalogs.
-        # Both sides normalize via sources.uris — the scan side additionally
-        # url-decodes (input_file_name() is percent-encoded, raw keys are
-        # not), exactly like the deletion-vector joins.
-        resolved = [
-            CatalogFile(key=self.resolve_key(f.key), length=f.length, partitions=f.partitions)
-            for f in files
-        ]
-        manifest = manifest_df(spark, resolved, self.partition_cols).select(
-            strip_scheme(F.col("key")).alias("__path"),
-            F.lit(True).alias("__matched"),
-            *self.partition_cols,
+        return attach_partitions(
+            spark,
+            resolved,
+            self.partition_cols,
+            lambda paths: self._scan(spark, paths),
+            self.attach_strategy,
+            self.union_max_groups,
         )
-        joined = (
-            scan.withColumn("__path", normalized_path_col(F.input_file_name()))
-            .join(broadcast(manifest), on="__path", how="left")
-        )
-        # A join miss must fail LOUDLY when the partition value is read, not
-        # silently yield NULLs a filter then drops to zero rows.  Wrapping
-        # the partition columns keeps the check inside the plan: if a query
-        # never touches them, Catalyst prunes check and join both — which is
-        # exactly when a miss is harmless.
-        out = joined
-        for c in self.partition_cols:
-            out = out.withColumn(
-                c,
-                F.when(F.col("__matched").isNotNull(), F.col(c)).otherwise(
-                    F.raise_error(
-                        F.concat(
-                            F.lit(
-                                "catalog join-attach matched no manifest key"
-                                " for scanned file "
-                            ),
-                            F.col("__path"),
-                        )
-                    ).cast(StringType())
-                ),
-            )
-        return out.drop("__path", "__matched")

@@ -1,8 +1,11 @@
 """Shared path/URI normalization for file-identity joins.
 
 Several plans join rows back to the catalog entry of the file they came
-from — the StaticCatalog partition-manifest join (``input_file_name()``)
-and the deletion-vector anti-joins (``_metadata.file_path``).  Both sides
+from — the partition-manifest join of ``manifest.attach_partitions``
+(``input_file_name()``, projected directly on its scan), the callers of its
+join half that key an existing scan on ``_metadata.file_path`` (Delta
+changelog and ``add_files_delta`` constraint checks), and the
+deletion-vector anti-joins (``_metadata.file_path``).  Both sides
 MUST normalize identically or the join silently misses (for DVs that means
 deleted rows resurrect with no error), so the scheme-strip regex and the
 percent-decode live here and nowhere else.

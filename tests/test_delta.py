@@ -2931,11 +2931,11 @@ def test_delta_id_mode_nested_rewrites_restamp_inner_ids(spark, tmp_path):
 
 
 def test_files_scan_manifest_branch(spark, tmp_path, monkeypatch):
-    """Past _SCAN_UNION_MAX_GROUPS distinct partition tuples among
+    """Past manifest.UNION_MAX_GROUPS distinct partition tuples among
     flat-registered files, the rewrite read switches from per-tuple
     literal unions to one scan + broadcast manifest join — same rows,
     bounded plan size (threshold lowered via monkeypatch)."""
-    from buzz_rust_spark.sources import delta_writer
+    from buzz_rust_spark.sources import manifest
     from buzz_rust_spark.sources.delta_writer import (
         add_files_delta,
         delete_delta,
@@ -2956,7 +2956,7 @@ def test_files_scan_manifest_branch(spark, tmp_path, monkeypatch):
             [(i + 1, f"v{i}", f"202{i}")], "id long, v string, y string",
         ))
     add_files_delta(spark, root, exts)
-    monkeypatch.setattr(delta_writer, "_SCAN_UNION_MAX_GROUPS", 1)
+    monkeypatch.setattr(manifest, "UNION_MAX_GROUPS", 1)
     # a delete whose predicate touches every file exercises the scan
     delete_delta(spark, root, "id = 2")
     got = sorted(

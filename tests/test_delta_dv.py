@@ -491,6 +491,8 @@ def test_dv_changes_realistic_commit_gets_dv_error(spark, tmp_path):
 def test_dv_many_partition_groups_uses_manifest_join(spark, tmp_path):
     """A DV table with more distinct partition tuples than the union cap
     still returns correct rows (manifest-join fallback)."""
+    from buzz_rust_spark.sources.manifest import UNION_MAX_GROUPS
+
     n_parts = 40
     table = os.path.join(str(tmp_path), "dv-many")
     os.makedirs(table, exist_ok=True)
@@ -504,7 +506,7 @@ def test_dv_many_partition_groups_uses_manifest_join(spark, tmp_path):
         actions.append(_add(rel, dv, {"year": str(2000 + i)}))
     _write_commit(os.path.join(table, "_delta_log"), 0, actions)
     cat = DeltaCatalog("t", table)
-    assert cat.DV_UNION_MAX_GROUPS < n_parts
+    assert UNION_MAX_GROUPS < n_parts
     df = cat.to_dataframe(spark)
     rows = sorted((r.dept_name, r.year) for r in df.collect())
     assert rows == sorted((f"b{i}", str(2000 + i)) for i in range(n_parts))

@@ -323,6 +323,77 @@ def test_partition_attach_join_strategy_matches_union(spark, tmp_path):
     }
     assert len(ju) == 3 and all(row[1] == "part_value_002" for row in ju)
 
+    # Both branches agree on a null partition value (matched by IS NULL,
+    # never by = 'None'), on keys with a space and a '%', on a
+    # `file`-bucket catalog (relative keys) and on an ORC catalog.
+    import glob as globmod
+    import shutil
+
+    odd = tmp_path / "odd dir %41"
+    odd.mkdir()
+    parts = {"a b%41 0": None, "a b%41 1": "2021", "a b%41 2": "2022"}
+    for fmt in ("parquet", "orc"):
+        for i, name in enumerate(parts):
+            out = str(odd / f"{name}.tmpdir")
+            spark.createDataFrame(
+                [(10 * i + j,) for j in range(i + 1)], base.schema
+            ).coalesce(1).write.format(fmt).save(out)
+            shutil.move(globmod.glob(out + "/part-*")[0], str(odd / f"{name}.{fmt}"))
+            shutil.rmtree(out)
+        for bucket in (None, str(odd)):
+            files = [
+                CatalogFile(
+                    key=f"{name}.{fmt}" if bucket else str(odd / f"{name}.{fmt}"),
+                    length=1,
+                    partitions=(("p", value),),
+                )
+                for name, value in parts.items()
+            ]
+            for strategy in ("union", "join"):
+                cat = StaticCatalog(
+                    name="odd", schema=base.schema, files=files,
+                    partition_cols=["p"], bucket=bucket, scheme="file",
+                    fmt=fmt, attach_strategy=strategy,
+                )
+                got = sorted(
+                    (r.data_col, r.p) for r in cat.to_dataframe(spark).collect()
+                )
+                assert got == [
+                    (0, None), (10, "2021"), (11, "2021"),
+                    (20, "2022"), (21, "2022"), (22, "2022"),
+                ], (fmt, bucket, strategy)
+                df = cat.to_dataframe(spark)
+                assert [r.data_col for r in df.where("p IS NULL").collect()] == [0]
+                assert df.where("p = 'None'").count() == 0
+
+
+def test_join_partitions_raises_for_scanned_file_missing_from_manifest(
+    spark, tmp_path
+):
+    """The join half's loud-miss guard: a scanned file absent from the
+    manifest fails the query when its partition value is read, instead of
+    yielding NULL partition values."""
+    from pyspark.sql import functions as F
+
+    from buzz_rust_spark.sources.manifest import join_partitions
+    from buzz_rust_spark.sources.uris import normalized_path_col
+
+    cat = mock_split_catalog(spark, tmp_path, n_files=2)
+    keyed = (
+        spark.read.schema(cat.schema)
+        .parquet(*[f.key for f in cat.files])
+        .withColumn("__path", normalized_path_col(F.input_file_name()))
+    )
+    out = join_partitions(spark, keyed, cat.files[:1], cat.partition_cols)
+    with pytest.raises(
+        Exception,
+        match="catalog join-attach matched no manifest key for scanned file "
+        ".*file_2.parquet",
+    ):
+        out.collect()
+    # a query that never reads the partition values is unaffected
+    assert out.select("data_col").count() == 6
+
 
 def test_runtime_task_failure_surfaces_typed_error(spark, tmp_path):
     """FAIL-action parity (flight_service.rs:147-160): a mid-query task

@@ -3220,6 +3220,58 @@ def test_add_files_bucket_partitioned(spark, tmp_path):
     assert got == [k for k in range(40) if k % 7 != 3]
 
 
+def test_add_files_bucket_tuples_when_one_task_reads_several_files(
+    spark, tmp_path
+):
+    """Each file's bucket tuple is derived from that file's own rows even
+    when Spark packs several small files into one task: six bucket-pure
+    files, read as ONE split, register with one tuple each — none is
+    refused as spanning its neighbours' buckets."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
+
+    from buzz_rust_spark.sources.iceberg_writer import (
+        _bucket_udf,
+        add_files_iceberg,
+    )
+
+    root = str(tmp_path / "t")
+    write_iceberg(
+        _rows(spark, [(0, 0)], "k long, v long"), root,
+        partition_by=["bucket(4, k)"],
+    )
+    keys_by_bucket: dict[int, list[int]] = {}
+    for r in spark.range(20, 2000).select(
+        "id", _bucket_udf("long", 4)(F.col("id").cast("string")).alias("b")
+    ).collect():
+        keys_by_bucket.setdefault(r.b, []).append(r.id)
+    expect = {}
+    for i in range(6):
+        bucket = i % 4
+        keys = keys_by_bucket[bucket][(i // 4) * 50:(i // 4 + 1) * 50]
+        path = _loose_parquet(
+            spark, tmp_path, f"ext{i}.parquet",
+            [(k, 3 * k) for k in keys], "k long, v long",
+        )
+        expect[path] = (("__bucket_k", str(bucket)),)
+    # one split for all six files: the split size becomes the whole input
+    packed = SparkSession(
+        spark.sparkContext, spark._jsparkSession.cloneSession()
+    )
+    packed.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 30))
+    packed.conf.set("spark.sql.files.minPartitionNum", "1")
+    assert packed.read.parquet(*expect).rdd.getNumPartitions() == 1
+
+    out = add_files_iceberg(packed, root, list(expect))
+    assert out["added_files"] == 6 and out["added_records"] == 300
+    got = {
+        f.key: f.partitions
+        for f in IcebergCatalog("t", root).pruned_files(spark, None)
+        if f.key in expect
+    }
+    assert got == expect
+
+
 def test_truncate_iceberg_metadata_only(spark, tmp_path):
     """TRUNCATE: one empty-manifest-list snapshot, O(1), prior snapshots
     time-travelable; a second truncate is a no-op."""
