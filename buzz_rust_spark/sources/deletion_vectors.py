@@ -497,8 +497,9 @@ def filter_deleted_rows(
     positions — above it the writer's DV-compaction policy is off and an
     8 GB broadcast OOM would be a worse failure than one shuffle of the
     filter relation.  Rows from files WITHOUT a DV get a null id, which an
-    anti-join never matches.  ``drop_path=False`` keeps the normalized
-    ``__path`` column for callers that join more per-file metadata on.
+    anti-join never matches.  ``drop_path=False`` keeps ``__rawpath`` for
+    callers that join more per-file metadata on
+    (:func:`~.manifest.join_partitions`).
     ``how="left_semi"`` flips the filter to KEEP exactly the listed rows —
     the changelog's "rows at these positions" read."""
     from pyspark.sql import functions as F
@@ -517,14 +518,12 @@ def filter_deleted_rows(
     )
     if len(deleted) <= broadcast_max:
         del_df = broadcast(del_df)
-    # _metadata.file_path is a percent-encoded URI like input_file_name();
-    # both DV sides share the catalog-join normalizer (sources.uris)
-    scan = (
-        scan.withColumn("__path", normalized_path_col(F.col("__rawpath")))
-        .drop("__rawpath")
-        .join(files_df, on="__path", how="left")
-    )
+    # _metadata.file_path is a percent-encoded URI; both DV sides share
+    # the normalized-key convention of sources.uris
+    scan = scan.withColumn(
+        "__path", normalized_path_col(F.col("__rawpath"))
+    ).join(files_df, on="__path", how="left")
     out = scan.join(del_df, on=["__fid", "__ridx"], how=how).drop(
-        "__fid", "__ridx"
+        "__path", "__fid", "__ridx"
     )
-    return out.drop("__path") if drop_path else out
+    return out.drop("__rawpath") if drop_path else out

@@ -529,10 +529,11 @@ class DeltaCatalog:
         filtered out.
 
         Shape: each parquet scan selects the data columns plus
+        ``_metadata.file_path`` as ``__rawpath`` and
         ``_metadata.row_index`` (the file-ordinal Delta DVs index by);
         partition values attach through :func:`~.manifest.attach_partitions`
         (per-tuple literal unions, or one scan + broadcast manifest join on
-        the normalized file path past its bound — a broad DV delete over a
+        that ``__rawpath`` past its bound — a broad DV delete over a
         date-partitioned table must not build an O(partitions) union plan);
         then ONE anti-join of (file, row index) against the decoded deleted
         positions — broadcast below DV_BROADCAST_MAX, so the common case
@@ -1073,12 +1074,6 @@ def read_delta_changelog(
                 scan = filter_deleted_rows(
                     scan, anti, spark, drop_path=False
                 )
-            else:
-                from .uris import normalized_path_col
-
-                scan = scan.withColumn(
-                    "__path", normalized_path_col(F.col("__rawpath"))
-                ).drop("__rawpath")
             parts_out.append(scan.drop("__ridx"))
         if coords:
             cscan = spark.read.schema(data_schema).parquet(
@@ -1100,7 +1095,7 @@ def read_delta_changelog(
             return None
         from functools import reduce
 
-        # partition values from the log, joined on the scans' __path
+        # partition values from the log, joined on the scans' __rawpath
         logged = dict(files)
         logged.update({p: (base.get(p) or live.get(p)) for p in coord_paths})
         out = join_partitions(
@@ -1134,8 +1129,6 @@ def read_delta_changelog(
     def _cdf_scan() -> DataFrame | None:
         from functools import reduce
 
-        from .uris import normalized_path_col
-
         if not any(
             any("cdc" in a for a in acts)
             for acts in window_actions.values()
@@ -1155,9 +1148,8 @@ def read_delta_changelog(
                     .parquet(
                         *sorted(store.spark_path(c["path"]) for c in cdcs)
                     )
-                    .withColumn(
-                        "__path",
-                        normalized_path_col(F.col("_metadata.file_path")),
+                    .select(
+                        "*", F.col("_metadata.file_path").alias("__rawpath")
                     )
                 )
                 scan = join_partitions(

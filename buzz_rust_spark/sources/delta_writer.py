@@ -4428,8 +4428,6 @@ def _enforce_registered_files(
     verdict, wrong #1)."""
     from pyspark.sql import functions as F
 
-    from .uris import normalized_path_col
-
     checks, invariants, generated = _table_rules(meta)
     if not (checks or invariants or generated):
         return
@@ -4437,7 +4435,7 @@ def _enforce_registered_files(
     df = spark.read.schema(read_schema).parquet(*[ap for ap, _ in reg])
     df = df.select(
         *[F.col(phys.get(c, c)).alias(c) for c in data_logical],
-        normalized_path_col(F.col("_metadata.file_path")).alias("__path"),
+        F.col("_metadata.file_path").alias("__rawpath"),
     )
     # pv values are keyed by PHYSICAL names (the log's convention); the
     # manifest re-surfaces them under the logical names
@@ -4453,7 +4451,7 @@ def _enforce_registered_files(
             for ap, pv in reg
         ],
         part_cols,
-    )
+    ).drop("__rawpath")
     types = {f.name: f.dataType for f in declared.fields}
     df = df.withColumns({c: F.col(c).cast(types[c]) for c in part_cols})
     _enforce_table_rules(df, meta, "add_files_delta")

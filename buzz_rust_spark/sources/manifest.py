@@ -23,7 +23,7 @@ collected, which is exactly what any Spark file index collects.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from functools import reduce
 
 import pyarrow as pa
@@ -34,11 +34,15 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from pyspark.sql.utils import AnalysisException
 
 from ..errors import BuzzPlanError
-from .uris import normalized_path_col, strip_scheme
+from .uris import listed_key, normalized_key, scan_path
 
 # attach_partitions' default bound: above this many distinct partition
-# tuples a scan attaches values by manifest join instead of per-tuple unions
-UNION_MAX_GROUPS = 32
+# tuples a scan attaches values by manifest join instead of per-tuple unions.
+# The measured crossover (CHANGES.md): one scan plus the join already wins at
+# three tuples, on 1.4k-row files and on 4M rows alike.
+UNION_MAX_GROUPS = 2
+
+_MISS = "catalog join-attach matched no manifest key for scanned file "
 
 
 @dataclass(frozen=True)
@@ -161,11 +165,14 @@ def attach_partitions(
     - *union* (at most ``max_groups`` distinct tuples, default
       :data:`UNION_MAX_GROUPS`): one scan per tuple with literal columns —
       no join, no shuffle, the plan of a hive-partitioned directory;
-    - *join* (more tuples): ONE scan of every file, keyed by its file path,
-      then :func:`join_partitions` — plan size stays O(1) however many
-      tuples there are.
+    - *join* (more tuples): ONE scan of every file, keyed by its raw
+      ``_metadata.file_path``, then :func:`join_partitions` — plan size
+      stays O(1) however many tuples there are.
 
-    ``strategy`` ``"union"``/``"join"`` forces one side."""
+    ``strategy`` ``"union"``/``"join"`` forces one side.  The result has
+    the scan's own columns plus the partition columns on both sides: a
+    ``__rawpath`` the scan already selects is the join key and is kept;
+    otherwise the key is selected here and dropped again."""
     groups: dict[tuple[str | None, ...], list[str]] = {}
     for f in files:
         groups.setdefault(partition_values(f, partition_cols), []).append(f.key)
@@ -183,14 +190,15 @@ def attach_partitions(
                 df = df.withColumn(c, F.lit(v).cast(StringType()))
             scans.append(df)
         return reduce(DataFrame.unionByName, scans)
-    # input_file_name() projected directly on the scan, where it names the
-    # file each row came from.  Keys must be individual FILES here (the
-    # reference's SizedFile contract, models/mod.rs:13-16): a directory key
-    # equals no scanned file path.  The union strategy tolerates them.
-    keyed = scan([f.key for f in files]).withColumn(
-        "__path", normalized_path_col(F.input_file_name())
-    )
-    return join_partitions(spark, keyed, files, partition_cols)
+    # Keys must be individual FILES here (the reference's SizedFile
+    # contract, models/mod.rs:13-16): a directory key names no scanned file.
+    # The union strategy tolerates them.
+    scanned = scan([f.key for f in files])
+    if "__rawpath" in scanned.columns:
+        return join_partitions(spark, scanned, files, partition_cols)
+    # _metadata resolves only on a scan relation: select it on the scan
+    keyed = scanned.select("*", F.col("_metadata.file_path").alias("__rawpath"))
+    return join_partitions(spark, keyed, files, partition_cols).drop("__rawpath")
 
 
 def join_partitions(
@@ -199,36 +207,46 @@ def join_partitions(
     files: list[CatalogFile],
     partition_cols: list[str],
 ) -> DataFrame:
-    """The join half of :func:`attach_partitions`: ``keyed`` carries a
-    ``__path`` column (:func:`~.uris.normalized_path_col` of its file path),
-    which is broadcast-joined to the manifest of ``files``; ``__path`` is
-    dropped from the result.
+    """The join half of :func:`attach_partitions`: ``keyed`` carries
+    ``__rawpath``, its raw ``_metadata.file_path`` column, selected on each
+    scan, and gains the partition columns of ``files`` by a broadcast left
+    join on it.  ``__rawpath`` stays for the caller to drop.
 
-    A scanned file missing from the manifest fails LOUDLY when its
+    The join key needs no per-row work.  The manifest is keyed by Spark's
+    own string for each file ``keyed`` scans, ``keyed.inputFiles()`` (listed
+    when the scan was built), turned into ``_metadata.file_path`` form on
+    the driver (:func:`~.uris.scan_path`); each is matched to its
+    ``CatalogFile`` by :func:`~.uris.listed_key`.  The key is
+    deterministic, so filters above the join still reach the file source.
+
+    Two guards: a scanned file with no catalog entry is a
+    :class:`BuzzPlanError` here, at plan time; and a row whose
+    ``__rawpath`` still matches no manifest key fails LOUDLY when its
     partition value is read, never as silent NULLs a filter then drops to
-    zero rows.  The check lives inside the plan: a query that never reads
+    zero rows.  That check lives inside the plan: a query that never reads
     the partition columns lets Catalyst prune check and join both — which
     is exactly when a miss is harmless."""
     if not partition_cols:
-        return keyed.drop("__path")
-    manifest = manifest_df(spark, files, partition_cols).select(
-        strip_scheme(F.col("key")).alias("__path"),
-        F.lit(True).alias("__matched"),
-        *partition_cols,
+        return keyed
+    by_key = {normalized_key(f.key): f for f in files}
+    entries = []
+    for uri in keyed.inputFiles():
+        f = by_key.get(listed_key(uri))
+        if f is None:
+            raise BuzzPlanError(f"{_MISS}{uri}")
+        entries.append(replace(f, key=scan_path(uri)))
+    manifest = F.broadcast(manifest_df(spark, entries, partition_cols))
+    miss = F.raise_error(F.concat(F.lit(_MISS), keyed["__rawpath"])).cast(
+        StringType()
     )
-    miss = F.raise_error(
-        F.concat(
-            F.lit("catalog join-attach matched no manifest key for scanned file "),
-            F.col("__path"),
-        )
-    ).cast(StringType())
-    return (
-        keyed.join(F.broadcast(manifest), on="__path", how="left")
-        .withColumns(
-            {
-                c: F.when(F.col("__matched").isNotNull(), F.col(c)).otherwise(miss)
-                for c in partition_cols
-            }
-        )
-        .drop("__path", "__matched")
+    # `length` is never NULL in the manifest: NULL after the join = no match
+    matched = manifest["length"].isNotNull()
+    return keyed.join(
+        manifest, keyed["__rawpath"] == manifest["key"], "left"
+    ).select(
+        keyed["*"],
+        *[
+            F.when(matched, manifest[c]).otherwise(miss).alias(c)
+            for c in partition_cols
+        ],
     )

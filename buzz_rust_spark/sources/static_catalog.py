@@ -14,9 +14,11 @@ Scale design:
 - Partition values are attached by :func:`.manifest.attach_partitions`, the
   one attach path every file-list scan shares (Delta DV, changelog and
   rewrite scans too): per-tuple literal *unions* up to ``union_max_groups``
-  tuples, above that ONE scan broadcast-joined to the manifest on the
-  normalized ``input_file_name()`` — plan size stays O(1) no matter how many
-  partitions survive pruning.  ``attach_strategy`` forces either side.
+  tuples, above that ONE scan broadcast-left-joined to the manifest on its
+  raw ``_metadata.file_path``.  The manifest is keyed by the scan's own
+  listed files, so no row decodes a path; plan size stays O(1) no matter how
+  many partitions survive pruning, and a ``stats_filter`` still reaches the
+  file source.  ``attach_strategy`` forces either side.
 - A declared schema is passed to every read: no footer-sniffing job at plan
   time, and column pruning/pushdown still apply.
 

@@ -515,6 +515,32 @@ def test_dv_many_partition_groups_uses_manifest_join(spark, tmp_path):
     assert plan.count("Scan parquet") <= 2
 
 
+@pytest.mark.parametrize("attach", ["union", "join"])
+def test_dv_scan_with_plus_in_data_file_path(spark, tmp_path, monkeypatch, attach):
+    """A '+' in a data-file path is a literal, not a space: the DV
+    anti-join still matches the file, so its deleted rows stay deleted
+    whichever way partition values attach."""
+    from buzz_rust_spark.sources import manifest
+
+    if attach == "join":
+        monkeypatch.setattr(manifest, "UNION_MAX_GROUPS", 1)
+    table = os.path.join(str(tmp_path), "dv-plus")
+    os.makedirs(table, exist_ok=True)
+    actions = [_meta_action(partitioned=True), _PROTO_DV]
+    for i in range(2):
+        rel = f"f+{i} a.parquet"
+        _write_part(
+            spark, os.path.join(table, rel), [(f"a{i}", i), (f"b{i}", 1000 + i)]
+        )
+        dv = write_dv_file(os.path.join(table, f"dv{i}.bin"), [0])  # drop a{i}
+        actions.append(_add(rel, dv, {"year": str(2000 + i)}))
+    _write_commit(os.path.join(table, "_delta_log"), 0, actions)
+    df = DeltaCatalog("t", table).to_dataframe(spark)
+    assert sorted((r.dept_name, r.year) for r in df.collect()) == [
+        ("b0", "2000"), ("b1", "2001")
+    ]
+
+
 def test_column_mapped_table_with_dv(spark, tmp_path):
     """Modern tables combine columnMapping AND deletionVectors: the DV
     filter applies on the physical scan, the rename presents logical names,

@@ -8,6 +8,7 @@ a MockSplittableTable-shaped fixture (FIXTURES.md F1/F2).
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
@@ -324,14 +325,15 @@ def test_partition_attach_join_strategy_matches_union(spark, tmp_path):
     assert len(ju) == 3 and all(row[1] == "part_value_002" for row in ju)
 
     # Both branches agree on a null partition value (matched by IS NULL,
-    # never by = 'None'), on keys with a space and a '%', on a
-    # `file`-bucket catalog (relative keys) and on an ORC catalog.
+    # never by = 'None'), on keys with a space, a literal '%41', '+', '#',
+    # '?' and non-ASCII characters, on a `file`-bucket catalog (relative
+    # keys) and on an ORC catalog.
     import glob as globmod
     import shutil
 
     odd = tmp_path / "odd dir %41"
     odd.mkdir()
-    parts = {"a b%41 0": None, "a b%41 1": "2021", "a b%41 2": "2022"}
+    parts = {"a b%41 0": None, "a+b#c?d 1": "2021", "é ü%41+ 2": "2022"}
     for fmt in ("parquet", "orc"):
         for i, name in enumerate(parts):
             out = str(odd / f"{name}.tmpdir")
@@ -370,21 +372,36 @@ def test_partition_attach_join_strategy_matches_union(spark, tmp_path):
 def test_join_partitions_raises_for_scanned_file_missing_from_manifest(
     spark, tmp_path
 ):
-    """The join half's loud-miss guard: a scanned file absent from the
-    manifest fails the query when its partition value is read, instead of
+    """The join half's two loud-miss guards.  A scanned file absent from
+    the manifest is a plan error; a row whose key still matches no manifest
+    entry fails the query when its partition value is read, instead of
     yielding NULL partition values."""
     from pyspark.sql import functions as F
 
     from buzz_rust_spark.sources.manifest import join_partitions
-    from buzz_rust_spark.sources.uris import normalized_path_col
 
     cat = mock_split_catalog(spark, tmp_path, n_files=2)
-    keyed = (
-        spark.read.schema(cat.schema)
-        .parquet(*[f.key for f in cat.files])
-        .withColumn("__path", normalized_path_col(F.input_file_name()))
+
+    keyed = spark.read.schema(cat.schema).parquet(
+        *[f.key for f in cat.files]
+    ).select("*", F.col("_metadata.file_path").alias("__rawpath"))
+
+    with pytest.raises(
+        BuzzPlanError,
+        match="catalog join-attach matched no manifest key for scanned file "
+        ".*file_2.parquet",
+    ):
+        join_partitions(spark, keyed, cat.files[:1], cat.partition_cols)
+    # every scanned file is listed, but file_2's rows carry a key no
+    # manifest entry has: the in-plan guard
+    stray = keyed.withColumn(
+        "__rawpath",
+        F.when(
+            F.col("__rawpath").endswith("file_2.parquet"),
+            F.lit("file:/elsewhere/file_2.parquet"),
+        ).otherwise(F.col("__rawpath")),
     )
-    out = join_partitions(spark, keyed, cat.files[:1], cat.partition_cols)
+    out = join_partitions(spark, stray, cat.files, cat.partition_cols)
     with pytest.raises(
         Exception,
         match="catalog join-attach matched no manifest key for scanned file "
@@ -393,6 +410,69 @@ def test_join_partitions_raises_for_scanned_file_missing_from_manifest(
         out.collect()
     # a query that never reads the partition values is unaffected
     assert out.select("data_col").count() == 6
+
+
+def test_normalized_path_col_keeps_plus_literal(spark):
+    """The normalized file-path key percent-decodes a scanned path but
+    keeps a '+' literal (Java's URLDecoder would read it as a space), and
+    a '%' that is no escape stays raw."""
+    from pyspark.sql import functions as F
+
+    from buzz_rust_spark.sources.uris import normalized_key, normalized_path_col
+
+    cases = {
+        "file:/d/a+b%20c.parquet": "/d/a+b c.parquet",
+        "file:/d/x%2541+.parquet": "/d/x%41+.parquet",
+        "s3a://bkt/k+1/%C3%A9.parquet": "s3a://bkt/k+1/é.parquet",
+        "file:/d/100%+.parquet": "/d/100%+.parquet",
+    }
+    got = spark.createDataFrame([(k,) for k in cases], "p string").select(
+        "p", normalized_path_col(F.col("p")).alias("n")
+    )
+    assert {r.p: r.n for r in got.collect()} == {
+        k: normalized_key(v) for k, v in cases.items()
+    }
+
+
+def test_join_attach_keeps_stats_filter_pushdown(spark, tmp_path):
+    """The join-attach key is the raw ``_metadata.file_path``, a
+    deterministic column, so a ``stats_filter`` over a join-attached frame
+    still reaches the Parquet scan as a pushed filter, as on a union."""
+    base = mock_split_catalog(spark, tmp_path, n_files=5)
+    for strategy in ("union", "join"):
+        cat = StaticCatalog(
+            name="m", schema=base.schema, files=base.files,
+            partition_cols=base.partition_cols, attach_strategy=strategy,
+        )
+        df = cat.to_dataframe(spark, stats_filter="data_col >= 31")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+        assert pushed and all("data_col" in p for p in pushed), (strategy, plan)
+        assert sorted(r.data_col for r in df.collect()) == [
+            31, 32, 40, 41, 42, 50, 51, 52
+        ]
+
+
+def test_partition_attach_auto_switches_above_the_bound(spark, tmp_path):
+    """``attach_partitions`` unions literal-column scans up to
+    ``UNION_MAX_GROUPS`` distinct tuples and joins one scan to the manifest
+    above it; both sides give the same rows."""
+    from buzz_rust_spark.sources.manifest import UNION_MAX_GROUPS
+
+    base = mock_split_catalog(spark, tmp_path, n_files=UNION_MAX_GROUPS + 1)
+    for n, joined in ((UNION_MAX_GROUPS, False), (UNION_MAX_GROUPS + 1, True)):
+        cat = StaticCatalog(
+            name="m", schema=base.schema, files=base.files[:n],
+            partition_cols=base.partition_cols,
+        )
+        df = cat.to_dataframe(spark)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert bool(re.search(r"\bJoin\b", plan)) == joined, (n, plan)
+        assert sorted((r.data_col, r.part_key_1) for r in df.collect()) == [
+            (10 * i + j, f"part_value_{i:03d}")
+            for i in range(1, n + 1)
+            for j in range(3)
+        ]
 
 
 def test_runtime_task_failure_surfaces_typed_error(spark, tmp_path):
