@@ -309,7 +309,7 @@ def write_dv_file(path: str, positions) -> dict:
 
 
 def decode_dvs_distributed(spark, table_dir: str, desc_by_file: dict):
-    """DataFrame ``(__file string, __ridx long)`` of every EXISTING deleted
+    """DataFrame ``(__rawpath string, __ridx long)`` of every EXISTING deleted
     position of the given files, decoded EXECUTOR-side: the driver ships
     one DESCRIPTOR row per file (path key + the add action's
     deletionVector dict as JSON — O(files) bytes), and each task opens its
@@ -322,8 +322,9 @@ def decode_dvs_distributed(spark, table_dir: str, desc_by_file: dict):
     after N un-compacted DV deletes the table's accumulated positions are
     O(N × matched rows), and a driver-side decode would materialize all of
     them per subsequent delete (the round-8 verdict's remaining weak
-    flag).  ``desc_by_file`` keys must already be in the scan's
-    ``__file`` domain (scheme-stripped url-decoded absolute paths)."""
+    flag).  ``desc_by_file`` is keyed by raw scan key, the scan's
+    ``__rawpath`` (``_metadata.file_path``; see :mod:`.uris`), so the
+    rows anti-join on ``(__rawpath, __ridx)``."""
     import json as _json
 
     from .logstore import LogStore
@@ -338,11 +339,11 @@ def decode_dvs_distributed(spark, table_dir: str, desc_by_file: dict):
 
         store = LogStore(table_dir)
         for pdf in batches:
-            for f, dv_json in zip(pdf["__file"], pdf["__dv"]):
+            for f, dv_json in zip(pdf["__rawpath"], pdf["__dv"]):
                 ps = read_dv_positions(store, _json.loads(dv_json))
                 yield _pd.DataFrame(
                     {
-                        "__file": f,
+                        "__rawpath": f,
                         "__ridx": _pd.Series(ps, dtype="int64"),
                     }
                 )
@@ -355,65 +356,46 @@ def decode_dvs_distributed(spark, table_dir: str, desc_by_file: dict):
         ),
     )
     return (
-        spark.createDataFrame(rows, "__file string, __dv string")
+        spark.createDataFrame(rows, "__rawpath string, __dv string")
         .repartition(n)
-        .mapInPandas(decode, "__file string, __ridx long")
+        .mapInPandas(decode, "__rawpath string, __ridx long")
     )
 
 
-def build_dvs_distributed(
-    matched_df,
-    table_dir: str,
-    old_positions_by_file: dict | None = None,
-    old_df=None,
-) -> list[dict]:
+def build_dvs_distributed(matched_df, table_dir: str, old_df=None) -> list[dict]:
     """EXECUTOR-side deletion-vector construction for a DV delete: matched
-    ``(__file, __ridx)`` coordinates are hash-partitioned by file, each
+    ``(__rawpath, __ridx)`` coordinates are hash-partitioned by file, each
     task merges its files' new positions with the existing vector's
     positions, serializes the roaring bitmaps, and writes ONE sidecar
     ``.bin`` per task (PROTOCOL.md allows any number of DV files per
     commit; each descriptor points at its own path token + offset).
 
-    The driver receives only per-file DESCRIPTOR rows — path token,
-    offset, size, cardinality, new-match count — O(touched files), never
-    O(matched rows): the shape that lets a delete matching hundreds of
-    millions of rows commit with bounded driver memory, mirroring the
-    Iceberg writer's executor-written position-delete files.
+    The driver receives only per-file DESCRIPTOR rows — the file's
+    ``__rawpath``, path token, offset, size, cardinality, new-match count —
+    O(touched files), never O(matched rows): the shape that lets a delete
+    matching hundreds of millions of rows commit with bounded driver
+    memory, mirroring the Iceberg writer's executor-written
+    position-delete files.
 
-    Existing positions join the build as TAGGED rows unioned with the
-    matched coordinates — partitioned by file like everything else — so a
-    task receives only ITS files' old positions.  A file whose rows are
-    all old (no new match) emits nothing, so untouched files keep their
-    current descriptors.  Preferred source: ``old_df``, a
-    ``(__file, __ridx)`` DataFrame (e.g. :func:`decode_dvs_distributed`)
-    — the old positions then never exist driver-side at all;
-    ``old_positions_by_file`` (normalized path → decoded position list)
-    remains for small driver-decoded sets."""
+    Existing positions (``old_df``, a ``(__rawpath, __ridx)`` DataFrame
+    such as :func:`decode_dvs_distributed`'s) join the build as TAGGED
+    rows unioned with the matched coordinates — partitioned by file like
+    everything else — so a task receives only ITS files' old positions and
+    they never exist driver-side.  A file whose rows are all old (no new
+    match) emits nothing, so untouched files keep their current
+    descriptors."""
     from pyspark.sql import functions as F
 
-    spark = matched_df.sparkSession
     tagged = matched_df.select(
-        "__file", "__ridx", F.lit(1).alias("__new")
+        "__rawpath", "__ridx", F.lit(1).alias("__new")
     )
     if old_df is not None:
         tagged = tagged.unionByName(
-            old_df.select("__file", "__ridx", F.lit(0).alias("__new"))
+            old_df.select("__rawpath", "__ridx", F.lit(0).alias("__new"))
         )
-    else:
-        old_rows = [
-            (f, int(p))
-            for f, ps in (old_positions_by_file or {}).items()
-            for p in ps
-        ]
-        if old_rows:
-            tagged = tagged.unionByName(
-                spark.createDataFrame(
-                    old_rows, "__file string, __ridx long"
-                ).select("__file", "__ridx", F.lit(0).alias("__new"))
-            )
 
     out_schema = (
-        "rel_abs string, token string, offset long, size long, "
+        "__rawpath string, token string, offset long, size long, "
         "cardinality long, new_rows long"
     )
 
@@ -429,7 +411,7 @@ def build_dvs_distributed(
         for pdf in batches:
             if pdf.empty:
                 continue
-            for f, grp in pdf.groupby("__file"):
+            for f, grp in pdf.groupby("__rawpath"):
                 pos_by_file.setdefault(f, []).append(
                     grp["__ridx"].to_numpy(dtype="int64")
                 )
@@ -455,7 +437,7 @@ def build_dvs_distributed(
         yield pd.DataFrame(
             [
                 {
-                    "rel_abs": f,
+                    "__rawpath": f,
                     "token": token,
                     "offset": d["offset"],
                     "size": d["sizeInBytes"],
@@ -468,7 +450,7 @@ def build_dvs_distributed(
 
     return [
         r.asDict()
-        for r in tagged.repartition("__file")
+        for r in tagged.repartition("__rawpath")
         .mapInPandas(build, schema=out_schema)
         .collect()
     ]
@@ -487,7 +469,11 @@ def filter_deleted_rows(
 
     ``scan`` must select the data columns plus ``__rawpath``
     (``_metadata.file_path``) and ``__ridx`` (``_metadata.row_index``);
-    ``deleted`` is ``[(scheme-stripped path, row index), ...]``.
+    ``deleted`` is ``[(catalog key, row index), ...]``.  The join keys on
+    the raw ``__rawpath``: each catalog key finds its scanned file on the
+    driver, from the scan's own listing (:mod:`.uris`), so no row pays for
+    a decode.  A key the scan does not list is a :class:`BuzzPlanError`:
+    its deleted rows would otherwise resurrect with no error.
 
     Join shape: file paths map to compact integer ids driver-side, so the
     position relation is 16 bytes/row no matter how deep the paths are
@@ -502,28 +488,34 @@ def filter_deleted_rows(
     (:func:`~.manifest.join_partitions`).
     ``how="left_semi"`` flips the filter to KEEP exactly the listed rows —
     the changelog's "rows at these positions" read."""
-    from pyspark.sql import functions as F
     from pyspark.sql.functions import broadcast
 
-    from .uris import normalized_path_col
+    from ..errors import BuzzPlanError
+    from .uris import input_files, listed_key, normalized_key, scan_path
 
-    fids = {p: i for i, p in enumerate(sorted({p for p, _ in deleted}))}
+    fids = {
+        p: i
+        for i, p in enumerate(sorted({normalized_key(p) for p, _ in deleted}))
+    }
+    listed = {listed_key(u): scan_path(u) for u in input_files(scan)}
+    missing = sorted(set(fids) - set(listed))
+    if missing:
+        raise BuzzPlanError(
+            f"deletion vector of {missing[0]!r} names no scanned file"
+        )
     files_df = broadcast(
         spark.createDataFrame(
-            sorted(fids.items()), "__path string, __fid long"
+            sorted((listed[p], i) for p, i in fids.items()),
+            "__rawpath string, __fid long",
         )
     )
     del_df = spark.createDataFrame(
-        [(fids[p], int(r)) for p, r in deleted], "__fid long, __ridx long"
+        [(fids[normalized_key(p)], int(r)) for p, r in deleted],
+        "__fid long, __ridx long",
     )
     if len(deleted) <= broadcast_max:
         del_df = broadcast(del_df)
-    # _metadata.file_path is a percent-encoded URI; both DV sides share
-    # the normalized-key convention of sources.uris
-    scan = scan.withColumn(
-        "__path", normalized_path_col(F.col("__rawpath"))
-    ).join(files_df, on="__path", how="left")
-    out = scan.join(del_df, on=["__fid", "__ridx"], how=how).drop(
-        "__path", "__fid", "__ridx"
-    )
+    out = scan.join(files_df, on="__rawpath", how="left").join(
+        del_df, on=["__fid", "__ridx"], how=how
+    ).drop("__fid", "__ridx")
     return out.drop("__rawpath") if drop_path else out

@@ -543,10 +543,9 @@ class DeltaCatalog:
         from pyspark.sql import functions as F
 
         from .deletion_vectors import filter_deleted_rows, read_dv_positions
-        from .uris import normalized_key
 
         deleted = [
-            (normalized_key(f.key), int(p))
+            (f.key, int(p))
             for f in files
             for p in read_dv_positions(self._store, self._dv_by_key[f.key])
         ]
@@ -947,7 +946,6 @@ def read_delta_changelog(
     from pyspark.sql import functions as F
 
     from .deletion_vectors import filter_deleted_rows, read_dv_positions
-    from .uris import normalized_key
 
     store = LogStore(table_uri, region=region)
     if not store.isdir(_LOG):
@@ -1058,7 +1056,7 @@ def read_delta_changelog(
         parts_out = []
         if files:
             anti = [
-                (normalized_key(store.spark_path(p)), int(pos))
+                (store.spark_path(p), int(pos))
                 for p, a in files.items()
                 if _dv(a)
                 for pos in read_dv_positions(store, _dv(a))
@@ -1083,10 +1081,7 @@ def read_delta_changelog(
                 F.col("_metadata.file_path").alias("__rawpath"),
                 F.col("_metadata.row_index").alias("__ridx"),
             )
-            sel = [
-                (normalized_key(store.spark_path(p)), int(pos))
-                for p, pos in coords
-            ]
+            sel = [(store.spark_path(p), int(pos)) for p, pos in coords]
             cscan = filter_deleted_rows(
                 cscan, sel, spark, drop_path=False, how="left_semi"
             )

@@ -663,7 +663,7 @@ class IcebergCatalog:
         self.ref = ref  # resolved to a snapshot id inside _load
         self.snapshot_id = snapshot_id
         # plan cache: partition_filter (or "") → (data CatalogFiles,
-        # delete-file dicts, recorded→normalized path pairs)
+        # delete-file dicts, recorded path→catalog key pairs)
         self._plans: dict[str, tuple] = {}
         self._entries_cache: dict[str, list] = {}
         self._load()
@@ -1211,18 +1211,16 @@ class IcebergCatalog:
         """Snapshot plan under ``partition_filter``-driven manifest
         skipping, cached per filter string: ``files`` (data CatalogFiles),
         ``deletes`` (position/equality delete-file dicts), ``pairs``
-        (recorded→normalized path), ``orc_keys``, and ``seq_by_norm``
-        (normalized path → data sequence number, for equality-delete
+        (recorded path→catalog key), ``orc_keys``, and ``seq_by_key``
+        (catalog key → data sequence number, for equality-delete
         scoping)."""
-        from .uris import normalized_key
-
         cache_key = partition_filter or ""
         if cache_key in self._plans:
             return self._plans[cache_key]
         if self._manifests is None:
             plan = {
                 "files": [], "deletes": [], "pairs": [],
-                "orc_keys": set(), "seq_by_norm": {}, "part_raw": {},
+                "orc_keys": set(), "seq_by_key": {}, "part_raw": {},
             }
             self._plans[cache_key] = plan
             return plan
@@ -1240,7 +1238,7 @@ class IcebergCatalog:
         deletes: list[dict] = []
         pairs: list[tuple[str, str]] = []
         orc_keys: set = set()
-        seq_by_norm: dict[str, int] = {}
+        seq_by_key: dict[str, int] = {}
         part_raw: dict[str, dict] = {}
         for mcontent, mseq, mspec, e in self._decode_entries(spark, chosen):
             if int(e.get("status") or 0) == 2:  # DELETED entry
@@ -1326,9 +1324,8 @@ class IcebergCatalog:
                         partitions=partitions,
                     )
                 )
-                norm = normalized_key(key)
-                pairs.append((df_rec["file_path"], norm))
-                seq_by_norm[norm] = seq
+                pairs.append((df_rec["file_path"], key))
+                seq_by_key[key] = seq
                 # raw (avro-decoded) partition record, for writers that
                 # scope delete manifests to their matched files' partitions
                 part_raw[df_rec["file_path"]] = dict(part)
@@ -1366,7 +1363,7 @@ class IcebergCatalog:
                 )
         plan = {
             "files": files, "deletes": deletes, "pairs": pairs,
-            "orc_keys": orc_keys, "seq_by_norm": seq_by_norm,
+            "orc_keys": orc_keys, "seq_by_key": seq_by_key,
             "part_raw": part_raw,
         }
         self._plans[cache_key] = plan
@@ -1587,9 +1584,10 @@ class IcebergCatalog:
         carry their (identity) partition values in-file, so attaching them
         would duplicate columns — pruning runs on a partition-aware helper,
         reading on the pruned plain file list.  Position deletes apply as
-        one anti-join on (file path, row index); equality deletes as
-        null-safe anti-joins on their key columns, scoped to data files
-        with a strictly smaller sequence number.
+        one anti-join on (raw ``_metadata.file_path``, row index);
+        equality deletes as null-safe anti-joins on their key columns,
+        scoped to data files with a strictly smaller sequence number
+        (:meth:`_mor_scan`).
 
         ``stats_filter`` is a ROW predicate (any Spark SQL) applied to
         the scan — and additionally used to skip whole data files whose
@@ -1689,21 +1687,26 @@ class IcebergCatalog:
         keep_coords: bool = False,
     ) -> DataFrame:
         """Merge-on-read scan: data files minus position- and
-        equality-deleted rows.  ``tag`` (normalized path → snapshot id)
+        equality-deleted rows.  ``tag`` (catalog key → snapshot id)
         appends a ``_snapshot_id`` column via a broadcast map join — the
         changes feed marks each surviving row with the commit that added
         it, same shape as the Delta feed's ``_commit_version``.
+        ``keep_coords`` keeps each row's coordinates: ``__path``, its
+        file's manifest-RECORDED path, and ``__ridx``.
 
         Shape (template: ``delta_catalog.py::_dv_scan``): ONE scan per data
-        format selecting ``_metadata.file_path`` (+ ``row_index`` when
-        position deletes exist), then
+        format selecting the raw ``_metadata.file_path`` as ``__path`` (+
+        ``row_index`` when position deletes exist).  Every per-file join
+        keys on that raw ``__path``; its map side is built on the driver
+        from the scan's own listing (:func:`~.uris.scanned_files`), so no
+        row pays for a decode.  Then
 
         - position deletes: one DISTRIBUTED parquet scan of the delete
           files (``file_path``, ``pos``), a broadcast map join translating
-          recorded data-file URIs to the scan's normalized path coordinates
-          (deletes targeting files compacted out of this snapshot drop
-          here — that is why sequence numbers need not be consulted for
-          position deletes), then ONE anti-join on (path, row index);
+          recorded data-file paths to the scan's raw keys (deletes
+          targeting files compacted out of this snapshot drop here — that
+          is why sequence numbers need not be consulted for position
+          deletes), then ONE anti-join on (path, row index);
         - equality deletes: ONE null-safe anti-join per KEY-COLUMN SET —
           not per commit.  All of a key-set's delete files are read in a
           single scan, each row tagged with its file's sequence number via
@@ -1726,18 +1729,13 @@ class IcebergCatalog:
         from pyspark.sql import functions as F
         from pyspark.sql.functions import broadcast
 
-        from .uris import normalized_key, normalized_path_col
+        from .uris import scanned_files
 
         def scan_part(subset: list[CatalogFile], fmt: str) -> DataFrame:
             reader = spark.read.schema(self._scan_schema)
             keys = [f.key for f in subset]
             df = reader.parquet(*keys) if fmt == "parquet" else reader.orc(keys)
-            cols = [
-                "*",
-                normalized_path_col(F.col("_metadata.file_path")).alias(
-                    "__path"
-                ),
-            ]
+            cols = ["*", F.col("_metadata.file_path").alias("__path")]
             if pos or keep_coords:  # orc+pos is refused before we get here
                 cols.append(F.col("_metadata.row_index").alias("__ridx"))
             return df.select(*cols)
@@ -1749,10 +1747,21 @@ class IcebergCatalog:
             parts.append(scan_part(orc, "orc"))
         scan = reduce(DataFrame.unionByName, parts)
         data_cols = [f.name for f in self._scan_schema.fields]
+        # catalog key → raw scan key, for every scanned data file
+        raw_of = {
+            k: raw
+            for raw, k in scanned_files(
+                scan, {f.key: f.key for f in parq + orc}
+            ).items()
+        }
+        rec_of = {raw_of[k]: rec for rec, k in plan["pairs"] if k in raw_of}
 
         if pos:
             mapping = spark.createDataFrame(
-                sorted(set(plan["pairs"])), "file_path string, __path string"
+                sorted(
+                    {(rec, raw_of[k]) for rec, k in plan["pairs"] if k in raw_of}
+                ),
+                "file_path string, __path string",
             )
             del_schema = StructType(
                 [
@@ -1776,7 +1785,11 @@ class IcebergCatalog:
 
         if eq:
             seq_map = spark.createDataFrame(
-                sorted(plan["seq_by_norm"].items()),
+                sorted(
+                    (raw_of[k], seq)
+                    for k, seq in plan["seq_by_key"].items()
+                    if k in raw_of
+                ),
                 "__path string, __seq long",
             )
             scan = scan.join(broadcast(seq_map), on="__path", how="left")
@@ -1788,21 +1801,23 @@ class IcebergCatalog:
                 # one scan of ALL the key-set's delete files; a carried-
                 # forward entry may list a file twice — dedup by uri (the
                 # seq is identical: EXISTING entries keep their original)
-                seq_by_uri = {
-                    normalized_key(d["uri"]): int(d["seq"]) for d in dels
-                }
+                del_keys = self._read_eq_key_files(
+                    spark,
+                    ids,
+                    names,
+                    sorted({d["uri"] for d in dels}),
+                    with_path=True,
+                )
                 dseq_map = spark.createDataFrame(
-                    sorted(seq_by_uri.items()), "__dpath string, __dseq long"
+                    sorted(
+                        scanned_files(
+                            del_keys, {d["uri"]: int(d["seq"]) for d in dels}
+                        ).items()
+                    ),
+                    "__dpath string, __dseq long",
                 )
                 del_rel = (
-                    self._read_eq_key_files(
-                        spark,
-                        ids,
-                        names,
-                        sorted({d["uri"] for d in dels}),
-                        with_path=True,
-                    )
-                    .join(broadcast(dseq_map), on="__dpath")
+                    del_keys.join(broadcast(dseq_map), on="__dpath")
                     .groupBy(*names)
                     .agg(F.max("__dseq").alias("__dseq"))
                     .alias("__d")
@@ -1826,14 +1841,21 @@ class IcebergCatalog:
 
         if tag is not None:
             tag_df = spark.createDataFrame(
-                sorted(tag), "__path string, _snapshot_id long"
+                sorted((raw_of[k], sid) for k, sid in tag if k in raw_of),
+                "__path string, _snapshot_id long",
             )
             scan = scan.join(broadcast(tag_df), on="__path", how="left")
             return scan.select(*data_cols, "_snapshot_id")
         if keep_coords:
             # per-row physical coordinates for the changelog's retraction
-            # joins (the caller dedups on them and drops them)
-            return scan.select(*data_cols, "__path", "__ridx")
+            # joins and the position-delete writers, with the path spelled
+            # as the manifests record it
+            rec_df = spark.createDataFrame(
+                sorted(rec_of.items()), "__path string, __rec string"
+            )
+            return scan.join(broadcast(rec_df), on="__path").select(
+                *data_cols, F.col("__rec").alias("__path"), "__ridx"
+            )
         return scan.drop("__path").select(*data_cols)
 
     # --- name mapping (id-less external files on evolved tables) -------------
@@ -1998,7 +2020,8 @@ class IcebergCatalog:
         with_path: bool = False,
     ) -> DataFrame:
         """One DataFrame over equality-delete key files, columns projected
-        to the CURRENT names (+ ``__dpath`` when ``with_path``).
+        to the CURRENT names (+ ``__dpath``, the raw
+        ``_metadata.file_path``, when ``with_path``).
 
         Non-evolved tables read by name (the common fast path).  Evolved
         (renamed-column) tables resolve by FIELD ID: the read schema
@@ -2014,17 +2037,12 @@ class IcebergCatalog:
         or resurrecting data."""
         from pyspark.sql import functions as F
 
-        from .uris import normalized_path_col
-
         plain = {f.name: f for f in self.schema.fields}
 
         def _finish(df: DataFrame) -> DataFrame:
             cols: list = list(names)
             if with_path:
-                df = df.withColumn(
-                    "__dpath",
-                    normalized_path_col(F.col("_metadata.file_path")),
-                )
+                df = df.withColumn("__dpath", F.col("_metadata.file_path"))
                 cols = cols + ["__dpath"]
             return df.select(*cols)
 
@@ -2156,8 +2174,8 @@ def _changes_range(
     snapshots' ADDED manifests — the shared basis of
     :func:`read_iceberg_changes` (appends feed) and
     :func:`read_iceberg_changelog` (retraction feed).  Returns None for an
-    empty window, else the range's data files, delete files, recorded→
-    normalized path pairs, per-file sequence numbers, and snapshot tags.
+    empty window, else the range's data files, delete files, recorded
+    path→catalog key pairs, per-file sequence numbers, and snapshot tags.
 
     O(range) manifest-list reads driver-side; manifest decode goes through
     the catalog's distributed path above the driver cap."""
@@ -2240,12 +2258,10 @@ def _changes_range(
         walk = parent
     in_range.sort(key=lambda s: int(s.get("sequence-number", 0)))
 
-    from .uris import normalized_key
-
     files: list[CatalogFile] = []
     deletes: list[dict] = []
     pairs: list[tuple[str, str]] = []
-    seq_by_norm: dict[str, int] = {}
+    seq_by_key: dict[str, int] = {}
     tag: list[tuple[str, int]] = []
     orc_keys: set = set()
     for s in in_range:
@@ -2293,7 +2309,6 @@ def _changes_range(
                     )
                 if fmt == "ORC":
                     orc_keys.add(key)
-                norm = normalized_key(key)
                 files.append(
                     CatalogFile(
                         key=key,
@@ -2301,9 +2316,9 @@ def _changes_range(
                         partitions=(),
                     )
                 )
-                pairs.append((df_rec["file_path"], norm))
-                seq_by_norm[norm] = seq
-                tag.append((norm, int(sid)))
+                pairs.append((df_rec["file_path"], key))
+                seq_by_key[key] = seq
+                tag.append((key, int(sid)))
             elif fcontent in (1, 2):
                 if fmt and fmt != "PARQUET":
                     raise BuzzExecutionError(
@@ -2328,7 +2343,7 @@ def _changes_range(
         "files": files,
         "deletes": deletes,
         "pairs": pairs,
-        "seq_by_norm": seq_by_norm,
+        "seq_by_key": seq_by_key,
         "tag": tag,
         "orc_keys": orc_keys,
     }
@@ -2362,7 +2377,7 @@ def _range_insert_scan(
         spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     return cat._mor_scan(
         spark, parq, orc, pos, eq,
-        {"pairs": rng["pairs"], "seq_by_norm": rng["seq_by_norm"]},
+        {"pairs": rng["pairs"], "seq_by_key": rng["seq_by_key"]},
         tag=rng["tag"] if with_tag else None,
     )
 
@@ -2527,8 +2542,7 @@ def read_iceberg_changelog(
         posdel = spark.read.schema(del_schema).parquet(
             *sorted({d["uri"] for d in pos_in_range})
         )
-        known_pairs = sorted(set(fplan["pairs"]) | set(rng["pairs"]))
-        known_rec = {rec for rec, _ in known_pairs}
+        known_rec = {rec for rec, _ in fplan["pairs"] + rng["pairs"]}
         refs = {
             r["file_path"]
             for r in posdel.select("file_path").distinct().collect()
@@ -2544,12 +2558,9 @@ def read_iceberg_changelog(
                 "in-range compaction; the coordinates cannot be mapped, "
                 "re-bootstrap from a full snapshot read"
             )
-        mapping = spark.createDataFrame(
-            known_pairs, "file_path string, __path string"
-        )
-        pos_df = (
-            posdel.join(broadcast(mapping), on="file_path")
-            .select("__path", F.col("pos").alias("__ridx"))
+        # the retraction scan's coordinates are recorded paths
+        pos_df = posdel.select(
+            F.col("file_path").alias("__path"), F.col("pos").alias("__ridx")
         )
         candidate_keys |= {
             uri_of_rec[rec] for rec in refs if rec in uri_of_rec

@@ -2244,25 +2244,20 @@ def _predicate_mutation_iceberg(
             part_fields = []  # unwritable transform: global form stays sound
     scoped = bool(part_fields)
 
-    # normalized scan path → the manifest-RECORDED file path (delete files
-    # must reference paths exactly as the manifests spell them); broadcast
-    # map join, then repartition by target file so each task's sorted run
-    # covers whole files, and sortWithinPartitions for the spec's required
-    # (file_path, pos) ordering — per written file, which is the spec's
-    # unit ("rows must be sorted by file_path then pos")
-    rec_map = spark.createDataFrame(
-        sorted(set(plan["pairs"])), "file_path string, __path string"
-    )
+    # the scan's coordinates carry the manifest-RECORDED file path (delete
+    # files must reference paths exactly as the manifests spell them);
+    # repartition by target file so each task's sorted run covers whole
+    # files, and sortWithinPartitions for the spec's required (file_path,
+    # pos) ordering — per written file, which is the spec's unit ("rows
+    # must be sorted by file_path then pos")
     matched_full = scan.where(predicate)
     if set_exprs is not None:
         # both the coordinates and the replacement rows derive from this
         # frame — persisted so the two jobs see identical matches
         matched_full = matched_full.persist()
-    matched = (
-        matched_full
-        .select("__path", "__ridx")
-        .join(broadcast(rec_map), on="__path")
-        .select("file_path", F.col("__ridx").cast("long").alias("pos"))
+    matched = matched_full.select(
+        F.col("__path").alias("file_path"),
+        F.col("__ridx").cast("long").alias("pos"),
     )
 
     data_dir = os.path.join(root, "data")
@@ -4606,14 +4601,13 @@ def _derive_partition_tuples(
     ordinals, so add_files tuples CANNOT diverge from written ones).  A
     file spanning more than one tuple refuses typed — registering it
     under a single tuple would corrupt partition pruning.  Returns
-    {abs_path: {group_col: stored_value}}; empty files are absent (the
-    caller refuses them)."""
-    from urllib.parse import unquote, urlparse
-
+    {path: {group_col: stored_value}}, keyed as ``paths`` are; empty files
+    are absent (the caller refuses them)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
     from .iceberg import _struct_field
+    from .uris import scanned_files
 
     needed = {pf["source_name"] for pf in part_fields}
     sub = StructType(
@@ -4631,10 +4625,8 @@ def _derive_partition_tuples(
             else _transform_column(pf)
         )
         cols.append(e.alias(f"__g{i}"))
-    # _metadata.file_path, not input_file_name(): the pandas UDF consumes
-    # its input ahead of its output, so input_file_name() beside it names
-    # whichever file the task read last — in a task that reads several
-    # files, rows land on the wrong file.  _metadata is a per-row column.
+    # the raw _metadata.file_path is a per-row column, exact even when one
+    # task reads several files; each file's path maps back on the driver
     df = spark.read.schema(sub).parquet(*paths).select(
         F.col("_metadata.file_path").alias("__f"), *cols
     )
@@ -4647,9 +4639,10 @@ def _derive_partition_tuples(
         )
         .collect()
     )
+    path_of = scanned_files(df, {p: p for p in paths})
     out: dict[str, dict] = {}
     for r in rows:
-        ap = os.path.abspath(unquote(urlparse(r["__f"]).path))
+        ap = path_of[r["__f"]]
         if r["__n"] > 1:
             raise BuzzBadRequestError(
                 f"file {ap!r} spans {r['__n']} partition tuples under the "

@@ -34,16 +34,13 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from pyspark.sql.utils import AnalysisException
 
 from ..errors import BuzzPlanError
-from .uris import listed_key, normalized_key, scan_path
+from .uris import MISS, scanned_files
 
 # attach_partitions' default bound: above this many distinct partition
 # tuples a scan attaches values by manifest join instead of per-tuple unions.
 # The measured crossover (CHANGES.md): one scan plus the join already wins at
 # three tuples, on 1.4k-row files and on 4M rows alike.
 UNION_MAX_GROUPS = 2
-
-_MISS = "catalog join-attach matched no manifest key for scanned file "
-
 
 @dataclass(frozen=True)
 class CatalogFile:
@@ -212,12 +209,11 @@ def join_partitions(
     scan, and gains the partition columns of ``files`` by a broadcast left
     join on it.  ``__rawpath`` stays for the caller to drop.
 
-    The join key needs no per-row work.  The manifest is keyed by Spark's
-    own string for each file ``keyed`` scans, ``keyed.inputFiles()`` (listed
-    when the scan was built), turned into ``_metadata.file_path`` form on
-    the driver (:func:`~.uris.scan_path`); each is matched to its
-    ``CatalogFile`` by :func:`~.uris.listed_key`.  The key is
-    deterministic, so filters above the join still reach the file source.
+    The join key needs no per-row work.  The manifest is keyed by the
+    raw scan key of each file ``keyed`` scans, matched to its
+    ``CatalogFile`` on the driver (:func:`~.uris.scanned_files`).  The key
+    is deterministic, so filters above the join still reach the file
+    source.
 
     Two guards: a scanned file with no catalog entry is a
     :class:`BuzzPlanError` here, at plan time; and a row whose
@@ -228,15 +224,12 @@ def join_partitions(
     is exactly when a miss is harmless."""
     if not partition_cols:
         return keyed
-    by_key = {normalized_key(f.key): f for f in files}
-    entries = []
-    for uri in keyed.inputFiles():
-        f = by_key.get(listed_key(uri))
-        if f is None:
-            raise BuzzPlanError(f"{_MISS}{uri}")
-        entries.append(replace(f, key=scan_path(uri)))
+    entries = [
+        replace(f, key=raw)
+        for raw, f in scanned_files(keyed, {f.key: f for f in files}).items()
+    ]
     manifest = F.broadcast(manifest_df(spark, entries, partition_cols))
-    miss = F.raise_error(F.concat(F.lit(_MISS), keyed["__rawpath"])).cast(
+    miss = F.raise_error(F.concat(F.lit(MISS), keyed["__rawpath"])).cast(
         StringType()
     )
     # `length` is never NULL in the manifest: NULL after the join = no match

@@ -1,51 +1,38 @@
-"""Shared path/URI normalization for file-identity joins.
+"""File identity for joins of rows back to their catalog entries.
 
 Several plans join rows back to the catalog entry of the file they came
-from.  Two conventions, each defined here and nowhere else:
+from: partition attach (``manifest.join_partitions``), deletion-vector
+anti-joins, MERGE/DELETE/UPDATE file attribution, Iceberg position- and
+equality-delete joins.  Each keys on ONE per-row column: the raw
+``_metadata.file_path`` of the bare scan (``__rawpath``), which needs no
+per-row work and is deterministic, so filters above the join still reach
+the file source.
 
-- **Raw key.** The partition-manifest join of ``manifest.join_partitions``
-  (every ``attach_partitions`` join, the Delta changelog scans and the
-  ``add_files_delta`` constraint check) keys on the raw
-  ``_metadata.file_path`` column, selected on each scan.  Its manifest is
-  keyed by the scan's own ``inputFiles()`` in the same form
-  (:func:`scan_path`), and each listed file finds its catalog entry on the
-  driver (:func:`listed_key`), so no row pays for a decode and the key stays
-  deterministic.
-- **Normalized key.** The deletion-vector and Iceberg position-delete joins
-  key on :func:`normalized_path_col` of ``_metadata.file_path``, matched
-  against :func:`normalized_key` of a catalog path.  Both sides MUST
-  normalize identically or the join silently misses (for DVs that means
-  deleted rows resurrect with no error).
-
-Scan-side paths are percent-encoded URIs (``file:/a%20b`` for ``/a b``; a
-``+`` stays literal); catalog keys are raw paths/URIs.  So the scan-side
-normalizers strip the scheme then percent-decode, while
-:func:`normalized_key` only strips the scheme."""
+The other side of each join is built on the driver from the scan's own
+listing (:func:`scanned_files`): every listed file is put in
+``_metadata.file_path`` form (:func:`scan_path`) and matched to its catalog
+key by :func:`listed_key` against :func:`normalized_key`.  A listed URI is
+percent-encoded (``file:/a%20b`` for ``/a b``; a ``+`` stays literal); a
+catalog key is a raw path or URI, so catalog keys are normalized only
+here, once per file, never per row."""
 
 from __future__ import annotations
 
 import re
 from urllib.parse import unquote
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from ..errors import BuzzPlanError
 
 # "scheme:" with optional "//" — matches file:, file://, s3a://, hdfs://...
 SCHEME_RE = r"^[a-z0-9]+:(//)?"
 
-
-def normalized_path_col(col: Column) -> Column:
-    """Scan-side file-path column → scheme-stripped, url-decoded path that
-    equals :func:`normalized_key` of the catalog key for the same file."""
-    stripped = F.regexp_replace(col, SCHEME_RE, "")
-    # url_decode is Java's URLDecoder, which reads '+' as a space; in a
-    # path URI '+' is a literal, so it is escaped before decoding
-    decoded = F.try_url_decode(F.replace(stripped, F.lit("+"), F.lit("%2B")))
-    return F.coalesce(decoded, stripped)
+MISS = "catalog join-attach matched no manifest key for scanned file "
 
 
 def normalized_key(key: str) -> str:
-    """Catalog-key (python string) side of the same join."""
+    """A catalog key with its scheme stripped."""
     return re.sub(SCHEME_RE, "", key)
 
 
@@ -60,3 +47,35 @@ def listed_key(uri: str) -> str:
     """A listed file URI → :func:`normalized_key` of its catalog key
     (scheme stripped, percent-escapes decoded; ``+`` stays literal)."""
     return unquote(normalized_key(uri))
+
+
+def input_files(df: DataFrame) -> list[str]:
+    """``df.inputFiles()`` in one JVM round trip: py4j fetches a Java
+    array one element per call, so the array is joined JVM-side.  (A Java
+    ``String[]`` passes to a non-generic, non-varargs method only.)"""
+    joined = df.sparkSession._jvm.org.apache.hadoop.util.StringUtils.join(
+        "\0", df._jdf.inputFiles()
+    )
+    return joined.split("\0") if joined else []
+
+
+class ScanKeys(dict):
+    """Raw scan key → catalog value; a key the scan did not list is a
+    :class:`BuzzPlanError` naming the file, never a ``KeyError``."""
+
+    def __missing__(self, raw: str):
+        raise BuzzPlanError(f"{MISS}{raw}")
+
+
+def scanned_files(df: DataFrame, entries: dict) -> ScanKeys:
+    """Every file ``df`` scans, keyed by its ``_metadata.file_path`` value
+    (:func:`scan_path`), → the value of its catalog key in ``entries``.
+    A scanned file with no catalog key is a :class:`BuzzPlanError`."""
+    by_key = {normalized_key(k): v for k, v in entries.items()}
+    out = ScanKeys()
+    for uri in input_files(df):
+        key = listed_key(uri)
+        if key not in by_key:
+            raise BuzzPlanError(f"{MISS}{uri}")
+        out[scan_path(uri)] = by_key[key]
+    return out

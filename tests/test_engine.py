@@ -412,26 +412,79 @@ def test_join_partitions_raises_for_scanned_file_missing_from_manifest(
     assert out.select("data_col").count() == 6
 
 
-def test_normalized_path_col_keeps_plus_literal(spark):
-    """The normalized file-path key percent-decodes a scanned path but
-    keeps a '+' literal (Java's URLDecoder would read it as a space), and
-    a '%' that is no escape stays raw."""
+def test_input_files_is_one_round_trip(spark, tmp_path, monkeypatch):
+    """Listing a scan's files costs as many py4j calls at 400 files as at
+    40: the Java array is joined JVM-side instead of fetched one element
+    per call, and the listing equals ``inputFiles()``, odd names included.
+    Only this thread's calls count, with the cyclic collector paused: a
+    collection would release earlier tests' Java objects, one call each."""
+    import gc
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from buzz_rust_spark.sources.uris import input_files
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    me = threading.get_ident()
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls[-1] += threading.get_ident() == me
+        return send(*args, **kwargs)
+
+    for n in (40, 400):
+        d = tmp_path / f"n{n}"
+        d.mkdir()
+        for i in range(n):
+            pq.write_table(pa.table({"x": [i]}), str(d / f"f {i}%41+é.parquet"))
+        df = spark.read.schema("x long").parquet(str(d))
+        calls.append(0)
+        gc.collect()
+        gc.disable()
+        monkeypatch.setattr(client, "send_command", counting)
+        try:
+            listed = input_files(df)
+        finally:
+            monkeypatch.undo()
+            gc.enable()
+        assert len(listed) == n
+        assert sorted(listed) == sorted(df.inputFiles())
+    assert calls[0] == calls[1], calls
+
+
+def test_file_identity_misses_are_typed_plan_errors(spark, tmp_path):
+    """A raw scan key looked up with no catalog entry, and a deletion
+    vector whose file the scan does not list, are ``BuzzPlanError``s naming
+    the file, never a ``KeyError`` or silently resurrected rows; a vector
+    on a scanned file with an odd name drops exactly its row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from buzz_rust_spark.sources.uris import normalized_key, normalized_path_col
+    from buzz_rust_spark.sources.deletion_vectors import filter_deleted_rows
+    from buzz_rust_spark.sources.uris import ScanKeys
 
-    cases = {
-        "file:/d/a+b%20c.parquet": "/d/a+b c.parquet",
-        "file:/d/x%2541+.parquet": "/d/x%41+.parquet",
-        "s3a://bkt/k+1/%C3%A9.parquet": "s3a://bkt/k+1/é.parquet",
-        "file:/d/100%+.parquet": "/d/100%+.parquet",
-    }
-    got = spark.createDataFrame([(k,) for k in cases], "p string").select(
-        "p", normalized_path_col(F.col("p")).alias("n")
+    keys = ScanKeys({"file:/t/a.parquet": "a.parquet"})
+    assert keys["file:/t/a.parquet"] == "a.parquet"
+    with pytest.raises(BuzzPlanError, match="scanned file file:/t/b%20c"):
+        keys["file:/t/b%20c.parquet"]
+
+    path = str(tmp_path / "d %41+é" / "f 1.parquet")
+    os.makedirs(os.path.dirname(path))
+    pq.write_table(pa.table({"x": [1, 2, 3]}), path)
+    scan = spark.read.parquet(path).select(
+        "*",
+        F.col("_metadata.file_path").alias("__rawpath"),
+        F.col("_metadata.row_index").alias("__ridx"),
     )
-    assert {r.p: r.n for r in got.collect()} == {
-        k: normalized_key(v) for k, v in cases.items()
-    }
+    kept = filter_deleted_rows(scan, [(path, 1)], spark)
+    assert sorted(r.x for r in kept.collect()) == [1, 3]
+    other = str(tmp_path / "other.parquet")
+    with pytest.raises(BuzzPlanError, match="other.parquet"):
+        filter_deleted_rows(scan, [(other, 0)], spark)
 
 
 def test_join_attach_keeps_stats_filter_pushdown(spark, tmp_path):
