@@ -7,14 +7,16 @@ delta_catalog.rs:150-177), partition values from ``partitionValues`` (always
 strings, delta_catalog.rs:73-77), and the table schema from the Delta metadata
 ``schemaString`` (delta_catalog.rs:133-140).
 
-This rebuild parses the ``_delta_log`` JSON directly (the log format is an
-open spec) instead of depending on delta-spark, then delegates scanning to
+This rebuild parses the ``_delta_log`` directly (the log format is an open
+spec) instead of depending on delta-spark, then delegates scanning to
 :class:`StaticCatalog`.  Delta's ``schemaString`` *is* Spark StructType JSON,
-so the schema conversion is exact.  Checkpoints are supported in all three
-spec forms — classic single-file, complete classic multi-part sets, and
-UUID-named V2 manifests with ``_sidecars`` (the ``v2Checkpoint`` reader
-feature) — discovered from the ``_last_checkpoint`` pointer + a log
-listing; JSON commits after the checkpoint replay on top.
+so the schema conversion is exact.  One function, :func:`replay_log`,
+rebuilds a table's state for both this reader and the writer
+(``delta_writer._log_state``): the newest checkpoint — classic
+single-file, complete classic multi-part sets, or UUID-named V2 manifests
+with ``_sidecars`` (the ``v2Checkpoint`` feature), found from the
+``_last_checkpoint`` pointer or a log listing — then the JSON commits after
+it, as delta-rs loads a snapshot in the reference.
 
 All log IO goes through :class:`~buzz_rust_spark.sources.logstore.LogStore`,
 so tables can live on any filesystem pyarrow speaks — local paths, ``s3://``
@@ -27,7 +29,9 @@ distributed scan reads them through Spark's own connectors (S3A etc.).
 from __future__ import annotations
 
 import json
+from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
 
@@ -60,24 +64,38 @@ def _read_actions(store: LogStore, rel: str) -> list[dict]:
     ]
 
 
-def _demap(obj):
-    # checkpoint map<string,string> columns (partitionValues,
-    # format.options) arrive from to_pylist as [(k, v), ...]
-    if isinstance(obj, list) and obj and all(
-        isinstance(i, tuple) and len(i) == 2 for i in obj
-    ):
-        return dict(obj)
-    if isinstance(obj, dict):
-        return {k: _demap(v) for k, v in obj.items()}
-    return obj
+def _arrow_decoder(typ):
+    """Python decoder for a checkpoint value of Arrow type ``typ``: a struct
+    drops its None fields (so an action has one shape whether it came from
+    JSON or a checkpoint), a map becomes a dict whose None values stay (a
+    null partition value is data), anything else passes through."""
+    if pa.types.is_map(typ):
+        return lambda v: None if v is None else dict(v)
+    if not pa.types.is_struct(typ):
+        return None
+    fields = [(f.name, _arrow_decoder(f.type)) for f in typ]
+
+    def struct(v):
+        if v is None:
+            return None
+        return {
+            n: x if d is None else d(x)
+            for n, d in fields
+            if (x := v[n]) is not None
+        }
+
+    return struct
+
+
+def _table_actions(table) -> list[dict]:
+    """Checkpoint/sidecar rows → replayable action dicts."""
+    decode = _arrow_decoder(pa.struct(list(table.schema)))
+    return [decode(row) for row in table.to_pylist()]
 
 
 def _parquet_actions(store: LogStore, rel: str) -> list[dict]:
     """One checkpoint/sidecar parquet file → replayable action dicts."""
-    return [
-        {k: _demap(v) for k, v in row.items() if v is not None}
-        for row in store.read_parquet(rel).to_pylist()
-    ]
+    return _table_actions(store.read_parquet(rel))
 
 
 def _resolve_checkpoint(
@@ -125,7 +143,7 @@ def _resolve_checkpoint(
 
 
 def _v2_checkpoint_actions(
-    store: LogStore, manifest_rel: str, version: int, table_uri: str
+    store: LogStore, manifest_rel: str, version: int
 ) -> list[dict]:
     """Replayable actions of a V2 checkpoint (PROTOCOL.md "V2 spec
     checkpoint"): the manifest (json or parquet) holds the non-file
@@ -144,7 +162,7 @@ def _v2_checkpoint_actions(
     if cpm is None or int(cpm.get("version", -1)) != version:
         raise BuzzExecutionError(
             f"Delta V2 checkpoint manifest {manifest_rel!r} at "
-            f"{table_uri!r} carries checkpointMetadata.version="
+            f"{store.table_uri!r} carries checkpointMetadata.version="
             f"{None if cpm is None else cpm.get('version')} but is named "
             f"for version {version} — corrupt or misnamed checkpoint"
         )
@@ -160,10 +178,10 @@ def _v2_checkpoint_actions(
 
             import pyarrow.parquet as pq
 
-            table = pq.read_table(io.BytesIO(store.read_bytes_uri(path)))
             out.extend(
-                {k: _demap(v) for k, v in row.items() if v is not None}
-                for row in table.to_pylist()
+                _table_actions(
+                    pq.read_table(io.BytesIO(store.read_bytes_uri(path)))
+                )
             )
         else:
             out.extend(
@@ -183,15 +201,14 @@ def _v2_checkpoint_actions(
 # distributed row filter in to_dataframe; skipping them would resurrect
 # logically-deleted rows, so an unimplemented feature stays a refusal).
 _MAX_READER_VERSION = 2
-_MAX_WRITER_VERSION = 2
 _SUPPORTED_READER_FEATURES = {
     "columnMapping",
     "deletionVectors",
     "typeWidening",
     # UUID-named checkpoint manifests + _sidecars (PROTOCOL.md "V2 spec
-    # checkpoint") — _resolve_checkpoint/_v2_checkpoint_actions read them;
-    # the WRITER still refuses v2Checkpoint tables (writing one correctly
-    # requires emitting v2 checkpoints, which this writer does not)
+    # checkpoint") — _resolve_checkpoint/_v2_checkpoint_actions read them,
+    # and the writer emits them on such tables (delta_writer's
+    # _write_checkpoint)
     "v2Checkpoint",
     # TIMESTAMP_NTZ columns: Spark reads/writes the type natively
     # (schemaString "timestamp_ntz" → TimestampNTZType), and the engine's
@@ -205,11 +222,10 @@ _SUPPORTED_READER_FEATURES = {
 }
 
 
-def _check_protocol(action: dict, table_uri: str) -> None:
+def _check_protocol(proto: dict, table_uri: str) -> None:
     """Delta spec requirement: a client MUST refuse tables whose protocol
     exceeds what it implements.  Silently replaying e.g. a deletion-vector
     table would resurrect logically-deleted rows."""
-    proto = action.get("protocol") or {}
     reader = int(proto.get("minReaderVersion", 1))
     if reader <= _MAX_READER_VERSION:
         return
@@ -293,28 +309,127 @@ def _field_id_schema(meta: dict, fields, table_uri: str):
     )
 
 
-def _replay_actions(
-    actions, state: dict[str, dict], meta: dict, table_uri: str = ""
-) -> None:
-    """Apply one atomic batch (a commit file, or one checkpoint row).
+@dataclass
+class LogState:
+    """A Delta table's state at one version, as :func:`replay_log` rebuilds
+    it.  ``protocol`` is ``{}`` before any protocol action."""
+
+    version: int = -1
+    adds: dict[str, dict] = field(default_factory=dict)  # live, by path
+    meta: dict = field(default_factory=dict)
+    protocol: dict = field(default_factory=dict)
+    txns: dict[str, int] = field(default_factory=dict)  # appId → version
+    domains: dict[str, str] = field(default_factory=dict)  # → configuration
+
+
+def _replay_actions(actions, st: LogState) -> None:
+    """Apply one atomic batch (a commit file, or a whole checkpoint).
 
     Removes apply before adds WITHIN the batch: a deletion-vector update
     commit re-adds the same data file path with a new DV while removing the
     old (path, dvId) entry, and the spec keys log entries by that pair — a
     path-keyed replay processing [add, remove] in file order would otherwise
-    drop the file entirely.  Across batches, order is version order."""
+    drop the file entirely.  Across batches, order is version order.  A
+    ``metaData`` or ``protocol`` action replaces the previous one, ``txn``
+    keeps the highest version per appId, and ``domainMetadata`` sets or
+    (``removed``) drops its domain.  Every add takes one shape, from JSON or
+    a checkpoint alike: None fields dropped, ``partitionValues`` a dict."""
     adds = []
     for action in actions:
-        if "protocol" in action:
-            _check_protocol(action, table_uri)
-        elif "metaData" in action:
-            meta.update(action["metaData"])
-        elif "add" in action:
+        if "add" in action:
             adds.append(action["add"])
         elif "remove" in action:
-            state.pop(action["remove"]["path"], None)
+            st.adds.pop(action["remove"]["path"], None)
+        elif "metaData" in action:
+            st.meta = action["metaData"] or {}
+        elif "protocol" in action:
+            st.protocol = action["protocol"] or {}
+        elif "txn" in action:
+            t = action["txn"]
+            st.txns[t["appId"]] = max(st.txns.get(t["appId"], -1), t["version"])
+        elif "domainMetadata" in action:
+            d = action["domainMetadata"] or {}
+            if d.get("removed"):
+                st.domains.pop(d.get("domain"), None)
+            else:
+                st.domains[d.get("domain")] = d.get("configuration")
     for add in adds:
-        state[add["path"]] = add
+        add = {k: v for k, v in add.items() if v is not None}
+        add["partitionValues"] = add.get("partitionValues") or {}
+        st.adds[add["path"]] = add
+
+
+def replay_log(store: LogStore, version: int | None = None) -> LogState:
+    """The Delta log replay — the one both :class:`DeltaCatalog` and the
+    writer (``delta_writer._log_state``) read a table through: the newest
+    checkpoint at or below ``version`` (the latest commit when None), then
+    the JSON commits after it up to ``version``, as the Delta spec requires.
+
+    The checkpoint comes from the ``_last_checkpoint`` pointer or — the
+    pointer is a HINT: a crash between checkpoint write and pointer write
+    leaves a valid checkpoint unadvertised, and time travel needs one at or
+    below ``version`` — the newest such one in the log listing.  Without
+    one :func:`_resolve_checkpoint` can read, JSON replays from version 0.
+    Every version in the JSON range must have its commit: commits removed
+    by log cleanup raise a typed "missing commit" error instead of dropping
+    their adds from the state silently.  An empty or missing log is version
+    -1 with an empty state.  The replay gates nothing: the reader applies
+    :func:`_check_protocol` to the returned protocol, the writer its own
+    writer gate."""
+    st = LogState()
+    if not store.isdir(_LOG):
+        return st
+    hint = (
+        json.loads(store.read_text(f"{_LOG}/_last_checkpoint"))
+        if store.exists(f"{_LOG}/_last_checkpoint")
+        else None
+    )
+    if hint is not None and (version is None or hint["version"] <= version):
+        cp_version = int(hint["version"])
+        declared_parts = int(hint.get("parts") or 0)
+    else:
+        declared_parts = 0
+        stems = [
+            int(n.split(".", 1)[0])
+            for n in store.list_names(_LOG)
+            if ".checkpoint." in n and n.split(".", 1)[0].isdigit()
+        ]
+        cp_version = max(
+            (v for v in stems if version is None or v <= version), default=None
+        )
+    start = 0
+    if cp_version is not None and (
+        resolved := _resolve_checkpoint(store, cp_version, declared_parts)
+    ):
+        kind, rels = resolved
+        _replay_actions(
+            _v2_checkpoint_actions(store, rels[0], cp_version)
+            if kind == "v2"
+            else [a for rel in rels for a in _parquet_actions(store, rel)],
+            st,
+        )
+        start = cp_version + 1
+    commits = _commit_versions(store)
+    latest = max([start - 1] + [v for v, _ in commits])
+    target = latest if version is None else version
+    if target > latest:
+        raise BuzzExecutionError(
+            f"Delta table {store.table_uri!r} has no version {version}"
+            f" (latest commit seen: {latest})"
+        )
+    gaps = sorted(set(range(start, target + 1)) - {v for v, _ in commits})
+    if gaps:
+        raise BuzzExecutionError(
+            f"Delta log at {store.table_uri!r} is missing commit(s) "
+            f"{gaps[:5]}{'...' if len(gaps) > 5 else ''} in the replay "
+            f"range [{start}, {target}] — history was cleaned up past the "
+            "requested snapshot (re-checkpoint or read a newer version)"
+        )
+    for v, rel in commits:
+        if start <= v <= target:
+            _replay_actions(_read_actions(store, rel), st)
+    st.version = target
+    return st
 
 
 class DeltaCatalog:
@@ -342,93 +457,9 @@ class DeltaCatalog:
         store = self._store
         if not store.isdir(_LOG):
             raise BuzzExecutionError(f"no _delta_log at {self.table_uri!r}")
-
-        live: dict[str, dict] = {}
-        meta: dict = {}
-        start_version = 0
-
-        cp_version: int | None = None
-        resolved: tuple[str, list[str]] | None = None
-        declared_parts = 0
-        if store.exists(f"{_LOG}/_last_checkpoint"):
-            last_cp = json.loads(store.read_text(f"{_LOG}/_last_checkpoint"))
-            cp_version = last_cp["version"]
-            declared_parts = int(last_cp.get("parts") or 0)
-            # time travel below the checkpoint needs a full JSON replay;
-            # only use the checkpoint when it doesn't overshoot the target.
-            if self.version is not None and cp_version > self.version:
-                cp_version = None
-        else:
-            # pointer missing (spec: _last_checkpoint is a HINT — a crash
-            # between checkpoint write and pointer write leaves a valid
-            # checkpoint unadvertised): discover the newest in-range
-            # checkpoint version from the log listing
-            stems = {
-                int(n.split(".", 1)[0])
-                for n in store.list_names(_LOG)
-                if ".checkpoint." in n and n.split(".", 1)[0].isdigit()
-            }
-            in_range = [
-                v
-                for v in stems
-                if self.version is None or v <= self.version
-            ]
-            cp_version = max(in_range) if in_range else None
-        if cp_version is not None:
-            # classic single-file, complete classic multi-part, and
-            # UUID-named V2 (manifest + _sidecars) checkpoints all
-            # read; anything unresolvable falls back to a full JSON
-            # replay, whose contiguity check converts cleaned-up early
-            # commits into a typed error instead of a wrong snapshot
-            resolved = _resolve_checkpoint(store, cp_version, declared_parts)
-            if resolved is None:
-                cp_version = None
-        if cp_version is not None and resolved is not None:
-            kind, rels = resolved
-            if kind == "v2":
-                actions = _v2_checkpoint_actions(
-                    store, rels[0], cp_version, self.table_uri
-                )
-            else:
-                actions = [
-                    a for rel in rels for a in _parquet_actions(store, rel)
-                ]
-            for action in actions:
-                _replay_actions([action], live, meta, self.table_uri)
-            start_version = cp_version + 1
-
-        max_seen = start_version - 1  # checkpoint (if used) covers ≤ this
-        replayed: list[int] = []
-        for version, rel in _commit_versions(store):
-            if version < start_version:
-                continue
-            if self.version is not None and version > self.version:
-                continue
-            max_seen = max(max_seen, version)
-            replayed.append(version)
-            _replay_actions(_read_actions(store, rel), live, meta, self.table_uri)
-
-        if self.version is not None and max_seen < self.version:
-            raise BuzzExecutionError(
-                f"Delta table {self.table_uri!r} has no version {self.version}"
-                f" (latest commit seen: {max_seen})"
-            )
-        # Contiguity: the replay must cover EVERY version in
-        # [start_version, max_seen] — commits removed by log cleanup
-        # (delta.logRetentionDuration) would otherwise drop their adds from
-        # the snapshot SILENTLY (e.g. time travel below a checkpoint whose
-        # early JSON commits are gone, or an INCOMPLETE multi-part set's
-        # fallback).
-        expected = set(range(start_version, max_seen + 1))
-        gaps = sorted(expected - set(replayed))
-        if gaps:
-            raise BuzzExecutionError(
-                f"Delta log at {self.table_uri!r} is missing commit(s) "
-                f"{gaps[:5]}{'...' if len(gaps) > 5 else ''} in the replay "
-                f"range [{start_version}, {max_seen}] — history was cleaned "
-                "up past the requested snapshot (re-checkpoint or read a "
-                "newer version)"
-            )
+        st = replay_log(store, self.version)
+        _check_protocol(st.protocol, self.table_uri)
+        live, meta = st.adds, st.meta
         if not meta:
             raise BuzzExecutionError(
                 f"Delta log at {self.table_uri!r} contains no metaData action"
@@ -436,7 +467,7 @@ class DeltaCatalog:
         # the commit version this snapshot RESOLVED to — the requested
         # time-travel version, or the latest replayed commit (incremental
         # consumers use it as their cursor)
-        self.resolved_version: int = max_seen
+        self.resolved_version: int = st.version
 
         full = StructType.fromJson(json.loads(meta["schemaString"]))
         # logical name → Spark type for the whole declared schema (the
@@ -505,7 +536,7 @@ class DeltaCatalog:
         # raw live add actions (path → add), kept for the metadata-tables
         # surface (sources.metadata_tables.delta_files) — same O(files)
         # the replay already held
-        self._live_adds = dict(live)
+        self._live_adds = live
 
     def _static(self) -> StaticCatalog:
         return StaticCatalog(
@@ -784,7 +815,7 @@ def read_delta_changes(
             if "protocol" in action:
                 # same refusal rules as the snapshot path: replaying e.g.
                 # deletion-vector commits would miscount changed rows
-                _check_protocol(action, table_uri)
+                _check_protocol(action["protocol"] or {}, table_uri)
             elif "metaData" in action:
                 meta.update(action["metaData"])
         if version <= from_version:
@@ -989,7 +1020,7 @@ def read_delta_changelog(
         adds = []
         for action in actions:
             if "protocol" in action:
-                _check_protocol(action, table_uri)
+                _check_protocol(action["protocol"] or {}, table_uri)
             elif "metaData" in action:
                 meta.update(action["metaData"])
             elif "add" in action:

@@ -38,6 +38,8 @@ from ..errors import (
     BuzzExecutionError,
     BuzzSchemaError,
 )
+from .delta_catalog import LogState, replay_log
+from .logstore import LogStore
 from .manifest import CatalogFile, attach_partitions, join_partitions
 from .write_store import commit_with_retry, default_store
 
@@ -113,65 +115,35 @@ def _local_table_dir(table_uri: str) -> str:
 def _log_state(
     log_dir: str, upto: int | None = None
 ) -> tuple[int, dict[str, dict], dict]:
-    """Replay the JSON log: (last_version, live add-actions by path, metaData).
-    Returns (-1, {}, {}) for a fresh table.  ``upto`` bounds the replay at
-    a version (inclusive) — the live set AS OF that version, which
-    :func:`restore_delta` diffs against the current one.  Checkpoint
-    parquet is *not* consulted here — the writer keeps all JSON commits,
-    so a pure-JSON replay is always complete (readers may still use
-    checkpoints).
-
-    Removes apply before adds WITHIN each commit, mirroring the reader's
-    ``_replay_actions``: a DV delete commit from another engine may list the
-    re-add before the remove (the spec keys entries by (path, dvId)), and a
-    path-keyed in-order replay would drop the file — vacuum would then
-    delete a LIVE data file.  Also records the last protocol action so
-    callers don't re-parse the log (see :func:`_current_protocol`)."""
-    live: dict[str, dict] = {}
-    meta: dict = {}
-    last = -1
-    proto = dict(PROTOCOL)
-    domains: dict[str, str] = {}
-    for commit in sorted(glob(os.path.join(log_dir, "*.json"))):
-        v = int(os.path.basename(commit).split(".")[0])
-        if upto is not None and v > upto:
-            break
-        last = v
-        adds: list[dict] = []
-        with open(commit) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "protocol" in action:
-                    proto = action["protocol"] or {}
-                elif "metaData" in action:
-                    meta = action["metaData"]
-                elif "add" in action:
-                    adds.append(action["add"])
-                elif "remove" in action:
-                    live.pop(action["remove"]["path"], None)
-                elif "domainMetadata" in action:
-                    d = action["domainMetadata"] or {}
-                    if d.get("removed"):
-                        domains.pop(d.get("domain"), None)
-                    else:
-                        domains[d.get("domain")] = d.get("configuration")
-        for add in adds:
-            live[add["path"]] = add
+    """(last_version, live add-actions by path, metaData) of the table whose
+    log is ``log_dir``, through the reader's checkpoint-aware
+    :func:`~.delta_catalog.replay_log` — so a table whose early commits
+    :func:`cleanup_delta_log` removed replays whole.  Returns (-1, {}, {})
+    for a fresh table.  ``upto`` bounds the replay at a version (inclusive)
+    — the live set AS OF that version, which :func:`restore_delta` diffs
+    against the current one.  A full (unbounded) replay also records the
+    protocol, metaData and live domainMetadata for
+    :func:`_current_protocol` and :func:`_commit_protocol_extensions`, and
+    runs the writer gate."""
+    st = _replay(log_dir, upto)
     if upto is not None:
         # a BOUNDED (as-of) replay must not poison the module-level
         # protocol cache with historical state, nor re-gate against the
         # as-of protocol — the caller already gated on a full replay
-        return last, live, meta
+        return st.version, st.adds, st.meta
+    proto = st.protocol or dict(PROTOCOL)
     _LAST_PROTOCOL[log_dir] = proto
-    _LAST_META[log_dir] = meta
-    _LAST_DOMAINS[log_dir] = domains
+    _LAST_META[log_dir] = st.meta
+    _LAST_DOMAINS[log_dir] = st.domains
     # the gate runs AFTER the replay: legacy writer version 5 is only
     # acceptable in light of the final metaData (column mapping yes,
     # invariants/generated/CDF/identity no), which a mid-log check can't see
-    _check_writer_protocol(proto, meta, log_dir)
-    return last, live, meta
+    _check_writer_protocol(proto, st.meta, log_dir)
+    return st.version, st.adds, st.meta
+
+
+def _replay(log_dir: str, version: int | None = None) -> LogState:
+    return replay_log(LogStore(os.path.dirname(log_dir)), version)
 
 
 def _check_writer_protocol(proto: dict, meta: dict, log_dir: str) -> None:
@@ -305,8 +277,9 @@ _LAST_DOMAINS: dict[str, dict] = {}
 
 def _current_protocol(log_dir: str) -> dict:
     """Latest committed protocol action (defaults to this writer's base
-    PROTOCOL for legacy tables that never wrote one).  Served from the most
-    recent :func:`_log_state` replay of this log when available."""
+    PROTOCOL for legacy tables that never wrote one), as recorded by the
+    most recent full :func:`_log_state` replay of this log; replays when
+    there is none."""
     proto = _LAST_PROTOCOL.get(log_dir)
     if proto is not None:
         return proto
@@ -892,16 +865,21 @@ def _file_stats_json(path: str, rename: dict[str, str] | None = None) -> str:
     )
 
 
-def _partition_values(relpath: str, partition_by: list[str]) -> dict[str, str]:
+def _partition_values(
+    relpath: str, partition_by: list[str]
+) -> dict[str, str | None]:
     """Parse Hive-style ``col=value`` directories from a staged relative path.
     Values are the url-decoded directory strings — Delta stores partition
     values as strings in the log, matching the reference's string-typed
-    partition semantics (delta_catalog.rs:73-77, README.md:113)."""
-    values: dict[str, str] = {}
+    partition semantics (delta_catalog.rs:73-77, README.md:113) — except
+    Spark's null directory, which the spec logs as null."""
+    values: dict[str, str | None] = {}
     for seg in relpath.split(os.sep)[:-1]:
         col, _, raw = seg.partition("=")
         if col in partition_by:
-            values[col] = unquote(raw)
+            values[col] = (
+                None if raw == "__HIVE_DEFAULT_PARTITION__" else unquote(raw)
+            )
     missing = [c for c in partition_by if c not in values]
     if missing:
         raise BuzzExecutionError(
@@ -911,19 +889,9 @@ def _partition_values(relpath: str, partition_by: list[str]) -> dict[str, str]:
 
 
 def _txn_state(log_dir: str) -> dict[str, int]:
-    """Latest committed ``txn`` version per appId (Delta SetTransaction replay
-    — pure-JSON, like :func:`_log_state`, since the writer keeps all commits)."""
-    seen: dict[str, int] = {}
-    for commit in sorted(glob(os.path.join(log_dir, "*.json"))):
-        with open(commit) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "txn" in action:
-                    t = action["txn"]
-                    seen[t["appId"]] = max(seen.get(t["appId"], -1), t["version"])
-    return seen
+    """Latest committed ``txn`` version per appId (Delta SetTransaction),
+    from the shared replay (:func:`_replay`)."""
+    return _replay(log_dir).txns
 
 
 def _legacy_active_writer_features(meta: dict | None, proto: dict) -> set:
@@ -1882,13 +1850,14 @@ def _write_checkpoint(log_dir: str, version: int) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    proto = _current_protocol(log_dir) or {}
+    st = _replay(log_dir, version)
+    # the table's ACTUAL protocol (a DV-upgraded table checkpointed as
+    # reader1/writer2 would let feature-unaware readers replay it wrongly)
+    proto = st.protocol or dict(PROTOCOL)
     feats = set(proto.get("writerFeatures") or ()) | set(
         proto.get("readerFeatures") or ()
     )
     v2 = "v2Checkpoint" in feats
-
-    _, live, meta = _log_state(log_dir)
 
     # Explicit Arrow schema: the Delta spec requires `add.partitionValues` on
     # EVERY add action (an empty map<string,string> for unpartitioned tables)
@@ -1926,6 +1895,10 @@ def _write_checkpoint(log_dir: str, version: int) -> None:
                         ),
                         ("schemaString", pa.string()),
                         ("partitionColumns", pa.list_(pa.string())),
+                        # column mapping, row tracking, constraints et al.
+                        # live here: a checkpoint without it would drop
+                        # them once the JSON commits are cleaned up
+                        ("configuration", str_map),
                         ("createdTime", pa.int64()),
                     ]
                 ),
@@ -1993,28 +1966,27 @@ def _write_checkpoint(log_dir: str, version: int) -> None:
     def map_items(d: dict | None) -> list:
         return sorted((d or {}).items())
 
-    meta_row = dict(meta)
+    meta_row = dict(st.meta)
     fmt = dict(meta_row.get("format") or {})
     fmt["options"] = map_items(fmt.get("options"))
     meta_row["format"] = fmt
+    meta_row["configuration"] = map_items(meta_row.get("configuration"))
     none_row = {
         "protocol": None, "metaData": None, "add": None, "txn": None,
         "domainMetadata": None,
     }
-    # the table's ACTUAL protocol (a DV-upgraded table checkpointed as
-    # reader1/writer2 would let feature-unaware readers replay it wrongly)
-    rows = [{**none_row, "protocol": _current_protocol(log_dir)}]
+    rows = [{**none_row, "protocol": proto}]
     rows.append({**none_row, "metaData": meta_row})
     rows.extend(
         {
             **none_row,
             "add": {**a, "partitionValues": map_items(a.get("partitionValues"))},
         }
-        for a in live.values()
+        for a in st.adds.values()
     )
     rows.extend(
         {**none_row, "txn": {"appId": app, "version": v, "lastUpdated": None}}
-        for app, v in sorted(_txn_state(log_dir).items())
+        for app, v in sorted(st.txns.items())
     )
     rows.extend(
         {
@@ -2023,9 +1995,7 @@ def _write_checkpoint(log_dir: str, version: int) -> None:
                 "domain": dom, "configuration": cfg, "removed": False,
             },
         }
-        for dom, cfg in sorted(
-            (_LAST_DOMAINS.get(log_dir) or {}).items()
-        )
+        for dom, cfg in sorted(st.domains.items())
     )
     if not v2:
         table = pa.Table.from_pylist(rows, schema=schema)
@@ -3771,19 +3741,8 @@ def clone_delta(
         raise BuzzBadRequestError(
             f"clone: no version {version} (latest: {actual_last})"
         )
-    _, live, meta = _log_state(src_log, upto=version)
-    proto = {"minReaderVersion": 1, "minWriterVersion": 2}
-    for v in range(version + 1):
-        p = os.path.join(src_log, f"{v:020d}.json")
-        if not os.path.exists(p):
-            continue
-        with open(p) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if "protocol" in a:
-                    proto = a["protocol"]
+    st = _replay(src_log, version)
+    live, meta, proto = st.adds, st.meta, st.protocol or dict(PROTOCOL)
     if "rowTracking" in (proto.get("writerFeatures") or []):
         from ..errors import BuzzNotImplementedError
 

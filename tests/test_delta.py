@@ -2732,11 +2732,17 @@ def test_cleanup_delta_log(spark, tmp_path):
     """Metadata cleanup: expired commits + superseded checkpoints below
     the newest checkpoint go away; snapshot reads and time travel at or
     above it keep working; changelog windows reaching below refuse
-    typed; a surviving V2 manifest's sidecars are kept."""
-    from buzz_rust_spark.errors import BuzzExecutionError
+    typed; a surviving V2 manifest's sidecars are kept.  The writer
+    replays the cleaned log through the same checkpoint: appends keep
+    every row, the schema gate holds, vacuum keeps every live file, and
+    restore/clone to a cleaned version refuse typed."""
+    from buzz_rust_spark.errors import BuzzExecutionError, BuzzSchemaError
     from buzz_rust_spark.sources.delta_catalog import read_delta_changelog
     from buzz_rust_spark.sources.delta_writer import (
         cleanup_delta_log,
+        clone_delta,
+        restore_delta,
+        vacuum_delta,
         write_delta,
     )
 
@@ -2772,6 +2778,38 @@ def test_cleanup_delta_log(spark, tmp_path):
         DeltaCatalog("t", root, version=2)
     with pytest.raises(BuzzExecutionError, match="missing commit"):
         read_delta_changelog(spark, root, 0).collect()
+    # the writer reads the cleaned table through its checkpoint too: a
+    # wrong-schema append is refused, and an append (checkpointed at once)
+    # keeps every row
+    with pytest.raises(BuzzSchemaError):
+        write_delta(
+            spark.createDataFrame([("x",)], "other string"), root,
+            mode="append",
+        )
+    write_delta(
+        spark.createDataFrame([(6, "v6")], "id long, v string"), root,
+        mode="append", checkpoint_interval=1,
+    )
+    got = sorted(
+        r.id for r in DeltaCatalog("t", root).to_dataframe(spark).collect()
+    )
+    assert got == [0, 1, 2, 3, 4, 5, 6]
+    # vacuum sees every live file
+    live = {f.key for f in DeltaCatalog("t", root).files}
+    for d, _, names in os.walk(root):
+        for n in names:
+            os.utime(os.path.join(d, n), (1, 1))
+    removed = vacuum_delta(root, retention_hours=0.0)
+    assert not {os.path.join(root, r) for r in removed} & live
+    got = sorted(
+        r.id for r in DeltaCatalog("t", root).to_dataframe(spark).collect()
+    )
+    assert got == [0, 1, 2, 3, 4, 5, 6]
+    # restore and clone to a cleaned version refuse typed
+    with pytest.raises(BuzzExecutionError, match="missing commit"):
+        restore_delta(spark, root, 2)
+    with pytest.raises(BuzzExecutionError, match="missing commit"):
+        clone_delta(root, str(tmp_path / "c"), version=2)
 
 
 def test_cleanup_delta_log_keeps_v2_sidecars(spark, tmp_path):
@@ -2811,6 +2849,105 @@ def test_cleanup_delta_log_keeps_v2_sidecars(spark, tmp_path):
         r.id for r in DeltaCatalog("t", root).to_dataframe(spark).collect()
     )
     assert got == [1, 2, 3, 4, 9, 10]
+
+
+def _features_table(spark, tmp_path):
+    """Row tracking with in-commit timestamps, a null partition value, a
+    rename (column mapping by name), a txn write and a DV delete."""
+    from buzz_rust_spark.sources.delta_writer import (
+        delete_delta,
+        evolve_delta,
+        write_delta,
+    )
+
+    root = str(tmp_path / "t")
+    write_delta(
+        spark.createDataFrame(
+            [(i, f"v{i}", None if i % 3 == 0 else f"p{i % 2}")
+             for i in range(8)],
+            "id long, v string, p string",
+        ).coalesce(1),
+        root, partition_by=["p"],
+        configuration={
+            "delta.enableRowTracking": "true",
+            "delta.enableInCommitTimestamps": "true",
+        },
+    )
+    evolve_delta(root, rename_columns={"v": "val"})
+    write_delta(
+        spark.createDataFrame([(8, "v8", "p0")], "id long, val string, p string"),
+        root, mode="append", partition_by=["p"],
+        txn_app_id="app", txn_version=3,
+    )
+    delete_delta(spark, root, "id = 4", mode="dv")
+    return root
+
+
+def _v2_checkpoint_table(spark, tmp_path):
+    from buzz_rust_spark.sources.delta_writer import write_delta
+
+    root = _v2_fixture_base(spark, tmp_path)
+    _write_commit(
+        os.path.join(root, "_delta_log"), 3,
+        [{"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
+                       "readerFeatures": ["v2Checkpoint"],
+                       "writerFeatures": ["v2Checkpoint"]}}],
+    )
+    write_delta(
+        spark.createDataFrame([(9, "z")], "id long, v string"),
+        root, mode="append", txn_app_id="app", txn_version=1,
+    )
+    return root
+
+
+@pytest.mark.parametrize("build", [_features_table, _v2_checkpoint_table])
+def test_checkpoint_replay_matches_json_replay(spark, tmp_path, build):
+    """The shared log replay reads the same state through a checkpoint as
+    from the JSON commits alone: live adds dict for dict, metaData,
+    protocol, txns and domains."""
+    import shutil
+
+    from buzz_rust_spark.sources.delta_catalog import replay_log
+    from buzz_rust_spark.sources.delta_writer import _write_checkpoint
+    from buzz_rust_spark.sources.logstore import LogStore
+
+    root = build(spark, tmp_path)
+    log = os.path.join(root, "_delta_log")
+    last = replay_log(LogStore(root)).version
+    _write_checkpoint(log, last)
+    json_only = str(tmp_path / "json_only")
+    shutil.copytree(root, json_only)
+    jlog = os.path.join(json_only, "_delta_log")
+    for n in os.listdir(jlog):
+        if ".checkpoint." in n or n == "_last_checkpoint":
+            os.remove(os.path.join(jlog, n))
+    shutil.rmtree(os.path.join(jlog, "_sidecars"), ignore_errors=True)
+    # with the commits it covers gone, only the checkpoint gives the state
+    _drop_commits_below(root, last + 1)
+    want = replay_log(LogStore(json_only))
+    got = replay_log(LogStore(root))
+    assert got.version == want.version == last
+    assert got.adds == want.adds
+    assert got.meta == want.meta
+    assert got.protocol == want.protocol
+    assert got.txns == want.txns
+    assert got.domains == want.domains
+    if build is _features_table:
+        assert got.txns == {"app": 3}
+        adds = list(got.adds.values())
+        assert any(a.get("deletionVector") for a in adds)
+        assert any(a["partitionValues"]["p"] is None for a in adds)
+        conf = got.meta["configuration"]
+        assert conf["delta.columnMapping.mode"] == "name"
+        assert "delta.rowTracking" in got.domains
+    rows = sorted(
+        DeltaCatalog("t", root).to_dataframe(spark).collect(), key=str
+    )
+    assert rows == sorted(
+        DeltaCatalog("t", json_only).to_dataframe(spark).collect(), key=str
+    )
+    if build is _features_table:  # the null partition reads as SQL NULL
+        assert {r.id for r in rows if r.p is None} == {0, 3, 6}
 
 
 def test_delta_id_mode_nested_rewrites_restamp_inner_ids(spark, tmp_path):
