@@ -4399,7 +4399,6 @@ def z55_row_tracking_ict(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_delta,
         write_delta,
         _log_state,
-        _LAST_DOMAINS,
     )
 
     docs = (
@@ -4432,12 +4431,13 @@ def z55_row_tracking_ict(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pre_dv = {
         rel: a.get("baseRowId")
-        for rel, a in _log_state(os.path.join(root, "_delta_log"))[1].items()
+        for rel, a in _log_state(os.path.join(root, "_delta_log")).adds.items()
     }
     delete_delta(spark, root, "doc_id % 7 = 2", mode="dv")
 
     log_dir = os.path.join(root, "_delta_log")
-    _, live, _ = _log_state(log_dir)
+    st = _log_state(log_dir)
+    live = st.adds
     ranges = []
     for rel, a in live.items():
         assert a.get("baseRowId") is not None, rel
@@ -4449,9 +4449,7 @@ def z55_row_tracking_ict(spark: SparkSession, sf_dir: str) -> DataFrame:
             assert a["baseRowId"] == pre_dv[rel]  # DV re-add preserved
     ranges.sort()
     assert all(b1 < a2 for (_, b1), (a2, _) in zip(ranges, ranges[1:]))
-    hwm = jsonmod.loads(
-        _LAST_DOMAINS[log_dir]["delta.rowTracking"]
-    )["rowIdHighWaterMark"]
+    hwm = jsonmod.loads(st.domains["delta.rowTracking"])["rowIdHighWaterMark"]
     assert hwm >= max(b for _, b in ranges)
     icts = []
     for p in sorted(globmod(os.path.join(log_dir, "*.json"))):

@@ -11,7 +11,8 @@ This rebuild parses the ``_delta_log`` directly (the log format is an open
 spec) instead of depending on delta-spark, then delegates scanning to
 :class:`StaticCatalog`.  Delta's ``schemaString`` *is* Spark StructType JSON,
 so the schema conversion is exact.  One function, :func:`replay_log`,
-rebuilds a table's state for both this reader and the writer
+rebuilds a table's state for this reader, the change readers
+(:func:`read_delta_changes`, :func:`read_delta_changelog`) and the writer
 (``delta_writer._log_state``): the newest checkpoint — classic
 single-file, complete classic multi-part sets, or UUID-named V2 manifests
 with ``_sidecars`` (the ``v2Checkpoint`` feature), found from the
@@ -360,7 +361,9 @@ def _replay_actions(actions, st: LogState) -> None:
 
 
 def replay_log(store: LogStore, version: int | None = None) -> LogState:
-    """The Delta log replay — the one both :class:`DeltaCatalog` and the
+    """The Delta log replay — the one :class:`DeltaCatalog`,
+    :func:`read_delta_changes` (the state at ``to_version``),
+    :func:`read_delta_changelog` (the state at ``from_version``) and the
     writer (``delta_writer._log_state``) read a table through: the newest
     checkpoint at or below ``version`` (the latest commit when None), then
     the JSON commits after it up to ``version``, as the Delta spec requires.
@@ -738,31 +741,17 @@ def _log_file(
     )
 
 
-def read_delta_changes(
-    spark: SparkSession,
-    table_uri: str,
-    from_version: int,
-    to_version: int | None = None,
-    region: str | None = None,
-) -> DataFrame:
-    """Rows ADDED in commits ``(from_version, to_version]`` — incremental
-    consumption of an append-history Delta table (change-data-feed-lite),
-    the read side of the :func:`~buzz_rust_spark.streaming.delta_sink`
-    ingestion loop: a downstream job remembers the last version it processed
-    and reads only the new commits' files, never rescanning the table.
-
-    Each row carries ``_commit_version``.  Layout-only commits (OPTIMIZE:
-    ``dataChange=False``) are skipped — they change no content.  Commits that
-    REMOVE data (overwrite) raise: row-level change semantics for overwrites
-    need the full CDF protocol, and silently returning their adds would
-    double-count rewritten rows.
-
-    Scale: O(changed files) driver-side log replay; the data read is a plain
-    distributed scan of exactly the new files, partition values re-attached
-    from the log like any Delta scan."""
-    from pyspark.sql import functions as F
-
-    store = LogStore(table_uri, region=region)
+def _change_window(
+    store: LogStore, table_uri: str, from_version: int, to_version: int | None
+) -> tuple[int, dict[int, list[dict]]]:
+    """``(to_version, {version: actions})`` of the commits in
+    ``(from_version, to_version]``, the window both change readers
+    classify, in version order.  ``to_version`` defaults to the latest
+    commit.  Every commit in the window must be present: one removed by log
+    cleanup would silently drop its rows from an incremental feed (commits
+    at or below ``from_version`` may be cleaned freely — the readers take
+    the table state at the window's edge from :func:`replay_log`).  Protocol
+    actions inside the window pass the same reader gate as a snapshot."""
     # isdir pre-check (same as DeltaCatalog): a missing directory must be the
     # typed error, not a raw pyarrow FileNotFoundError from the listing
     if not store.isdir(_LOG):
@@ -784,42 +773,67 @@ def read_delta_changes(
             f"from_version {from_version} is beyond Delta table "
             f"{table_uri!r}'s latest commit {latest}"
         )
-    # Contiguity over the requested window: commits removed by log cleanup
-    # would silently drop their rows from the incremental feed — permanent
-    # data loss for the consumer.  (Commits AT/BELOW from_version may be
-    # cleaned freely; only (from_version, to_version] must be complete.)
-    window_lo = max(from_version + 1, commits[0][0])
-    have = {v for v, _ in commits if window_lo <= v <= to_version}
-    gaps = sorted(set(range(window_lo, to_version + 1)) - have)
-    if from_version + 1 < commits[0][0] or gaps:
-        missing = (
-            list(range(from_version + 1, commits[0][0])) + gaps
-        )
+    rels = {v: rel for v, rel in commits if from_version < v <= to_version}
+    missing = sorted(
+        set(range(max(from_version, -1) + 1, to_version + 1)) - set(rels)
+    )
+    if missing:
         raise BuzzExecutionError(
             f"Delta log at {table_uri!r} is missing commit(s) "
             f"{missing[:5]}{'...' if len(missing) > 5 else ''} in the change "
             f"window ({from_version}, {to_version}] — history was cleaned up "
             "past the consumer's cursor; re-bootstrap from a full snapshot"
         )
-
-    meta: dict = {}
-    per_version: dict[int, list[dict]] = {}
-    for version, rel in commits:
-        # bound the replay at to_version: a long-lived table must not cost
-        # O(full history) log reads per poll, and the schema applied must
-        # not come from commits after the requested window
-        if version > to_version:
-            break
-        actions = _read_actions(store, rel)
+    window = {v: _read_actions(store, rel) for v, rel in sorted(rels.items())}
+    for actions in window.values():
         for action in actions:
             if "protocol" in action:
-                # same refusal rules as the snapshot path: replaying e.g.
-                # deletion-vector commits would miscount changed rows
+                # replaying e.g. deletion-vector commits unawares would
+                # miscount changed rows
                 _check_protocol(action["protocol"] or {}, table_uri)
-            elif "metaData" in action:
-                meta.update(action["metaData"])
-        if version <= from_version:
-            continue
+    return to_version, window
+
+
+def read_delta_changes(
+    spark: SparkSession,
+    table_uri: str,
+    from_version: int,
+    to_version: int | None = None,
+    region: str | None = None,
+) -> DataFrame:
+    """Rows ADDED in commits ``(from_version, to_version]`` — incremental
+    consumption of an append-history Delta table (change-data-feed-lite),
+    the read side of the :func:`~buzz_rust_spark.streaming.delta_sink`
+    ingestion loop: a downstream job remembers the last version it processed
+    and reads only the new commits' files, never rescanning the table.
+
+    Each row carries ``_commit_version``.  Layout-only commits (OPTIMIZE:
+    ``dataChange=False``) are skipped — they change no content.  Commits that
+    REMOVE data (overwrite) raise: row-level change semantics for overwrites
+    need the full CDF protocol, and silently returning their adds would
+    double-count rewritten rows.
+
+    Commits at or below ``from_version`` may have been removed by
+    :func:`~.delta_writer.cleanup_delta_log`: the schema and protocol come
+    from :func:`replay_log` at ``to_version`` (the newest checkpoint plus
+    the JSON commits after it), and only the window's own commits must be
+    present.  Scale: that replay plus the window's commits on the driver;
+    the data read is a plain distributed scan of exactly the new files,
+    partition values re-attached from the log like any Delta scan."""
+    from pyspark.sql import functions as F
+
+    store = LogStore(table_uri, region=region)
+    to_version, window = _change_window(store, table_uri, from_version, to_version)
+    # the schema applied is the table's AS OF to_version, never a later one
+    st = replay_log(store, to_version)
+    _check_protocol(st.protocol, table_uri)
+    meta = st.meta
+    if not meta:
+        raise BuzzExecutionError(
+            f"Delta log at {table_uri!r} contains no metaData action"
+        )
+    per_version: dict[int, list[dict]] = {}
+    for version, actions in window.items():
         # DV check FIRST: a real DV delete commit carries remove actions
         # too, and the generic overwrite error would mask the specific
         # diagnosis.  An add carrying a DV is a row-level DELETE in
@@ -853,10 +867,6 @@ def read_delta_changes(
         if adds:
             per_version[version] = adds
 
-    if not meta:
-        raise BuzzExecutionError(
-            f"Delta log at {table_uri!r} contains no metaData action"
-        )
     full = StructType.fromJson(json.loads(meta["schemaString"]))
     partition_cols = list(meta.get("partitionColumns", []))
     # column mapping: mode=name scans physical names and renames back;
@@ -970,73 +980,28 @@ def read_delta_changelog(
 
     Deleted rows are read from the removed files, which stay on disk
     inside the vacuum retention window — same availability contract as
-    Delta CDF itself.  The full JSON history through ``to_version`` must
-    be present (the net diff replays live states; checkpoint
-    reconstruction is not implemented for the changelog) — a cleaned log
-    is a typed error, re-bootstrap from a full snapshot."""
+    Delta CDF itself.  The live state at ``from_version`` comes from
+    :func:`replay_log` (the newest checkpoint at or below it plus the JSON
+    commits after it) and the state at ``to_version`` applies the window's
+    commits to it, so commits that :func:`~.delta_writer.cleanup_delta_log`
+    removed are no obstacle while ``from_version`` is at or above the
+    surviving checkpoint.  A window reaching below the cleanup is a typed
+    "missing commit" error: re-bootstrap from a full snapshot."""
     from pyspark.sql import functions as F
 
     from .deletion_vectors import filter_deleted_rows, read_dv_positions
 
     store = LogStore(table_uri, region=region)
-    if not store.isdir(_LOG):
-        raise BuzzExecutionError(f"not a Delta table: {table_uri!r}")
-    commits = _commit_versions(store)
-    if not commits:
-        raise BuzzExecutionError(f"not a Delta table: {table_uri!r}")
-    latest = commits[-1][0]
-    to_version = latest if to_version is None else to_version
-    if to_version > latest:
-        raise BuzzExecutionError(
-            f"Delta table {table_uri!r} has no version {to_version}"
-            f" (latest: {latest})"
-        )
-    if from_version > latest:
-        raise BuzzExecutionError(
-            f"from_version {from_version} is beyond Delta table "
-            f"{table_uri!r}'s latest commit {latest}"
-        )
-    have = {v for v, _ in commits if v <= to_version}
-    missing = sorted(set(range(0, to_version + 1)) - have)
-    if missing:
-        raise BuzzExecutionError(
-            f"Delta log at {table_uri!r} is missing commit(s) "
-            f"{missing[:5]}{'...' if len(missing) > 5 else ''} below the "
-            f"change window's to_version {to_version} — the changelog "
-            "replays full live states and checkpoint reconstruction is "
-            "not implemented; re-bootstrap from a full snapshot"
-        )
-
-    meta: dict = {}
-    live: dict[str, dict] = {}
-    base: dict[str, dict] = {} if from_version < 0 else None
-    window_actions: dict[int, list[dict]] = {}
-    for version, rel in commits:
-        if version > to_version:
-            break
-        actions = _read_actions(store, rel)
-        if version > from_version:
-            window_actions[version] = actions
-        adds = []
-        for action in actions:
-            if "protocol" in action:
-                _check_protocol(action["protocol"] or {}, table_uri)
-            elif "metaData" in action:
-                meta.update(action["metaData"])
-            elif "add" in action:
-                adds.append(action["add"])
-            elif "remove" in action:
-                live.pop(action["remove"]["path"], None)
-        # removes before adds within a commit, mirroring _replay_actions
-        for add in adds:
-            live[add["path"]] = add
-        if version == from_version:
-            base = dict(live)
-    if base is None:
-        raise BuzzExecutionError(
-            f"from_version {from_version} not found in the Delta log at "
-            f"{table_uri!r}"
-        )
+    _, window_actions = _change_window(
+        store, table_uri, from_version, to_version
+    )
+    # the live state at from_version, then the window's commits on top
+    st = replay_log(store, from_version)
+    _check_protocol(st.protocol, table_uri)
+    base = dict(st.adds)
+    for actions in window_actions.values():
+        _replay_actions(actions, st)
+    live, meta = st.adds, st.meta
     if not meta:
         raise BuzzExecutionError(
             f"Delta log at {table_uri!r} contains no metaData action"

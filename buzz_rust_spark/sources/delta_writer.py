@@ -112,38 +112,41 @@ def _local_table_dir(table_uri: str) -> str:
         )
     return table_uri.removeprefix("file://")
 
-def _log_state(
-    log_dir: str, upto: int | None = None
-) -> tuple[int, dict[str, dict], dict]:
-    """(last_version, live add-actions by path, metaData) of the table whose
-    log is ``log_dir``, through the reader's checkpoint-aware
+def _log_state(log_dir: str, upto: int | None = None) -> LogState:
+    """The :class:`~.delta_catalog.LogState` of the table whose log is
+    ``log_dir``, through the reader's checkpoint-aware
     :func:`~.delta_catalog.replay_log` — so a table whose early commits
-    :func:`cleanup_delta_log` removed replays whole.  Returns (-1, {}, {})
-    for a fresh table.  ``upto`` bounds the replay at a version (inclusive)
-    — the live set AS OF that version, which :func:`restore_delta` diffs
-    against the current one.  A full (unbounded) replay also records the
-    protocol, metaData and live domainMetadata for
-    :func:`_current_protocol` and :func:`_commit_protocol_extensions`, and
-    runs the writer gate."""
-    st = _replay(log_dir, upto)
-    if upto is not None:
-        # a BOUNDED (as-of) replay must not poison the module-level
-        # protocol cache with historical state, nor re-gate against the
-        # as-of protocol — the caller already gated on a full replay
-        return st.version, st.adds, st.meta
-    proto = st.protocol or dict(PROTOCOL)
-    _LAST_PROTOCOL[log_dir] = proto
-    _LAST_META[log_dir] = st.meta
-    _LAST_DOMAINS[log_dir] = st.domains
-    # the gate runs AFTER the replay: legacy writer version 5 is only
-    # acceptable in light of the final metaData (column mapping yes,
-    # invariants/generated/CDF/identity no), which a mid-log check can't see
-    _check_writer_protocol(proto, st.meta, log_dir)
-    return st.version, st.adds, st.meta
+    :func:`cleanup_delta_log` removed replays whole.  A fresh table is
+    version -1 with an empty state; a table that never wrote a protocol
+    action gets this writer's base :data:`PROTOCOL`.  ``upto`` bounds the
+    replay at a version (inclusive): the state AS OF it, which
+    :func:`restore_delta` diffs against the current one, :func:`clone_delta`
+    copies and :func:`_write_checkpoint` materializes.
 
-
-def _replay(log_dir: str, version: int | None = None) -> LogState:
-    return replay_log(LogStore(os.path.dirname(log_dir)), version)
+    Every writer entry point (:func:`write_delta`, :func:`merge_delta`,
+    :func:`delete_delta`, :func:`update_delta`, :func:`truncate_delta`,
+    :func:`restore_delta`, :func:`optimize_delta`, :func:`add_files_delta`,
+    :func:`clone_delta`, :func:`vacuum_delta`, :func:`set_delta_properties`,
+    :func:`evolve_delta`) replays once through here and passes the
+    returned state on: to its txn idempotence check (``txns``), to the
+    protocol readers (:func:`_append_only_active`, :func:`_cdf_active`, the
+    protocol basis its retries compare against) and to
+    :func:`_claim_commit`, whose :func:`_commit_protocol_extensions` mints
+    row ids and in-commit timestamps from it.  A lost commit race re-replays
+    here (the retry loops of :func:`write_delta`,
+    :func:`_claim_rewrite_commit` and :func:`set_delta_properties`) and
+    claims from the refreshed state.  An unbounded replay also runs the
+    writer gate."""
+    st = replay_log(LogStore(os.path.dirname(log_dir)), upto)
+    st.protocol = st.protocol or dict(PROTOCOL)
+    if upto is None:
+        # the gate runs AFTER the replay: legacy writer version 5 is only
+        # acceptable in light of the final metaData (column mapping yes,
+        # invariants/generated/CDF/identity no), which a mid-log check
+        # can't see; an as-of replay is not re-gated against a historical
+        # protocol — the caller already gated on a full replay
+        _check_writer_protocol(st.protocol, st.meta, log_dir)
+    return st
 
 
 def _check_writer_protocol(proto: dict, meta: dict, log_dir: str) -> None:
@@ -264,27 +267,6 @@ def _check_writer_protocol(proto: dict, meta: dict, log_dir: str) -> None:
         " data feed and generated columns, writer-5 column mapping, and"
         f" writer-7 features {sorted(SUPPORTED_WRITER_FEATURES)}"
     )
-
-
-# last protocol / metaData / live-domainMetadata state per log_dir by the
-# most recent _log_state replay (every writer entry point calls _log_state
-# first, so these are always fresh when _claim_commit's protocol-extension
-# hook reads them — no second full-log parse per commit)
-_LAST_PROTOCOL: dict[str, dict] = {}
-_LAST_META: dict[str, dict] = {}
-_LAST_DOMAINS: dict[str, dict] = {}
-
-
-def _current_protocol(log_dir: str) -> dict:
-    """Latest committed protocol action (defaults to this writer's base
-    PROTOCOL for legacy tables that never wrote one), as recorded by the
-    most recent full :func:`_log_state` replay of this log; replays when
-    there is none."""
-    proto = _LAST_PROTOCOL.get(log_dir)
-    if proto is not None:
-        return proto
-    _log_state(log_dir)
-    return _LAST_PROTOCOL[log_dir]
 
 
 def _writer_mapping(meta: dict) -> tuple[str, dict[str, str], dict[str, int]]:
@@ -888,12 +870,6 @@ def _partition_values(
     return values
 
 
-def _txn_state(log_dir: str) -> dict[str, int]:
-    """Latest committed ``txn`` version per appId (Delta SetTransaction),
-    from the shared replay (:func:`_replay`)."""
-    return _replay(log_dir).txns
-
-
 def _legacy_active_writer_features(meta: dict | None, proto: dict) -> set:
     """Writer capabilities the CURRENT protocol keeps ACTIVE — what any v7
     protocol minted from it must enumerate (PROTOCOL.md: a v7 protocol
@@ -929,28 +905,28 @@ def _legacy_active_writer_features(meta: dict | None, proto: dict) -> set:
     return out
 
 
-def _append_only_active(meta: dict | None, log_dir: str) -> bool:
-    """Whether the append-only contract is IN FORCE: the property must be
-    set AND — on a v7 protocol — the appendOnly feature listed (a foreign
-    v7 table carrying the property without the feature is inactive per
-    the spec; enforcing it anyway would diverge from conformant
+def _append_only_active(st: LogState) -> bool:
+    """Whether the append-only contract is IN FORCE in ``st``: the property
+    must be set AND — on a v7 protocol — the appendOnly feature listed (a
+    foreign v7 table carrying the property without the feature is inactive
+    per the spec; enforcing it anyway would diverge from conformant
     writers)."""
-    if not _conf_flag(meta, "delta.appendOnly"):
+    if not _conf_flag(st.meta, "delta.appendOnly"):
         return False
-    proto = _current_protocol(log_dir)
+    proto = st.protocol
     if int(proto.get("minWriterVersion", 2)) >= 7:
         return "appendOnly" in (proto.get("writerFeatures") or [])
     return True
 
 
-def _require_not_append_only(meta: dict | None, log_dir: str, op: str) -> None:
+def _require_not_append_only(st: LogState, op: str) -> None:
     """ENFORCE the writer-2 append-only capability (``delta.appendOnly``):
     operations that would emit data-changing ``remove`` actions refuse
     typed.  Appends, insert-only merges, metadata commits, and OPTIMIZE
     (``dataChange=false`` removes) stay legal — that is the capability's
     own contract, which is why the protocol gate can ACCEPT append-only
     tables instead of refusing them wholesale."""
-    if _append_only_active(meta, log_dir):
+    if _append_only_active(st):
         raise BuzzBadRequestError(
             f"{op} would remove data from an APPEND-ONLY table "
             "(delta.appendOnly=true) — the table contract forbids it"
@@ -1001,11 +977,12 @@ def _schema_has_ntz(schema_json: str) -> bool:
 
 
 def _commit_protocol_extensions(
-    log_dir: str, version: int, actions: list[dict]
+    log_dir: str, st: LogState, version: int, actions: list[dict]
 ) -> list[dict]:
     """The per-commit obligations of the stateful writer features, applied
-    CENTRALLY so every commit path (write, merge, delete, optimize,
-    properties, add_files) satisfies them without each knowing:
+    CENTRALLY by :func:`_claim_commit` so every commit path (write, merge,
+    delete, update, truncate, restore, optimize, add_files, clone,
+    properties, evolve) satisfies them without each knowing:
 
     - **inCommitTimestamp**: active tables get ``commitInfo`` as the
       FIRST action with a MONOTONIC ``inCommitTimestamp``
@@ -1025,16 +1002,17 @@ def _commit_protocol_extensions(
       columns — documented boundary).
 
     The effective metaData/protocol come from the commit's OWN actions
-    when present (create / property change), else the replay caches —
-    always fresh, every entry point replays first.  Runs per claim
-    ATTEMPT (retries re-derive at the advanced version) and never
+    when present (create / property change), else from ``st``, the replay
+    the claim is based on; the high water mark and the previous
+    configuration come from ``st`` too.  Runs per claim ATTEMPT (a retry
+    passes the state it re-replayed and its advanced version) and never
     mutates the caller's list."""
     meta = next(
         (a["metaData"] for a in actions if "metaData" in a), None
-    ) or _LAST_META.get(log_dir) or {}
+    ) or st.meta
     proto = next(
         (a["protocol"] for a in actions if "protocol" in a), None
-    ) or _LAST_PROTOCOL.get(log_dir) or {}
+    ) or st.protocol
     wfeats = set(proto.get("writerFeatures") or [])
     conf = meta.get("configuration") or {}
     out = list(actions)
@@ -1043,11 +1021,10 @@ def _commit_protocol_extensions(
         conf.get("delta.enableRowTracking", "").lower() == "true"
         and "rowTracking" in wfeats
     ):
-        domains = _LAST_DOMAINS.get(log_dir) or {}
         hwm = -1
         try:
             hwm = int(
-                json.loads(domains.get("delta.rowTracking") or "{}").get(
+                json.loads(st.domains.get("delta.rowTracking") or "{}").get(
                     "rowIdHighWaterMark", -1
                 )
             )
@@ -1110,9 +1087,7 @@ def _commit_protocol_extensions(
             except (OSError, ValueError):
                 prev = None
         ts = now if prev is None else max(now, int(prev) + 1)
-        prev_conf = (
-            (_LAST_META.get(log_dir) or {}).get("configuration") or {}
-        )
+        prev_conf = st.meta.get("configuration") or {}
         newly_enabled = (
             prev_conf.get("delta.enableInCommitTimestamps", "").lower()
             != "true"
@@ -1148,61 +1123,61 @@ def _commit_protocol_extensions(
 
 
 def _claim_commit(
-    log_dir: str, version: int, actions: list[dict], store=None
-) -> None:
-    """Write the versioned commit JSON, claiming the filename exclusively
-    through the commit store's conditional put (Delta PROTOCOL.md:
-    "Writers MUST only write a given log entry once" — the put-if-absent
-    LogStore contract).  A racing writer gets a typed retryable
-    :class:`~..errors.BuzzCommitConflictError`, never a torn log.
+    log_dir: str, st: LogState, actions: list[dict], store=None
+) -> int:
+    """Write the commit JSON of the version after ``st`` (the replay the
+    operation is based on) and return that version, claiming the filename
+    exclusively through the commit store's conditional put (Delta
+    PROTOCOL.md: "Writers MUST only write a given log entry once" — the
+    put-if-absent LogStore contract).  A racing writer gets a typed
+    retryable :class:`~..errors.BuzzCommitConflictError`, never a torn log.
     Stateful-feature obligations (inCommitTimestamp, rowTracking) are
-    applied here so every commit path satisfies them
+    applied here from ``st`` so every commit path satisfies them
     (:func:`_commit_protocol_extensions`)."""
     if store is None:
         store = default_store()
-    actions = _commit_protocol_extensions(log_dir, version, actions)
+    version = st.version + 1
+    actions = _commit_protocol_extensions(log_dir, st, version, actions)
     commit_path = os.path.join(log_dir, f"{version:020d}.json")
     store.put_if_absent(
         commit_path, "".join(json.dumps(a) + "\n" for a in actions).encode()
     )
+    return version
 
 
 def _claim_rewrite_commit(
     log_dir: str,
-    version: int,
+    st: LogState,
     actions: list[dict],
     touched: dict[str, dict],
-    meta: dict,
     checkpoint_interval: int,
     max_commit_retries: int,
     store,
     op: str,
     require_exact_live: bool = False,
-    basis_protocol: dict | None = None,
+    require_same_protocol: bool = False,
 ) -> int:
     """Claim a REWRITE commit (a fixed action list referencing staged
-    files) through the bounded retry loop: on a lost race, re-read the
-    log, require the metaData and every ``touched`` file entry unchanged
-    (typed :class:`~..errors.BuzzCommitAbortedError` otherwise — the
-    concurrent winner rewrote or deleted a file this operation matched),
-    and re-claim the same actions at the advanced version.  Concurrent
-    appends don't invalidate a rewrite: the operation covers its scan
-    snapshot, exactly as it would have if it had won the original race."""
+    files, based on the replay ``st``) through the bounded retry loop: on a
+    lost race, re-replay the log, require the metaData and every
+    ``touched`` file entry unchanged from ``st`` (typed
+    :class:`~..errors.BuzzCommitAbortedError` otherwise — the concurrent
+    winner rewrote or deleted a file this operation matched), and re-claim
+    the same actions from the fresh state.  Concurrent appends don't
+    invalidate a rewrite: the operation covers its scan snapshot, exactly
+    as it would have if it had won the original race."""
 
-    def _attempt(version_a):
-        _claim_commit(log_dir, version_a, actions, store)
+    def _attempt(st_a: LogState) -> int:
+        version_a = _claim_commit(log_dir, st_a, actions, store)
         if (version_a + 1) % checkpoint_interval == 0:
             _write_checkpoint(log_dir, version_a)
         return version_a
 
-    def _refresh():
-        last_f, live_f, meta_f = _log_state(log_dir)
-        _require_same_delta_basis(meta, meta_f)
-        _require_files_unchanged(touched, live_f, op)
-        if (
-            basis_protocol is not None
-            and _current_protocol(log_dir) != basis_protocol
-        ):
+    def _refresh() -> LogState:
+        st_f = _log_state(log_dir)
+        _require_same_delta_basis(st.meta, st_f.meta)
+        _require_files_unchanged(touched, st_f.adds, op)
+        if require_same_protocol and st_f.protocol != st.protocol:
             # a PROTOCOL-only commit is invisible to the metaData basis
             # comparison, but it can (a) activate append-only against
             # this op's staged removes, or (b) be ROLLED BACK by a staged
@@ -1212,7 +1187,7 @@ def _claim_rewrite_commit(
                 f"{op}: the table's protocol changed concurrently — "
                 "re-run the operation against the current table"
             )
-        if require_exact_live and set(live_f) != set(touched):
+        if require_exact_live and set(st_f.adds) != set(touched):
             # restore: even files the op does not touch invalidate it —
             # a concurrent append surviving would leave the table ≠ the
             # target version's content
@@ -1221,9 +1196,9 @@ def _claim_rewrite_commit(
                 "diff no longer restores the target version; re-run "
                 "against the current table"
             )
-        return last_f + 1
+        return st_f
 
-    return commit_with_retry(_attempt, _refresh, version, max_commit_retries)
+    return commit_with_retry(_attempt, _refresh, st, max_commit_retries)
 
 
 def _stage_and_promote(
@@ -1302,15 +1277,15 @@ def _cdf_enabled(meta: dict | None) -> bool:
     return _conf_flag(meta, "delta.enableChangeDataFeed")
 
 
-def _cdf_active(meta: dict | None, log_dir: str) -> bool:
-    """Whether change-data recording is IN FORCE: the property set AND the
-    protocol carrying the capability (v7 → the feature listed; legacy →
-    writer version ≥ 4).  Emitting cdc actions on a table whose protocol
-    declares CDF inactive would leave a half-recorded change history that
-    conformant writers don't continue."""
-    if not _cdf_enabled(meta):
+def _cdf_active(st: LogState) -> bool:
+    """Whether change-data recording is IN FORCE in ``st``: the property
+    set AND the protocol carrying the capability (v7 → the feature listed;
+    legacy → writer version ≥ 4).  Emitting cdc actions on a table whose
+    protocol declares CDF inactive would leave a half-recorded change
+    history that conformant writers don't continue."""
+    if not _cdf_enabled(st.meta):
         return False
-    proto = _current_protocol(log_dir)
+    proto = st.protocol
     wv = int(proto.get("minWriterVersion", 2))
     if wv >= 7:
         return "changeDataFeed" in (proto.get("writerFeatures") or [])
@@ -1530,9 +1505,8 @@ def write_delta(
     table_dir = _local_table_dir(table_uri)
     log_dir = os.path.join(table_dir, "_delta_log")
     os.makedirs(log_dir, exist_ok=True)
-    last_version, live, meta = _log_state(log_dir)
-    basis_proto_w = dict(_current_protocol(log_dir)) if meta else None
-    version = last_version + 1
+    st = _log_state(log_dir)
+    meta = st.meta
     if meta and configuration:
         # configuration is creation-time here; a no-op restatement of the
         # existing values passes, anything else routes through
@@ -1552,16 +1526,14 @@ def write_delta(
     if txn_app_id is not None:
         # Idempotence check BEFORE staging: a replayed batch costs a log scan,
         # not a data write.
-        if txn_version <= _txn_state(log_dir).get(txn_app_id, -1):
+        if txn_version <= st.txns.get(txn_app_id, -1):
             return None
 
     write_id_cols: list[dict] = []
     id_pinned = None
     if meta:
         if mode == "overwrite":
-            _require_not_append_only(
-                meta, log_dir, "write_delta(mode='overwrite')"
-            )
+            _require_not_append_only(st, "write_delta(mode='overwrite')")
         # absent generated columns are COMPUTED (spec write rule) before
         # the schema comparison would reject them as missing
         df = _apply_generated_columns(df, meta)
@@ -1584,9 +1556,8 @@ def write_delta(
             if evolved:
                 # the evolution committed a new log version — re-base the
                 # write (and its protocol basis) on it
-                last_version, live, meta = _log_state(log_dir)
-                basis_proto_w = dict(_current_protocol(log_dir))
-                version = last_version + 1
+                st = _log_state(log_dir)
+                meta = st.meta
                 declared = StructType.fromJson(json.loads(meta["schemaString"]))
             ours = {f.name: _type_no_metadata(f.dataType) for f in df.schema.fields}
             theirs = {f.name: _type_no_metadata(f.dataType) for f in declared.fields}
@@ -1644,7 +1615,7 @@ def write_delta(
     # between the write and the promote.
     now_ms = int(time.time() * 1000)
     adds = _stage_and_promote(
-        stage_df, table_dir, version, stage_parts, now_ms,
+        stage_df, table_dir, st.version + 1, stage_parts, now_ms,
         meta=meta or None, rules_check=rules_check,
     )
     if id_pinned is not None:
@@ -1660,7 +1631,7 @@ def write_delta(
     #    unchanged — appends commute with other appends; overwrite removes
     #    are recomputed from the fresh live set), and re-claims at the
     #    advanced version — metadata-only, never a re-run of the Spark job.
-    creating = version == 0 or not meta
+    creating = not meta
     expected_schema = {f.name: f.dataType for f in df.schema.fields}
 
     # capabilities used at CREATE need a protocol that declares them:
@@ -1722,10 +1693,9 @@ def write_delta(
         write_id_cols,
     )
 
-    def _attempt(state):
-        version_a, live_a, meta_a = state
+    def _attempt(st_a: LogState) -> int:
         actions: list[dict] = []
-        if meta_a is None:  # still creating the table at this version
+        if not st_a.meta:  # still creating the table at this version
             create_meta = {
                 "id": uuid.uuid4().hex,
                 "format": {"provider": "parquet", "options": {}},
@@ -1739,7 +1709,7 @@ def write_delta(
             actions.append({"protocol": create_protocol})
             actions.append({"metaData": create_meta})
         elif id_bump is not None:
-            actions.append({"metaData": id_bump(meta_a)})
+            actions.append({"metaData": id_bump(st_a.meta)})
         if mode == "overwrite":
             actions.extend(
                 {
@@ -1749,7 +1719,7 @@ def write_delta(
                         "dataChange": True,
                     }
                 }
-                for path in sorted(live_a)
+                for path in sorted(st_a.adds)
             )
         actions.extend({"add": a} for a in adds)
         if txn_app_id is not None:
@@ -1762,16 +1732,17 @@ def write_delta(
                     }
                 }
             )
-        _claim_commit(log_dir, version_a, actions, store)
+        version_a = _claim_commit(log_dir, st_a, actions, store)
         if (version_a + 1) % checkpoint_interval == 0:
             _write_checkpoint(log_dir, version_a)
         return version_a
 
-    def _refresh():
-        last_f, live_f, meta_f = _log_state(log_dir)
-        if txn_app_id is not None and txn_version <= _txn_state(
-            log_dir
-        ).get(txn_app_id, -1):
+    def _refresh() -> LogState | None:
+        st_f = _log_state(log_dir)
+        meta_f = st_f.meta
+        if txn_app_id is not None and txn_version <= st_f.txns.get(
+            txn_app_id, -1
+        ):
             return None  # a peer committed our txn: idempotent no-op
         if creating:
             # the racing winner CREATED the table — our staged files carry
@@ -1786,9 +1757,7 @@ def write_delta(
                 "delta.columnMapping.mode", "none"
             ) or "none"
             conf_f = dict((meta_f or {}).get("configuration") or {})
-            if mode == "overwrite" and _append_only_active(
-                meta_f, log_dir
-            ):
+            if mode == "overwrite" and _append_only_active(st_f):
                 # the entry gate only saw OUR (pre-create) meta; the
                 # winner's table may be append-only — removing its live
                 # files would silently violate the contract.  Same abort
@@ -1814,10 +1783,7 @@ def write_delta(
                 )
         else:
             _require_same_delta_basis(meta, meta_f)
-            if (
-                mode == "overwrite"
-                and _current_protocol(log_dir) != basis_proto_w
-            ):
+            if mode == "overwrite" and st_f.protocol != st.protocol:
                 # protocol-only commits (e.g. appendOnly activation) are
                 # invisible to the metaData comparison — an overwrite's
                 # removes must not land past one
@@ -1826,14 +1792,9 @@ def write_delta(
                     "changed concurrently — re-run against the current "
                     "table"
                 )
-        return (last_f + 1, live_f, meta_f)
+        return st_f
 
-    return commit_with_retry(
-        _attempt,
-        _refresh,
-        (version, live, None if creating else meta),
-        max_commit_retries,
-    )
+    return commit_with_retry(_attempt, _refresh, st, max_commit_retries)
 
 
 def _write_checkpoint(log_dir: str, version: int) -> None:
@@ -1850,10 +1811,10 @@ def _write_checkpoint(log_dir: str, version: int) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    st = _replay(log_dir, version)
+    st = _log_state(log_dir, version)
     # the table's ACTUAL protocol (a DV-upgraded table checkpointed as
     # reader1/writer2 would let feature-unaware readers replay it wrongly)
-    proto = st.protocol or dict(PROTOCOL)
+    proto = st.protocol
     feats = set(proto.get("writerFeatures") or ()) | set(
         proto.get("readerFeatures") or ()
     )
@@ -2120,8 +2081,9 @@ def optimize_delta(
     Content-identical, still ``dataChange=False``."""
     table_dir = _local_table_dir(table_uri)
     log_dir = os.path.join(table_dir, "_delta_log")
-    last_version, live, meta = _log_state(log_dir)
-    if last_version < 0:
+    st = _log_state(log_dir)
+    live, meta = st.adds, st.meta
+    if st.version < 0:
         raise BuzzBadRequestError(f"not a Delta table: {table_uri!r}")
     # the rewrite is read+coalesce+write, which RE-ENCODES parquet and
     # DROPS footer field ids (Spark schema inference discards them) — on
@@ -2203,11 +2165,12 @@ def optimize_delta(
         },
     )
 
-    version = last_version + 1
     now_ms = int(time.time() * 1000)
     new_adds: list[dict] = []
     removed: list[str] = []
-    staging = os.path.join(table_dir, f".optimize-{version:020d}-{uuid.uuid4().hex[:8]}")
+    staging = os.path.join(
+        table_dir, f".optimize-{st.version + 1:020d}-{uuid.uuid4().hex[:8]}"
+    )
     for key, adds in sorted(to_compact.items()):
         paths = [os.path.join(table_dir, a["path"]) for a in adds]
         total = sum(a["size"] for a in adds)
@@ -2351,10 +2314,8 @@ def optimize_delta(
     ]
     actions.extend({"add": a} for a in new_adds)
     return _claim_rewrite_commit(
-        log_dir, version, actions,
-        {rel: live[rel] for rel in removed},
-        meta, checkpoint_interval, max_commit_retries, store,
-        "optimize_delta",
+        log_dir, st, actions, {rel: live[rel] for rel in removed},
+        checkpoint_interval, max_commit_retries, store, "optimize_delta",
     )
 
 
@@ -2692,10 +2653,7 @@ def _merge_delta_generalized(
     clauses: list[dict],
     insert_enabled: bool,
     not_matched_condition: str | None,
-    last_version: int,
-    live: dict,
-    meta: dict,
-    basis_proto: dict,
+    st: LogState,
     checkpoint_interval: int,
     max_commit_retries: int,
     store,
@@ -2730,6 +2688,7 @@ def _merge_delta_generalized(
     )
 
     by_source = by_source or []
+    live, meta = st.adds, st.meta
     schema = _declared_schema(meta)
     names = [f.name for f in schema.fields]
     partition_by = list(meta.get("partitionColumns", []))
@@ -2814,7 +2773,7 @@ def _merge_delta_generalized(
                 )
                 touched = sorted(rel_of[r["__rawpath"]] for r in hits)
 
-        version = last_version + 1
+        version = st.version + 1
         now_ms = int(time.time() * 1000)
 
         rewritten = None
@@ -2889,7 +2848,7 @@ def _merge_delta_generalized(
             return None  # insert-only merge with an empty insert set
 
         cdc_actions: list[dict] = []
-        if _cdf_active(meta, log_dir):
+        if _cdf_active(st):
             frames = []
             for mk in (matched, bs_marked):
                 if mk is None:
@@ -2951,10 +2910,9 @@ def _merge_delta_generalized(
             # the inserted values
             actions.insert(0, {"metaData": id_bump(meta)})
         return _claim_rewrite_commit(
-            log_dir, version, actions,
-            {rel: live[rel] for rel in touched},
-            meta, checkpoint_interval, max_commit_retries, store,
-            "merge_delta", basis_protocol=basis_proto if touched else None,
+            log_dir, st, actions, {rel: live[rel] for rel in touched},
+            checkpoint_interval, max_commit_retries, store, "merge_delta",
+            require_same_protocol=bool(touched),
         )
     finally:
         source.unpersist()
@@ -3076,21 +3034,21 @@ def merge_delta(
         )
     table_dir = _local_table_dir(table_uri)
     log_dir = os.path.join(table_dir, "_delta_log")
-    last_version, live, meta = _log_state(log_dir)
-    if last_version < 0:
+    st = _log_state(log_dir)
+    live, meta = st.adds, st.meta
+    if st.version < 0:
         raise BuzzBadRequestError(f"not a Delta table: {table_uri!r}")
     if txn_app_id is not None:
         # SetTransaction idempotence BEFORE any staging: a replayed
         # micro-batch costs a log scan, not a merge (the streaming
         # upsert sink's exactly-once contract, like write_delta's)
-        if txn_version <= _txn_state(log_dir).get(txn_app_id, -1):
+        if txn_version <= st.txns.get(txn_app_id, -1):
             return None
     _require_id_rewritable(meta, table_uri, "merge_delta")
-    basis_proto = dict(_current_protocol(log_dir))
     if when_matched is not None or by_source_clauses:
         # an insert-only merge emits adds only — legal on append-only
         _require_not_append_only(
-            meta, log_dir, f"merge_delta(when_matched={when_matched!r})"
+            st, f"merge_delta(when_matched={when_matched!r})"
         )
     schema = _declared_schema(meta)
     names = [f.name for f in schema.fields]
@@ -3137,8 +3095,8 @@ def merge_delta(
         # "unchanged".
         source, evolved = _merge_write_schema(source, schema, table_uri, store)
         if evolved:
-            last_version, live, meta = _log_state(log_dir)
-            basis_proto = dict(_current_protocol(log_dir))
+            st = _log_state(log_dir)
+            live, meta = st.adds, st.meta
             schema = _declared_schema(meta)
             names = [f.name for f in schema.fields]
         ours = {f.name: _type_no_metadata(f.dataType) for f in source.schema.fields}
@@ -3177,8 +3135,7 @@ def merge_delta(
         )
         return _merge_delta_generalized(
             spark, table_dir, log_dir, source, on, clauses,
-            when_not_matched == "insert", not_matched_condition,
-            last_version, live, meta, basis_proto,
+            when_not_matched == "insert", not_matched_condition, st,
             checkpoint_interval, max_commit_retries, store,
             txn_app_id, txn_version, by_source=bys, insert_values=ivs,
         )
@@ -3227,7 +3184,7 @@ def merge_delta(
             touched = sorted(rel_of[r["__rawpath"]] for r in hits)
             tgt_keys = cand_df.select(*on)
 
-        version = last_version + 1
+        version = st.version + 1
         now_ms = int(time.time() * 1000)
         adds: list[dict] = []
 
@@ -3280,7 +3237,7 @@ def merge_delta(
         # images — recording them spares every downstream CDF reader the
         # net per-file diff (and its read of the full rewritten files)
         cdc_actions: list[dict] = []
-        if _cdf_active(meta, log_dir):
+        if _cdf_active(st):
             frames = []
             if touched:
                 matched_tgt = touched_df.join(
@@ -3342,10 +3299,9 @@ def merge_delta(
             # the inserted values
             actions.insert(0, {"metaData": id_bump(meta)})
         return _claim_rewrite_commit(
-            log_dir, version, actions,
-            {rel: live[rel] for rel in touched},
-            meta, checkpoint_interval, max_commit_retries, store,
-            "merge_delta", basis_protocol=basis_proto if touched else None,
+            log_dir, st, actions, {rel: live[rel] for rel in touched},
+            checkpoint_interval, max_commit_retries, store, "merge_delta",
+            require_same_protocol=bool(touched),
         )
     finally:
         source.unpersist()
@@ -3448,25 +3404,25 @@ def delete_delta(
         raise BuzzBadRequestError(f"delete mode must be cow|dv, got {mode!r}")
     table_dir = _local_table_dir(table_uri)
     log_dir = os.path.join(table_dir, "_delta_log")
-    last_version, live, meta = _log_state(log_dir)
-    if last_version < 0:
+    st = _log_state(log_dir)
+    live, meta = st.adds, st.meta
+    if st.version < 0:
         raise BuzzBadRequestError(f"not a Delta table: {table_uri!r}")
     _require_id_rewritable(meta, table_uri, "delete_delta")
-    basis_proto = dict(_current_protocol(log_dir))
-    _require_not_append_only(meta, log_dir, "delete_delta")
+    _require_not_append_only(st, "delete_delta")
     if not live:
         return None
     partition_by = list(meta.get("partitionColumns", []))
 
     scan, rel_of, old_pos_df = _dml_scan(spark, table_dir, meta, live)
-    version = last_version + 1
+    version = st.version + 1
     now_ms = int(time.time() * 1000)
 
     def _stage_cdc(cond) -> list[dict]:
         """Recorded change data for this DELETE (deleted rows,
         ``_change_type='delete'``) when the table enables CDF — staged
         once, reused across claim retries like the data files."""
-        if not _cdf_active(meta, log_dir):
+        if not _cdf_active(st):
             return []
         names = [f.name for f in _declared_schema(meta).fields]
         changes = (
@@ -3557,7 +3513,7 @@ def delete_delta(
             rel: r for rel, r in desc_by_rel.items() if rel not in fully_gone
         }
         actions: list[dict] = []
-        proto = _current_protocol(log_dir)
+        proto = st.protocol
         if int(proto.get("minReaderVersion", 1)) < 3 or "deletionVectors" not in (
             proto.get("writerFeatures") or []
         ):
@@ -3615,10 +3571,9 @@ def delete_delta(
         # retry validation includes the old DV descriptor: the new bitmap
         # was unioned from it, so a concurrently-replaced DV must abort
         return _claim_rewrite_commit(
-            log_dir, version, actions,
-            {rel: live[rel] for rel in desc_by_rel},
-            meta, checkpoint_interval, max_commit_retries, store,
-            "delete_delta(dv)", basis_protocol=basis_proto,
+            log_dir, st, actions, {rel: live[rel] for rel in desc_by_rel},
+            checkpoint_interval, max_commit_retries, store,
+            "delete_delta(dv)", require_same_protocol=True,
         )
 
     if not matched:
@@ -3652,10 +3607,9 @@ def delete_delta(
     actions.extend({"add": a} for a in adds)
     actions.extend(cdc_actions)
     return _claim_rewrite_commit(
-        log_dir, version, actions,
-        {rel: live[rel] for rel in touched},
-        meta, checkpoint_interval, max_commit_retries, store,
-        "delete_delta", basis_protocol=basis_proto,
+        log_dir, st, actions, {rel: live[rel] for rel in touched},
+        checkpoint_interval, max_commit_retries, store, "delete_delta",
+        require_same_protocol=True,
     )
 
 
@@ -3675,11 +3629,11 @@ def truncate_delta(
     committed version, or None when the table is already empty."""
     table_dir = _local_table_dir(table_uri)
     log_dir = os.path.join(table_dir, "_delta_log")
-    last_version, live, meta = _log_state(log_dir)
-    if last_version < 0:
+    st = _log_state(log_dir)
+    if st.version < 0:
         raise BuzzBadRequestError(f"not a Delta table: {table_uri!r}")
-    _require_not_append_only(meta, log_dir, "truncate_delta")
-    if not live:
+    _require_not_append_only(st, "truncate_delta")
+    if not st.adds:
         return None
     now_ms = int(time.time() * 1000)
     actions = [
@@ -3690,12 +3644,11 @@ def truncate_delta(
                 "dataChange": True,
             }
         }
-        for rel in sorted(live)
+        for rel in sorted(st.adds)
     ]
     return _claim_rewrite_commit(
-        log_dir, last_version + 1, actions,
-        dict(live), meta, checkpoint_interval, max_commit_retries, store,
-        "truncate_delta",
+        log_dir, st, actions, dict(st.adds), checkpoint_interval,
+        max_commit_retries, store, "truncate_delta",
     )
 
 
@@ -3732,17 +3685,16 @@ def clone_delta(
 
     src_dir = _local_table_dir(src_uri)
     src_log = os.path.join(src_dir, "_delta_log")
-    actual_last, _, _ = _log_state(src_log)
-    if actual_last < 0:
+    st = _log_state(src_log)
+    if st.version < 0:
         raise BuzzBadRequestError(f"not a Delta table: {src_uri!r}")
-    if version is None:
-        version = actual_last
-    if version < 0 or version > actual_last:
-        raise BuzzBadRequestError(
-            f"clone: no version {version} (latest: {actual_last})"
-        )
-    st = _replay(src_log, version)
-    live, meta, proto = st.adds, st.meta, st.protocol or dict(PROTOCOL)
+    if version is not None and version != st.version:
+        if version < 0 or version > st.version:
+            raise BuzzBadRequestError(
+                f"clone: no version {version} (latest: {st.version})"
+            )
+        st = _log_state(src_log, version)
+    live, meta, proto = st.adds, st.meta, st.protocol
     if "rowTracking" in (proto.get("writerFeatures") or []):
         from ..errors import BuzzNotImplementedError
 
@@ -3754,7 +3706,8 @@ def clone_delta(
         )
     dst_dir = _local_table_dir(dst_uri)
     dst_log = os.path.join(dst_dir, "_delta_log")
-    if _log_state(dst_log)[0] >= 0:
+    dst = _log_state(dst_log)
+    if dst.version >= 0:
         raise BuzzBadRequestError(
             f"clone destination {dst_uri!r} is already a Delta table"
         )
@@ -3778,8 +3731,7 @@ def clone_delta(
                 ),
             }
         actions.append({"add": a})
-    _claim_commit(dst_log, 0, actions, store)
-    return 0
+    return _claim_commit(dst_log, dst, actions, store)
 
 
 def update_delta(
@@ -3831,12 +3783,12 @@ def update_delta(
         )
     table_dir = _local_table_dir(table_uri)
     log_dir = os.path.join(table_dir, "_delta_log")
-    last_version, live, meta = _log_state(log_dir)
-    if last_version < 0:
+    st = _log_state(log_dir)
+    live, meta = st.adds, st.meta
+    if st.version < 0:
         raise BuzzBadRequestError(f"not a Delta table: {table_uri!r}")
     _require_id_rewritable(meta, table_uri, "update_delta")
-    basis_proto = dict(_current_protocol(log_dir))
-    _require_not_append_only(meta, log_dir, "update_delta")
+    _require_not_append_only(st, "update_delta")
     declared = _declared_schema(meta)
     names = [f.name for f in declared.fields]
     unknown = sorted(set(set_exprs) - set(names))
@@ -3860,7 +3812,7 @@ def update_delta(
     cond = F.expr(predicate) if predicate is not None else F.lit(True)
     hit = cond.eqNullSafe(F.lit(True))
     scan, rel_of, old_pos_df = _dml_scan(spark, table_dir, meta, live)
-    version = last_version + 1
+    version = st.version + 1
     now_ms = int(time.time() * 1000)
 
     def _transform(pre_df):
@@ -3917,7 +3869,7 @@ def update_delta(
                 tag="update", meta=meta, rules_check=rules_check,
             )
             cdc_actions = []
-            if _cdf_active(meta, log_dir):
+            if _cdf_active(st):
                 frames = [
                     pre_full.select(*names).withColumn(
                         "_change_type", F.lit("update_preimage")
@@ -3945,7 +3897,7 @@ def update_delta(
             >= _rel_num_records(table_dir, rel, live[rel])
         }
         actions: list[dict] = []
-        proto = _current_protocol(log_dir)
+        proto = st.protocol
         if int(proto.get("minReaderVersion", 1)) < 3 or (
             "deletionVectors" not in (proto.get("writerFeatures") or [])
         ):
@@ -3994,10 +3946,9 @@ def update_delta(
         actions.extend({"add": a} for a in adds)
         actions.extend(cdc_actions)
         return _claim_rewrite_commit(
-            log_dir, version, actions,
-            {rel: live[rel] for rel in desc_by_rel},
-            meta, checkpoint_interval, max_commit_retries, store,
-            "update_delta(dv)", basis_protocol=basis_proto,
+            log_dir, st, actions, {rel: live[rel] for rel in desc_by_rel},
+            checkpoint_interval, max_commit_retries, store,
+            "update_delta(dv)", require_same_protocol=True,
         )
 
     hits = scan.where(hit).select("__rawpath").distinct().collect()
@@ -4019,7 +3970,7 @@ def update_delta(
             meta=meta, rules_check=rules_check,
         )
         cdc_actions = []
-        if _cdf_active(meta, log_dir):
+        if _cdf_active(st):
             frames = [
                 pre.select(*names).withColumn(
                     "_change_type", F.lit("update_preimage")
@@ -4045,10 +3996,9 @@ def update_delta(
     actions.extend({"add": a} for a in adds)
     actions.extend(cdc_actions)
     return _claim_rewrite_commit(
-        log_dir, version, actions,
-        {rel: live[rel] for rel in touched},
-        meta, checkpoint_interval, max_commit_retries, store,
-        "update_delta", basis_protocol=basis_proto,
+        log_dir, st, actions, {rel: live[rel] for rel in touched},
+        checkpoint_interval, max_commit_retries, store, "update_delta",
+        require_same_protocol=True,
     )
 
 
@@ -4076,15 +4026,16 @@ def restore_delta(
     the same availability contract as time travel itself."""
     table_dir = _local_table_dir(table_uri)
     log_dir = os.path.join(table_dir, "_delta_log")
-    last_version, live, meta = _log_state(log_dir)
-    if last_version < 0:
+    st = _log_state(log_dir)
+    live, meta = st.adds, st.meta
+    if st.version < 0:
         raise BuzzBadRequestError(f"not a Delta table: {table_uri!r}")
-    if version > last_version or version < 0:
+    if version > st.version or version < 0:
         raise BuzzBadRequestError(
-            f"restore: no version {version} (latest: {last_version})"
+            f"restore: no version {version} (latest: {st.version})"
         )
-    basis_proto = dict(_current_protocol(log_dir))
-    _, target_live, target_meta = _log_state(log_dir, upto=version)
+    target = _log_state(log_dir, upto=version)
+    target_live, target_meta = target.adds, target.meta
 
     def _key(entry: dict):
         # identity = path + deletion-vector descriptor: a DV change is a
@@ -4111,7 +4062,7 @@ def restore_delta(
     if not to_remove and not to_add and not restore_meta:
         return None  # already at the target content
     if to_remove:
-        _require_not_append_only(meta, log_dir, "restore_delta")
+        _require_not_append_only(st, "restore_delta")
     from .deletion_vectors import dv_relative_path
 
     def _needed_paths(a: dict):
@@ -4160,11 +4111,9 @@ def restore_delta(
     # leave the table ≠ the target version's content, so the retry aborts
     # on ANY live-set change (require_exact_live)
     return _claim_rewrite_commit(
-        log_dir, last_version + 1, actions,
-        dict(live),
-        meta, checkpoint_interval, max_commit_retries, store,
-        "restore_delta", require_exact_live=True,
-        basis_protocol=basis_proto if to_remove else None,
+        log_dir, st, actions, dict(live), checkpoint_interval,
+        max_commit_retries, store, "restore_delta", require_exact_live=True,
+        require_same_protocol=bool(to_remove),
     )
 
 
@@ -4511,8 +4460,9 @@ def add_files_delta(
         return None
     table_dir = _local_table_dir(table_uri)
     log_dir = os.path.join(table_dir, "_delta_log")
-    last_version, live, meta = _log_state(log_dir)
-    if last_version < 0:
+    st = _log_state(log_dir)
+    live, meta = st.adds, st.meta
+    if st.version < 0:
         raise BuzzBadRequestError(f"not a Delta table: {table_uri!r}")
     cm_mode, phys, cm_ids = _writer_mapping(meta)
     declared = _declared_schema(meta)
@@ -4646,15 +4596,8 @@ def add_files_delta(
         # explicit insert; allowExplicitInsert does not gate it)
         actions.insert(0, {"metaData": id_bump(meta)})
     return _claim_rewrite_commit(
-        log_dir,
-        last_version + 1,
-        actions,
-        {},
-        meta,
-        checkpoint_interval,
-        max_commit_retries,
-        store,
-        "add_files_delta",
+        log_dir, st, actions, {}, checkpoint_interval, max_commit_retries,
+        store, "add_files_delta",
     )
 
 
@@ -4669,11 +4612,14 @@ def cleanup_delta_log(
     checkpoint version, once older than ``retention_hours`` (Delta's
     default interval is 30 days).  The newest checkpoint and everything
     at/after its version always survive — snapshot reads and time travel
-    at/above it keep working; changelog windows reaching below the
-    cleanup refuse with the typed missing-commit error (re-bootstrap
-    from a full snapshot, the documented contract).  V2 checkpoints'
-    ``_sidecars`` files survive while ANY surviving manifest references
-    them.  Returns the removed (log-relative) names — or would-remove
+    at/above it keep working, and so do the change readers
+    (:func:`~.delta_catalog.read_delta_changes`,
+    :func:`~.delta_catalog.read_delta_changelog`) for a cursor at/above
+    it: they replay the checkpoint plus the commits after it.  Windows
+    reaching below the cleanup refuse with the typed missing-commit error
+    (re-bootstrap from a full snapshot, the documented contract).  V2
+    checkpoints' ``_sidecars`` files survive while ANY surviving manifest
+    references them.  Returns the removed (log-relative) names — or would-remove
     under ``dry_run``."""
     from .delta_catalog import (
         _parquet_actions,
@@ -4775,8 +4721,9 @@ def vacuum_delta(
     walk touches only file metadata — O(files) driver work, no data reads."""
     table_dir = _local_table_dir(table_uri)
     log_dir = os.path.join(table_dir, "_delta_log")
-    last_version, live, _ = _log_state(log_dir)
-    if last_version < 0:
+    st = _log_state(log_dir)
+    live = st.adds
+    if st.version < 0:
         raise BuzzBadRequestError(f"not a Delta table: {table_uri!r}")
     cutoff = time.time() - retention_hours * 3600.0
     # deletion-vector sidecars referenced by the CURRENT snapshot are as
@@ -4860,8 +4807,9 @@ def set_delta_properties(
         )
     table_dir = _local_table_dir(table_uri)
     log_dir = os.path.join(table_dir, "_delta_log")
-    last_version, _live, meta = _log_state(log_dir)
-    if last_version < 0:
+    st = _log_state(log_dir)
+    _live, meta = st.adds, st.meta
+    if st.version < 0:
         raise BuzzBadRequestError(f"not a Delta table: {table_uri!r}")
     new_checks = {
         k: v
@@ -4882,15 +4830,15 @@ def set_delta_properties(
             "set_delta_properties(add constraint)",
         )
 
-    def _actions(meta_x: dict) -> list[dict]:
-        conf = dict(meta_x.get("configuration") or {})
+    def _actions(st_x: LogState) -> list[dict]:
+        conf = dict(st_x.meta.get("configuration") or {})
         conf.update(set_conf)
         for k in unset:
             conf.pop(k, None)
-        new_meta = dict(meta_x)
+        new_meta = dict(st_x.meta)
         new_meta["configuration"] = conf
         out: list[dict] = []
-        proto = _current_protocol(log_dir)
+        proto = st_x.protocol
         wv = int(proto.get("minWriterVersion", 2))
         if set_conf.get("delta.enableChangeDataFeed", "").lower() == "true":
             has = wv in (4, 5, 6) or (
@@ -4933,7 +4881,7 @@ def set_delta_properties(
                 "minReaderVersion": int(proto.get("minReaderVersion", 1)),
                 "minWriterVersion": 7,
                 "writerFeatures": sorted(
-                    _legacy_active_writer_features(meta, proto)
+                    _legacy_active_writer_features(st_x.meta, proto)
                     | {"inCommitTimestamp"}
                 ),
                 **(
@@ -4987,17 +4935,11 @@ def set_delta_properties(
         out.append({"metaData": new_meta})
         return out
 
-    def _attempt(state):
-        version_a, meta_a = state
-        _claim_commit(log_dir, version_a, _actions(meta_a), store)
-        return version_a
-
-    def _refresh():
-        last_f, _lf, meta_f = _log_state(log_dir)
-        return (last_f + 1, meta_f)
-
     return commit_with_retry(
-        _attempt, _refresh, (last_version + 1, meta), max_commit_retries
+        lambda st_a: _claim_commit(log_dir, st_a, _actions(st_a), store),
+        lambda: _log_state(log_dir),
+        st,
+        max_commit_retries,
     )
 
 
@@ -5089,10 +5031,11 @@ def evolve_delta(
         )
     table_dir = _local_table_dir(table_uri)
     log_dir = os.path.join(table_dir, "_delta_log")
-    last_version, _, meta = _log_state(log_dir)
-    if last_version < 0 or not meta:
+    st = _log_state(log_dir)
+    meta = st.meta
+    if st.version < 0 or not meta:
         raise BuzzBadRequestError(f"not a Delta table: {table_uri!r}")
-    version = last_version + 1
+    version = st.version + 1
 
     schema = json.loads(meta["schemaString"])
     fields = [dict(f) for f in schema["fields"]]
@@ -5197,7 +5140,7 @@ def evolve_delta(
     # reader-affecting (old readers would silently misread narrow physical
     # values) so it forces reader 3 / writer 7; a lone mapping upgrade
     # keeps Delta's legacy 2/5 form.
-    proto = _current_protocol(log_dir)
+    proto = st.protocol
     widening = bool(promote_columns) and "typeWidening" not in (
         proto.get("readerFeatures") or []
     )
@@ -5269,5 +5212,4 @@ def evolve_delta(
         rename_columns.get(c, c) for c in meta.get("partitionColumns", [])
     ]
     actions.append({"metaData": new_meta})
-    _claim_commit(log_dir, version, actions, store)
-    return version
+    return _claim_commit(log_dir, st, actions, store)

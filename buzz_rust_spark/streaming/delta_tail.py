@@ -15,9 +15,11 @@ as the SetTransaction version directly).
   :func:`~.iceberg_tail.corpus_prep_tail` (the shared
   :func:`~.bloom_ingest.dedup_commit_batch` protocol provides it).
 
-Scale: each poll costs O(new commits) log replay on the driver; the
-data read is a distributed scan of exactly the new files.  A 100 TB
-source table is never rescanned.
+Scale: each poll replays the log on the driver from the newest
+checkpoint at or below the window's end (the checkpoint plus the JSON
+commits after it), so a log that ``cleanup_delta_log`` trimmed below a
+cursor keeps serving it; the data read is a distributed scan of exactly
+the new files.  A 100 TB source table is never rescanned.
 
 Windows containing content REMOVALS (overwrite/delete/merge) raise the
 typed error from :func:`~..sources.delta_catalog.read_delta_changes` —

@@ -661,8 +661,9 @@ def test_concurrent_commit_race_rejected(spark, tmp_path):
         orig = dw._log_state
 
         def stale(log_dir):
-            _, live, meta = orig(log_dir)
-            return 0, live, meta
+            st = orig(log_dir)
+            st.version = 0
+            return st
 
         dw._log_state = stale
         try:
@@ -1878,17 +1879,25 @@ def test_restore_refuses_vacuumed_dv_sidecar(spark, tmp_path):
         restore_delta(spark, root, 1)
 
 
-def test_bounded_replay_does_not_poison_protocol_cache(spark, tmp_path):
-    """Review regression: restore_delta's as-of replay must not overwrite
-    the module-level protocol cache with HISTORICAL protocol — a
-    checkpoint written from a stale cache would claim reader1/writer2 for
-    a deletion-vector table."""
+def test_restore_keeps_dv_protocol_and_checkpoint_carries_it(
+    spark, tmp_path
+):
+    """Review regression: restore_delta replays the table AS OF the target
+    version too, but that historical protocol must not leak into the
+    table state — after restoring a deletion-vector table to its
+    pre-upgrade version the replayed protocol still carries reader 3 and
+    ``deletionVectors``, and so does the next checkpoint (one written from
+    reader1/writer2 would let feature-unaware readers resurrect deleted
+    rows)."""
+    import pyarrow.parquet as pq
+
+    from buzz_rust_spark.sources.delta_catalog import replay_log
     from buzz_rust_spark.sources.delta_writer import (
-        _current_protocol,
         delete_delta,
         restore_delta,
         write_delta,
     )
+    from buzz_rust_spark.sources.logstore import LogStore
 
     root = str(tmp_path / "t")
     log_dir = os.path.join(root, "_delta_log")
@@ -1897,10 +1906,21 @@ def test_bounded_replay_does_not_poison_protocol_cache(spark, tmp_path):
         root,
     )  # v0 (protocol 1/2)
     delete_delta(spark, root, "id = 0", mode="dv")  # v1: upgrade to 3/7
-    restore_delta(spark, root, 0)  # bounded replay to v0 inside
-    proto = _current_protocol(log_dir)
+    # v2, bounded replay to v0 inside; the next commit is v3, checkpointed
+    assert restore_delta(spark, root, 0, checkpoint_interval=4) == 2
+    proto = replay_log(LogStore(root)).protocol
     assert int(proto.get("minReaderVersion", 1)) == 3
     assert "deletionVectors" in (proto.get("writerFeatures") or [])
+    assert write_delta(
+        spark.createDataFrame([(9,)], "id long"), root, mode="append",
+        checkpoint_interval=4,
+    ) == 3
+    cp = pq.read_table(
+        os.path.join(log_dir, f"{3:020d}.checkpoint.parquet")
+    ).to_pylist()
+    (cp_proto,) = [r["protocol"] for r in cp if r.get("protocol")]
+    assert cp_proto["minReaderVersion"] == 3
+    assert "deletionVectors" in cp_proto["writerFeatures"]
 
 
 def test_restore_delta_restores_metadata(spark, tmp_path):
@@ -3010,13 +3030,13 @@ def test_delta_id_mode_nested_rewrites_restamp_inner_ids(spark, tmp_path):
         if "protocol" in a:
             a["protocol"] = {"minReaderVersion": 2, "minWriterVersion": 5}
     open(lp, "w").write("".join(_json.dumps(a) + "\n" for a in acts))
-    _, _, meta = _log_state(_os.path.join(root, "_delta_log"))
+    meta = _log_state(_os.path.join(root, "_delta_log")).meta
     _restamp_nested_ids(
         _glob.glob(_os.path.join(root, "*.parquet")), meta
     )
 
     def assert_ids():
-        live = _log_state(_os.path.join(root, "_delta_log"))[1]
+        live = _log_state(_os.path.join(root, "_delta_log")).adds
         assert live
         for rel in live:
             sch = _pq.ParquetFile(_os.path.join(root, rel)).schema_arrow

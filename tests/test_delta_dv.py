@@ -347,7 +347,7 @@ def test_delete_dv_full_file_leaves_snapshot(spark, tmp_path):
 
     table = _fresh_table(spark, str(tmp_path), "t", n=6)
     assert delete_delta(spark, table, "k >= 0", mode="dv") == 1
-    _, live, _ = _log_state(os.path.join(table, "_delta_log"))
+    live = _log_state(os.path.join(table, "_delta_log")).adds
     assert live == {}
     assert DeltaCatalog("t", table).to_dataframe(spark).count() == 0
 
@@ -362,7 +362,7 @@ def test_cow_delete_on_dv_table_purges(spark, tmp_path):
     assert delete_delta(spark, table, "k = 2", mode="cow") == 2
     got = sorted(r.k for r in DeltaCatalog("t", table).to_dataframe(spark).collect())
     assert got == [0, 3, 4, 5, 6, 7]
-    _, live, _ = _log_state(os.path.join(table, "_delta_log"))
+    live = _log_state(os.path.join(table, "_delta_log")).adds
     assert not any(
         (a.get("deletionVector") or {}).get("storageType") for a in live.values()
     )
@@ -379,7 +379,7 @@ def test_optimize_purges_dv_and_vacuum_reclaims(spark, tmp_path):
     table = _fresh_table(spark, str(tmp_path), "t", n=8)
     assert delete_delta(spark, table, "k IN (0, 7)", mode="dv") == 1
     assert optimize_delta(spark, table) == 2
-    _, live, _ = _log_state(os.path.join(table, "_delta_log"))
+    live = _log_state(os.path.join(table, "_delta_log")).adds
     assert live and not any(
         (a.get("deletionVector") or {}).get("storageType") for a in live.values()
     )
@@ -465,7 +465,7 @@ def test_writer_log_state_add_before_remove(spark, tmp_path):
     from buzz_rust_spark.sources.delta_writer import _log_state, vacuum_delta
 
     table = make_dv_table(spark, str(tmp_path), "p")  # commit 1: [add, remove]
-    _, live, _ = _log_state(os.path.join(table, "_delta_log"))
+    live = _log_state(os.path.join(table, "_delta_log")).adds
     assert set(live) == {"f0.parquet"}
     assert vacuum_delta(table, retention_hours=0.0) == []  # live file protected
 

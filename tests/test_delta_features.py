@@ -175,15 +175,13 @@ def test_row_tracking(spark, tmp_path):
     )
 
     def live_and_hwm():
-        from buzz_rust_spark.sources.delta_writer import (
-            _LAST_DOMAINS,
-            _log_state,
-        )
+        from buzz_rust_spark.sources.delta_catalog import replay_log
+        from buzz_rust_spark.sources.logstore import LogStore
 
-        _, live, _ = _log_state(os.path.join(root, "_delta_log"))
-        dom = _LAST_DOMAINS[os.path.join(root, "_delta_log")]
+        st = replay_log(LogStore(root))
+        dom = st.domains
         hwm = json.loads(dom["delta.rowTracking"])["rowIdHighWaterMark"]
-        return live, hwm
+        return st.adds, hwm
 
     live, hwm = live_and_hwm()
     ranges = []

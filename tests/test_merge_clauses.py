@@ -464,7 +464,7 @@ def _hwm(root):
 
     from buzz_rust_spark.sources.delta_writer import _log_state
 
-    _, _, meta = _log_state(os.path.join(root, "_delta_log"))
+    meta = _log_state(os.path.join(root, "_delta_log")).meta
     f = json.loads(meta["schemaString"])["fields"][0]
     return f["metadata"].get("delta.identity.highWaterMark")
 

@@ -464,6 +464,48 @@ def test_delta_append_retry_reuses_staged_files(spark, tmp_path):
     )
     assert rows == [0, 1, 2]
 
+    # row tracking: the retried claim mints row ids from the state it
+    # re-replayed, so its range starts above the winner's high water mark
+    import json
+
+    from buzz_rust_spark.sources.delta_catalog import replay_log
+    from buzz_rust_spark.sources.logstore import LogStore
+
+    rt = str(tmp_path / "rt")
+    write_delta(
+        spark.createDataFrame([(i,) for i in range(3)], "id long").coalesce(1),
+        rt, configuration={"delta.enableRowTracking": "true"},
+    )
+    peer = {}
+
+    def peer_append():
+        write_delta(
+            spark.createDataFrame([(10,), (11,)], "id long").coalesce(1), rt
+        )
+        peer["hwm"] = json.loads(
+            replay_log(LogStore(rt)).domains["delta.rowTracking"]
+        )["rowIdHighWaterMark"]
+
+    assert write_delta(
+        spark.createDataFrame([(20,), (21,), (22,)], "id long").coalesce(1),
+        rt, store=_conflicting_store(peer_append),
+    ) == 2
+    assert peer["hwm"] == 4  # 3 + 2 rows: ids 0..4
+    st = replay_log(LogStore(rt))
+    ranges = sorted(
+        (
+            a["baseRowId"],
+            a["baseRowId"] + json.loads(a["stats"])["numRecords"] - 1,
+            a["defaultRowCommitVersion"],
+        )
+        for a in st.adds.values()
+    )
+    assert ranges == [(0, 2, 0), (3, 4, 1), (5, 7, 2)]
+    assert all(b1 < a2 for (_, b1, _), (a2, _, _) in zip(ranges, ranges[1:]))
+    assert json.loads(st.domains["delta.rowTracking"]) == {
+        "rowIdHighWaterMark": 7
+    }
+
 
 def test_delta_create_race_retry_and_abort(spark, tmp_path):
     from buzz_rust_spark.errors import BuzzCommitAbortedError
