@@ -4706,10 +4706,11 @@ def z58_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently (copy-on-write DELETE + UPDATE stage new files under
     the CLONE's root); the oracle checks the clone shows exactly
     v0-minus-mutations while the source — appended AFTER the clone —
-    shows its own full history, i.e. true divergence.  Built on the
-    external-file scan machinery (``_files_scan``), which makes the
-    cloned absolute adds first-class for reads and rewrites.  Reference
-    has no write path (fuse_service.rs:130-135)."""
+    shows its own full history, i.e. true divergence.  Built on the one
+    Delta file scan (``delta_catalog.scan_files``), which takes each
+    file's location and partition values from its add action and so
+    makes the cloned absolute adds first-class for reads and rewrites.
+    Reference has no write path (fuse_service.rs:130-135)."""
     import tempfile
 
     from ..sources.delta_catalog import DeltaCatalog

@@ -25,7 +25,7 @@ Formats implemented here are the published Delta spec (PROTOCOL.md
 Scale: DV decode is driver-side metadata work, like the log replay itself —
 bitmaps are compressed and bounded by the writer's rewrite policy (engines
 compact files whose DVs grow past a few percent of rows).  The row filter is
-distributed: see ``DeltaCatalog.to_dataframe``, which anti-joins the scan's
+distributed: see ``delta_catalog.scan_files``, which anti-joins the scan's
 ``_metadata.row_index`` against the decoded positions.
 
 The encoder exists so tests can synthesize spec-conformant tables (delta-spark
@@ -461,7 +461,7 @@ def filter_deleted_rows(
     deleted,
     spark,
     broadcast_max: int = 2_000_000,
-    drop_path: bool = True,
+    keep_meta: bool = False,
     how: str = "left_anti",
 ):
     """Drop rows of a ``_metadata``-carrying scan whose (file path, row
@@ -483,9 +483,8 @@ def filter_deleted_rows(
     positions — above it the writer's DV-compaction policy is off and an
     8 GB broadcast OOM would be a worse failure than one shuffle of the
     filter relation.  Rows from files WITHOUT a DV get a null id, which an
-    anti-join never matches.  ``drop_path=False`` keeps ``__rawpath`` for
-    callers that join more per-file metadata on
-    (:func:`~.manifest.join_partitions`).
+    anti-join never matches.  ``keep_meta`` keeps ``__rawpath`` and
+    ``__ridx`` for callers that attribute rows to files or positions.
     ``how="left_semi"`` flips the filter to KEEP exactly the listed rows —
     the changelog's "rows at these positions" read."""
     from pyspark.sql.functions import broadcast
@@ -517,5 +516,5 @@ def filter_deleted_rows(
         del_df = broadcast(del_df)
     out = scan.join(files_df, on="__rawpath", how="left").join(
         del_df, on=["__fid", "__ridx"], how=how
-    ).drop("__fid", "__ridx")
-    return out.drop("__rawpath") if drop_path else out
+    ).drop("__fid")
+    return out if keep_meta else out.drop("__rawpath", "__ridx")

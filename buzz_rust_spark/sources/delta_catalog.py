@@ -8,16 +8,23 @@ strings, delta_catalog.rs:73-77), and the table schema from the Delta metadata
 ``schemaString`` (delta_catalog.rs:133-140).
 
 This rebuild parses the ``_delta_log`` directly (the log format is an open
-spec) instead of depending on delta-spark, then delegates scanning to
-:class:`StaticCatalog`.  Delta's ``schemaString`` *is* Spark StructType JSON,
-so the schema conversion is exact.  One function, :func:`replay_log`,
-rebuilds a table's state for this reader, the change readers
-(:func:`read_delta_changes`, :func:`read_delta_changelog`) and the writer
-(``delta_writer._log_state``): the newest checkpoint — classic
-single-file, complete classic multi-part sets, or UUID-named V2 manifests
-with ``_sidecars`` (the ``v2Checkpoint`` feature), found from the
-``_last_checkpoint`` pointer or a log listing — then the JSON commits after
-it, as delta-rs loads a snapshot in the reference.
+spec) instead of depending on delta-spark.  Delta's ``schemaString`` *is*
+Spark StructType JSON, so the schema conversion is exact.  This reader,
+the change readers (:func:`read_delta_changes`,
+:func:`read_delta_changelog`) and the writer (``delta_writer``) share one
+mechanism per step:
+
+- :func:`replay_log` rebuilds a table's state: the newest checkpoint —
+  classic single-file, complete classic multi-part sets, or UUID-named V2
+  manifests with ``_sidecars`` (the ``v2Checkpoint`` feature), found from
+  the ``_last_checkpoint`` pointer or a log listing — then the JSON
+  commits after it, as delta-rs loads a snapshot in the reference;
+- :func:`table_schema` derives what a scan needs from the metaData: the
+  column-mapping mode, names and ids, the partition columns, the logical
+  data fields and the files' read schema;
+- :func:`scan_files` turns data or change files into rows: Spark's
+  parquet source with that schema, each file's partition values from its
+  log entry (never from its directory), deletion-vector rows dropped.
 
 All log IO goes through :class:`~buzz_rust_spark.sources.logstore.LogStore`,
 so tables can live on any filesystem pyarrow speaks — local paths, ``s3://``
@@ -30,16 +37,16 @@ distributed scan reads them through Spark's own connectors (S3A etc.).
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..errors import BuzzExecutionError
 from .logstore import LogStore
-from .manifest import CatalogFile, attach_partitions, join_partitions
-from .static_catalog import StaticCatalog
+from .manifest import CatalogFile, attach_partitions, prune_manifest
 
 _LOG = "_delta_log"
 
@@ -251,8 +258,11 @@ def _check_protocol(proto: dict, table_uri: str) -> None:
     )
 
 
-def _mapping_info(meta: dict, table_uri: str) -> tuple[str, dict[str, str]]:
-    """(columnMapping mode, logical→physical field-name map).
+def _mapping_info(
+    meta: dict, table_uri: str | None = None
+) -> tuple[str, dict[str, str], dict[str, int]]:
+    """(columnMapping mode, logical→physical field names, logical→mapping
+    ids) of the table metaData ``meta``.
 
     ``delta.columnMapping.mode=name``: the parquet files carry stable
     PHYSICAL names (``col-<uuid>``) from the schema field metadata; readers
@@ -262,7 +272,7 @@ def _mapping_info(meta: dict, table_uri: str) -> tuple[str, dict[str, str]]:
     but the log's partitionValues/stats keys are STILL physical under both
     modes, so the name map is returned for those lookups regardless.
     Unknown modes are a typed refusal (a misread would silently return
-    wrong columns)."""
+    wrong columns, a write would stage files no reader resolves)."""
     config = meta.get("configuration") or {}
     mode = config.get("delta.columnMapping.mode", "none") or "none"
     if mode not in ("none", "name", "id"):
@@ -273,41 +283,173 @@ def _mapping_info(meta: dict, table_uri: str) -> tuple[str, dict[str, str]]:
             "'name', 'id', and 'none' are implemented"
         )
     if mode == "none":
-        return mode, {}
-    fields = json.loads(meta["schemaString"])["fields"]
-    out = {}
-    for f in fields:
+        return mode, {}, {}
+    phys: dict[str, str] = {}
+    ids: dict[str, int] = {}
+    for f in json.loads(meta["schemaString"])["fields"]:
         md = f.get("metadata") or {}
-        out[f["name"]] = md.get("delta.columnMapping.physicalName", f["name"])
-    return mode, out
+        phys[f["name"]] = md.get("delta.columnMapping.physicalName", f["name"])
+        if md.get("delta.columnMapping.id") is not None:
+            ids[f["name"]] = int(md["delta.columnMapping.id"])
+    return mode, phys, ids
 
 
-def _field_id_schema(meta: dict, fields, table_uri: str):
-    """Logical-named scan schema carrying ``parquet.field.id`` metadata
-    (``delta.columnMapping.id``) for columnMapping mode=id reads."""
-    from ..errors import BuzzNotImplementedError
+@dataclass(frozen=True)
+class TableSchema:
+    """What a scan of a Delta table's files needs from its metaData
+    (:func:`table_schema`)."""
 
-    raw = {
-        f["name"]: (f.get("metadata") or {}).get("delta.columnMapping.id")
-        for f in json.loads(meta["schemaString"])["fields"]
-    }
-    missing = [f.name for f in fields if raw.get(f.name) is None]
-    if missing:
-        raise BuzzNotImplementedError(
-            f"Delta table {table_uri!r} declares columnMapping.mode=id but "
-            f"fields {missing} lack delta.columnMapping.id — cannot resolve"
+    mode: str  # columnMapping mode: "none", "name" or "id"
+    phys: dict[str, str]  # logical → physical name (both mapped modes)
+    declared: StructType  # the whole logical schema
+    partition_cols: list[str]
+    data_fields: list[StructField]  # logical, partition columns excluded
+    # the data files' read schema: physical names under mode=name, logical
+    # names carrying parquet.field.id under mode=id
+    scan_schema: StructType
+
+    @property
+    def rename(self) -> dict[str, str]:
+        """logical → scanned column name where they differ (mode=name)."""
+        return self.phys if self.mode == "name" else {}
+
+    @property
+    def row_schema(self) -> StructType:
+        """The rows :func:`scan_files` returns: logical data fields, then
+        the partition columns as (nullable) strings."""
+        return StructType(
+            list(self.data_fields)
+            + [StructField(c, StringType()) for c in self.partition_cols]
         )
-    return StructType(
-        [
+
+
+def table_schema(meta: dict, table_uri: str) -> TableSchema:
+    """The :class:`TableSchema` of the table metaData ``meta`` — the one
+    derivation the snapshot reader, the change readers and the writer's
+    rewrite scans share.  A log without a metaData action is a typed
+    error; so is a mode=id table whose data fields lack mapping ids."""
+    if not meta:
+        raise BuzzExecutionError(
+            f"Delta log at {table_uri!r} contains no metaData action"
+        )
+    mode, phys, ids = _mapping_info(meta, table_uri)
+    declared = StructType.fromJson(json.loads(meta["schemaString"]))
+    partition_cols = list(meta.get("partitionColumns") or [])
+    data_fields = [f for f in declared.fields if f.name not in partition_cols]
+    if mode == "id":
+        missing = [f.name for f in data_fields if f.name not in ids]
+        if missing:
+            from ..errors import BuzzNotImplementedError
+
+            raise BuzzNotImplementedError(
+                f"Delta table {table_uri!r} declares columnMapping.mode=id "
+                f"but fields {missing} lack delta.columnMapping.id — cannot "
+                "resolve"
+            )
+        scan = [
             StructField(
                 f.name,
                 f.dataType,
                 f.nullable,
-                {"parquet.field.id": int(raw[f.name])},
+                {"parquet.field.id": ids[f.name]},
             )
-            for f in fields
+            for f in data_fields
         ]
+    elif mode == "name":
+        scan = [
+            StructField(phys.get(f.name, f.name), f.dataType, f.nullable)
+            for f in data_fields
+        ]
+    else:
+        scan = data_fields
+    return TableSchema(
+        mode, phys, declared, partition_cols, data_fields, StructType(scan)
     )
+
+
+def _log_file(
+    store: LogStore, path: str, entry: dict, schema: TableSchema
+) -> CatalogFile:
+    """The CatalogFile of one add/cdc log entry.  Partition tuple keys are
+    LOGICAL names (how callers filter); ``partitionValues`` keys are
+    PHYSICAL under both mapping modes.  Delta serializes a null partition
+    value as JSON null: it stays None (→ SQL NULL), never the string
+    'None', which would break ``col IS NULL`` pruning and wrongly match
+    ``= 'None'``."""
+    pv = entry.get("partitionValues") or {}
+    return CatalogFile(
+        key=store.spark_path(path),
+        length=int(entry.get("size", 0)),
+        partitions=tuple(
+            (c, None if (v := pv.get(schema.phys.get(c, c))) is None else str(v))
+            for c in schema.partition_cols
+        ),
+    )
+
+
+def scan_files(
+    spark: SparkSession,
+    schema: TableSchema,
+    files: list[CatalogFile],
+    deleted: list[tuple[str, int]] = (),
+    keep_meta: bool = False,
+) -> DataFrame:
+    """Rows of the Delta data (or change) files ``files`` — the one way
+    every Delta path turns files into rows: the snapshot reader, both
+    change readers and the writer's rewrite reads.
+
+    The files are read with ``schema.scan_schema`` (field-id resolution
+    turned on under mode=id); each file's partition values come from its
+    log entry (the ``CatalogFile`` of :func:`_log_file`) as string
+    columns through :func:`~.manifest.attach_partitions`; the rows at the
+    ``deleted`` ``(file key, row index)`` pairs are dropped by ONE
+    anti-join (:func:`~.deletion_vectors.filter_deleted_rows`); mode=name
+    columns are renamed to their logical names.  The result is
+    ``schema.row_schema``, plus ``__rawpath`` (the raw
+    ``_metadata.file_path``) and ``__ridx`` (``_metadata.row_index``) with
+    ``keep_meta``.  No files give an empty frame of that shape whose plan
+    folds without a Spark job."""
+    from pyspark.sql import functions as F
+
+    from .deletion_vectors import filter_deleted_rows
+
+    meta_cols = ["__rawpath", "__ridx"] if keep_meta else []
+    if not files:
+        out = schema.row_schema
+        if keep_meta:
+            out = out.add("__rawpath", StringType()).add("__ridx", LongType())
+        return spark.createDataFrame(
+            to_arrow_schema(out).empty_table(), schema=out
+        )
+    if schema.mode == "id":
+        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+    with_meta = keep_meta or bool(deleted)
+
+    def scan(paths: list[str]) -> DataFrame:
+        df = spark.read.schema(schema.scan_schema).parquet(*paths)
+        if not with_meta:
+            return df
+        # _metadata resolves only on a scan relation, never through a
+        # union: the select happens inside each scan
+        return df.select(
+            "*",
+            F.col("_metadata.file_path").alias("__rawpath"),
+            F.col("_metadata.row_index").alias("__ridx"),
+        )
+
+    df = attach_partitions(spark, files, schema.partition_cols, scan)
+    if deleted:
+        df = filter_deleted_rows(df, deleted, spark, keep_meta=keep_meta)
+    if schema.rename:
+        df = df.select(
+            *[
+                F.col(schema.rename.get(f.name, f.name)).alias(f.name)
+                for f in schema.data_fields
+            ],
+            *schema.partition_cols,
+            *meta_cols,
+        )
+    return df
 
 
 @dataclass
@@ -462,47 +604,16 @@ class DeltaCatalog:
             raise BuzzExecutionError(f"no _delta_log at {self.table_uri!r}")
         st = replay_log(store, self.version)
         _check_protocol(st.protocol, self.table_uri)
-        live, meta = st.adds, st.meta
-        if not meta:
-            raise BuzzExecutionError(
-                f"Delta log at {self.table_uri!r} contains no metaData action"
-            )
+        ts = self._table_schema = table_schema(st.meta, self.table_uri)
+        live = st.adds
         # the commit version this snapshot RESOLVED to — the requested
         # time-travel version, or the latest replayed commit (incremental
         # consumers use it as their cursor)
         self.resolved_version: int = st.version
-
-        full = StructType.fromJson(json.loads(meta["schemaString"]))
-        # logical name → Spark type for the whole declared schema (the
-        # zone-map domain guard keys on it)
-        self._logical_types = {f.name: f.dataType for f in full.fields}
-        self.partition_cols: list[str] = list(meta.get("partitionColumns", []))
-        # Column mapping (reader protocol 2): mode=name scans by the stable
-        # PHYSICAL names (col-<uuid>) and renames back to logical; mode=id
-        # scans by logical names with parquet field-id resolution (Spark's
-        # fieldId read over delta.columnMapping.id) — no rename needed.
-        # Under BOTH modes the log's partitionValues/stats keys are
-        # physical, so the name map feeds those lookups either way.
-        mode, phys = _mapping_info(meta, self.table_uri)
-        self._phys = phys if mode == "name" else None
-        self._cm_id = mode == "id"
-        data_fields = [f for f in full.fields if f.name not in self.partition_cols]
-        self._logical_data_cols = [f.name for f in data_fields]
-        if mode == "name":
-            self.schema = StructType(
-                [
-                    StructField(phys.get(f.name, f.name), f.dataType, f.nullable)
-                    for f in data_fields
-                ]
-            )
-        elif mode == "id":
-            self.schema = _field_id_schema(meta, data_fields, self.table_uri)
-        else:
-            self.schema = StructType(data_fields)
-
+        self.partition_cols: list[str] = ts.partition_cols
+        self.schema = ts.scan_schema
         self.files = [
-            _log_file(store, add["path"], add, self.partition_cols, phys)
-            for add in live.values()
+            _log_file(store, add["path"], add, ts) for add in live.values()
         ]
         # Deletion vectors (reader protocol 3): descriptor per data file whose
         # rows are partially deleted.  Decoded lazily at scan time (a snapshot
@@ -518,7 +629,7 @@ class DeltaCatalog:
         # footer reads — consumed by sources.zonemap.stats_from_delta_log);
         # for column-mapped tables the stats keys are physical → translate
         # back to logical so consumers see one namespace
-        inv = {p: l for l, p in phys.items()}
+        inv = {p: l for l, p in ts.phys.items()}
 
         def _stats(raw: str) -> str:
             if not inv:
@@ -541,63 +652,10 @@ class DeltaCatalog:
         # the replay already held
         self._live_adds = live
 
-    def _static(self) -> StaticCatalog:
-        return StaticCatalog(
-            name=self.name,
-            schema=self.schema,
-            files=self.files,
-            partition_cols=self.partition_cols,
-        )
-
     def pruned_files(self, spark, partition_filter):
-        return self._static().pruned_files(spark, partition_filter)
-
-    # above this many decoded deleted positions the anti-join side is left
-    # un-hinted (shuffle join) instead of broadcast — DVs this large mean the
-    # writer's rewrite-compaction policy is off, and an 8 GB broadcast OOM is
-    # a worse failure than one shuffle of the filter relation
-    DV_BROADCAST_MAX = 2_000_000
-
-    def _dv_scan(self, spark: SparkSession, files: list[CatalogFile]) -> DataFrame:
-        """Scan data files that carry a deletion vector, with deleted rows
-        filtered out.
-
-        Shape: each parquet scan selects the data columns plus
-        ``_metadata.file_path`` as ``__rawpath`` and
-        ``_metadata.row_index`` (the file-ordinal Delta DVs index by);
-        partition values attach through :func:`~.manifest.attach_partitions`
-        (per-tuple literal unions, or one scan + broadcast manifest join on
-        that ``__rawpath`` past its bound — a broad DV delete over a
-        date-partitioned table must not build an O(partitions) union plan);
-        then ONE anti-join of (file, row index) against the decoded deleted
-        positions — broadcast below DV_BROADCAST_MAX, so the common case
-        adds zero shuffles to the plan.  DV decode itself is driver-side
-        metadata work, like the log replay (bitmaps are compressed;
-        cardinality is bounded by writer compaction policy)."""
-        from pyspark.sql import functions as F
-
-        from .deletion_vectors import filter_deleted_rows, read_dv_positions
-
-        deleted = [
-            (f.key, int(p))
-            for f in files
-            for p in read_dv_positions(self._store, self._dv_by_key[f.key])
-        ]
-        scan = attach_partitions(
-            spark,
-            files,
-            self.partition_cols,
-            # _metadata resolves only on a scan relation, never through a
-            # union: the select happens inside each scan
-            lambda paths: spark.read.schema(self.schema)
-            .parquet(*paths)
-            .select(
-                "*",
-                F.col("_metadata.file_path").alias("__rawpath"),
-                F.col("_metadata.row_index").alias("__ridx"),
-            ),
+        return prune_manifest(
+            spark, self.files, self.partition_cols, partition_filter, self.name
         )
-        return filter_deleted_rows(scan, deleted, spark, self.DV_BROADCAST_MAX)
 
     def to_dataframe(
         self,
@@ -605,14 +663,22 @@ class DeltaCatalog:
         partition_filter: str | None = None,
         stats_filter: str | None = None,
     ) -> DataFrame:
-        """Snapshot scan.  ``stats_filter`` is a ROW predicate (any Spark
-        SQL) applied to the scan — and additionally used to skip whole
-        files whose log-recorded ``stats`` min/max provably exclude it
-        (zone-map pruning on non-partition columns, the read-side payoff
-        of ``optimize_delta(zorder_by=...)``; zero extra metadata I/O —
-        the stats rode along in the log replay).  Results are exact
-        whether or not any file prunes."""
-        drop: set[str] = set()
+        """Snapshot scan: the files surviving ``partition_filter`` through
+        :func:`scan_files`, with the rows their deletion vectors delete
+        dropped.  DV decode is driver-side metadata work, like the log
+        replay (bitmaps are compressed; cardinality is bounded by writer
+        compaction policy).
+
+        ``stats_filter`` is a ROW predicate (any Spark SQL) applied to the
+        scan — and additionally used to skip whole files whose
+        log-recorded ``stats`` min/max provably exclude it (zone-map
+        pruning on non-partition columns, the read-side payoff of
+        ``optimize_delta(zorder_by=...)``; zero extra metadata I/O — the
+        stats rode along in the log replay).  Results are exact whether
+        or not any file prunes."""
+        from .deletion_vectors import read_dv_positions
+
+        files = self.pruned_files(spark, partition_filter)
         if stats_filter is not None:
             from .zonemap import (
                 prune_files_by_stats,
@@ -629,10 +695,12 @@ class DeltaCatalog:
             # order differs from Spark's casted comparison (the 'T'
             # separator sorts above space/digits), so temporal and
             # complex columns never prune.
-            from pyspark.sql.types import NumericType, StringType
+            from pyspark.sql.types import NumericType
+
+            types = {f.name: f.dataType for f in self._table_schema.declared}
 
             def _domain_ok(col, val):
-                dt = self._logical_types.get(col)
+                dt = types.get(col)
                 elems = val if isinstance(val, list) else [val]
                 if isinstance(dt, StringType):
                     return all(isinstance(v, str) for v in elems)
@@ -642,66 +710,18 @@ class DeltaCatalog:
 
             conjs = [(c, o, v) for c, o, v in conjs if _domain_ok(c, v)]
             if conjs:
-                kept = {
-                    f.key
-                    for f in prune_files_by_stats(
-                        self.files, stats_from_delta_log(self), conjs
-                    )
-                }
-                drop = {f.key for f in self.files} - kept
-        if self._cm_id:
-            # columnMapping mode=id: the scan schema carries
-            # parquet.field.id metadata; resolution by id needs the conf on
-            # (no-op for scans whose schema has no ids)
-            spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        dv_keys = getattr(self, "_dv_by_key", {})
-        if not dv_keys:
-            static = self._static()
-            if drop:
-                from dataclasses import replace as _dc_replace
-
-                static = _dc_replace(
-                    static,
-                    files=[f for f in static.files if f.key not in drop],
+                files = prune_files_by_stats(
+                    files, stats_from_delta_log(self), conjs
                 )
-            df = static.to_dataframe(spark, partition_filter)
-        else:
-            from functools import reduce
-
-            files = self.pruned_files(spark, partition_filter)
-            if drop:
-                files = [f for f in files if f.key not in drop]
-            plain = [f for f in files if f.key not in dv_keys]
-            dv_files = [f for f in files if f.key in dv_keys]
-            parts = []
-            if plain or not dv_files:
-                # pre-pruned plain subset (or the empty-result shape)
-                parts.append(
-                    StaticCatalog(
-                        name=self.name,
-                        schema=self.schema,
-                        files=plain,
-                        partition_cols=self.partition_cols,
-                    ).to_dataframe(spark)
-                )
-            if dv_files:
-                parts.append(self._dv_scan(spark, dv_files))
-            df = reduce(DataFrame.unionByName, parts)
-        if self._phys:
-            from pyspark.sql import functions as F
-
-            # physical → logical rename; partition columns (attached by the
-            # static scan under their logical names) pass through
-            df = df.select(
-                *[
-                    F.col(self._phys.get(n, n)).alias(n)
-                    for n in self._logical_data_cols
-                ],
-                *[F.col(c) for c in self.partition_cols],
-            )
-        # AFTER the physical→logical rename: the predicate names logical
-        # columns (pruning above matched them too — the log's stats keys
-        # are translated at load)
+        deleted = [
+            (f.key, int(p))
+            for f in files
+            if f.key in self._dv_by_key
+            for p in read_dv_positions(self._store, self._dv_by_key[f.key])
+        ]
+        df = scan_files(spark, self._table_schema, files, deleted)
+        # the predicate names logical columns (pruning above matched them
+        # too — the log's stats keys are translated at load)
         if stats_filter is not None:
             from pyspark.errors import AnalysisException
 
@@ -715,30 +735,6 @@ class DeltaCatalog:
                     f"{exc.getMessage() if hasattr(exc, 'getMessage') else exc}"
                 ) from exc
         return df
-
-
-def _log_file(
-    store: LogStore,
-    path: str,
-    entry: dict,
-    partition_cols: list[str],
-    phys_all: dict[str, str],
-) -> CatalogFile:
-    """The CatalogFile of one add/cdc log entry.  Partition tuple keys are
-    LOGICAL names (how callers filter); ``partitionValues`` keys are
-    PHYSICAL under both mapping modes, hence the lookup through
-    ``phys_all``.  Delta serializes a null partition value as JSON null: it
-    stays None (→ SQL NULL), never the string 'None', which would break
-    ``col IS NULL`` pruning and wrongly match ``= 'None'``."""
-    pv = entry.get("partitionValues") or {}
-    return CatalogFile(
-        key=store.spark_path(path),
-        length=int(entry.get("size", 0)),
-        partitions=tuple(
-            (c, None if (v := pv.get(phys_all.get(c, c))) is None else str(v))
-            for c in partition_cols
-        ),
-    )
 
 
 def _change_window(
@@ -822,17 +818,17 @@ def read_delta_changes(
     partition values re-attached from the log like any Delta scan."""
     from pyspark.sql import functions as F
 
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
     store = LogStore(table_uri, region=region)
     to_version, window = _change_window(store, table_uri, from_version, to_version)
     # the schema applied is the table's AS OF to_version, never a later one
     st = replay_log(store, to_version)
     _check_protocol(st.protocol, table_uri)
-    meta = st.meta
-    if not meta:
-        raise BuzzExecutionError(
-            f"Delta log at {table_uri!r} contains no metaData action"
-        )
-    per_version: dict[int, list[dict]] = {}
+    ts = table_schema(st.meta, table_uri)
+    frames: list[DataFrame] = []
     for version, actions in window.items():
         # DV check FIRST: a real DV delete commit carries remove actions
         # too, and the generic overwrite error would mask the specific
@@ -865,68 +861,19 @@ def read_delta_changes(
             if "add" in a and a["add"].get("dataChange", True)
         ]
         if adds:
-            per_version[version] = adds
-
-    full = StructType.fromJson(json.loads(meta["schemaString"]))
-    partition_cols = list(meta.get("partitionColumns", []))
-    # column mapping: mode=name scans physical names and renames back;
-    # mode=id scans logical names with parquet field-id resolution — same
-    # translation as DeltaCatalog._load_snapshot
-    cm_mode, phys_all = _mapping_info(meta, table_uri)
-    phys = phys_all if cm_mode == "name" else {}
-    data_fields = [f for f in full.fields if f.name not in partition_cols]
-    logical_data_cols = [f.name for f in data_fields]
-    if cm_mode == "id":
-        data_schema = _field_id_schema(meta, data_fields, table_uri)
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    else:
-        data_schema = StructType(
-            [
-                StructField(phys.get(f.name, f.name), f.dataType, f.nullable)
-                for f in data_fields
-            ]
-        )
-
-    out: DataFrame | None = None
-    for version, adds in sorted(per_version.items()):
-        cat = StaticCatalog(
-            name="_changes",
-            schema=data_schema,
-            partition_cols=partition_cols,
-            files=[
-                _log_file(store, add["path"], add, partition_cols, phys_all)
-                for add in adds
-            ],
-        )
-        part = cat.to_dataframe(spark)
-        if phys:
-            part = part.select(
-                *[
-                    F.col(phys.get(n, n)).alias(n)
-                    for n in logical_data_cols
-                ],
-                *[F.col(c) for c in partition_cols],
+            files = [_log_file(store, add["path"], add, ts) for add in adds]
+            frames.append(
+                scan_files(spark, ts, files).withColumn(
+                    "_commit_version", F.lit(version).cast("long")
+                )
             )
-        part = part.withColumn(
-            "_commit_version", F.lit(version).cast("long")
+    if not frames:
+        # empty change set: SAME shape as a non-empty one, so downstream
+        # unionByName / fixed-schema sinks behave identically either way
+        return scan_files(spark, ts, []).withColumn(
+            "_commit_version", F.lit(None).cast("long")
         )
-        out = part if out is None else out.unionByName(part)
-    if out is None:
-        # empty change set: SAME shape as a non-empty one (data columns,
-        # then partition columns as strings — how StaticCatalog attaches
-        # them — then the version tag), so downstream unionByName /
-        # fixed-schema sinks behave identically either way
-        from pyspark.sql.types import StringType
-
-        empty = StructType(
-            # LOGICAL data fields (the non-empty path renames physical →
-            # logical before returning, so the empty shape must match)
-            list(data_fields)
-            + [StructField(c, StringType()) for c in partition_cols]
-        )
-        df = spark.createDataFrame([], empty)
-        return df.withColumn("_commit_version", F.lit(None).cast("long"))
-    return out
+    return reduce(DataFrame.unionByName, frames)
 
 
 def read_delta_changelog(
@@ -987,6 +934,8 @@ def read_delta_changelog(
     removed are no obstacle while ``from_version`` is at or above the
     surviving checkpoint.  A window reaching below the cleanup is a typed
     "missing commit" error: re-bootstrap from a full snapshot."""
+    from functools import reduce
+
     from pyspark.sql import functions as F
 
     from .deletion_vectors import filter_deleted_rows, read_dv_positions
@@ -1001,11 +950,8 @@ def read_delta_changelog(
     base = dict(st.adds)
     for actions in window_actions.values():
         _replay_actions(actions, st)
-    live, meta = st.adds, st.meta
-    if not meta:
-        raise BuzzExecutionError(
-            f"Delta log at {table_uri!r} contains no metaData action"
-        )
+    live = st.adds
+    ts = table_schema(st.meta, table_uri)
 
     def _dv(entry: dict) -> dict:
         return (
@@ -1014,97 +960,44 @@ def read_delta_changelog(
             else None
         ) or {}
 
-    # --- schema machinery (same translation as read_delta_changes) ---
-    full = StructType.fromJson(json.loads(meta["schemaString"]))
-    partition_cols = list(meta.get("partitionColumns", []))
-    cm_mode, phys_all = _mapping_info(meta, table_uri)
-    phys = phys_all if cm_mode == "name" else {}
-    data_fields = [f for f in full.fields if f.name not in partition_cols]
-    logical_data_cols = [f.name for f in data_fields]
-    if cm_mode == "id":
-        data_schema = _field_id_schema(meta, data_fields, table_uri)
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    else:
-        data_schema = StructType(
-            [
-                StructField(phys.get(f.name, f.name), f.dataType, f.nullable)
-                for f in data_fields
-            ]
+    def _empty() -> DataFrame:
+        return scan_files(spark, ts, []).withColumn(
+            "_change_type", F.lit("insert")
         )
-    from pyspark.sql.types import StringType
-
-    empty = StructType(
-        list(data_fields)
-        + [StructField(c, StringType(), True) for c in partition_cols]
-        + [StructField("_change_type", StringType(), False)]
-    )
 
     def _entries_scan(
         entries: dict[str, dict], coords: list[tuple[str, int]]
     ) -> DataFrame | None:
-        """Logical rows of ``entries`` (each file's DV applied as an
-        anti-filter) unioned with the rows AT ``coords`` (a (path, pos)
-        semi-filter over those files) — one scan per group, partition
-        values re-attached from the log by
-        :func:`~.manifest.join_partitions`."""
-        files = dict(entries)
-        coord_paths = {p for p, _ in coords}
+        """Logical rows of ``entries`` (each file's DV applied) unioned
+        with the rows AT ``coords`` (a (path, pos) semi-filter over those
+        files)."""
         parts_out = []
-        if files:
+        if entries:
             anti = [
                 (store.spark_path(p), int(pos))
-                for p, a in files.items()
+                for p, a in entries.items()
                 if _dv(a)
                 for pos in read_dv_positions(store, _dv(a))
             ]
-            scan = spark.read.schema(data_schema).parquet(
-                *[store.spark_path(p) for p in files]
-            ).select(
-                "*",
-                F.col("_metadata.file_path").alias("__rawpath"),
-                F.col("_metadata.row_index").alias("__ridx"),
-            )
-            if anti:
-                scan = filter_deleted_rows(
-                    scan, anti, spark, drop_path=False
-                )
-            parts_out.append(scan.drop("__ridx"))
+            files = [_log_file(store, p, a, ts) for p, a in entries.items()]
+            parts_out.append(scan_files(spark, ts, files, anti))
         if coords:
-            cscan = spark.read.schema(data_schema).parquet(
-                *sorted({store.spark_path(p) for p in coord_paths})
-            ).select(
-                "*",
-                F.col("_metadata.file_path").alias("__rawpath"),
-                F.col("_metadata.row_index").alias("__ridx"),
-            )
+            files = [
+                _log_file(store, p, base.get(p) or live.get(p), ts)
+                for p in sorted({p for p, _ in coords})
+            ]
             sel = [(store.spark_path(p), int(pos)) for p, pos in coords]
-            cscan = filter_deleted_rows(
-                cscan, sel, spark, drop_path=False, how="left_semi"
+            parts_out.append(
+                filter_deleted_rows(
+                    scan_files(spark, ts, files, keep_meta=True),
+                    sel,
+                    spark,
+                    how="left_semi",
+                )
             )
-            parts_out.append(cscan.drop("__ridx"))
         if not parts_out:
             return None
-        from functools import reduce
-
-        # partition values from the log, joined on the scans' __rawpath
-        logged = dict(files)
-        logged.update({p: (base.get(p) or live.get(p)) for p in coord_paths})
-        out = join_partitions(
-            spark,
-            reduce(DataFrame.unionByName, parts_out),
-            [
-                _log_file(store, p, a, partition_cols, phys_all)
-                for p, a in logged.items()
-            ],
-            partition_cols,
-        )
-        return out.select(
-            *[
-                F.col(phys.get(n, n)).alias(n)
-                for n in logical_data_cols
-            ],
-            *[F.col(c) for c in partition_cols],
-        )
+        return reduce(DataFrame.unionByName, parts_out)
 
     # --- recorded change data (CDF) preferred -------------------------------
     # When a window commit carries `cdc` actions (this writer's merge/
@@ -1118,50 +1011,31 @@ def read_delta_changelog(
     # nothing; anything else (removes or DV adds without cdc) falls back
     # to the net per-file diff below, which is always correct.
     def _cdf_scan() -> DataFrame | None:
-        from functools import reduce
-
         if not any(
             any("cdc" in a for a in acts)
             for acts in window_actions.values()
         ):
             return None  # nothing recorded: keep the existing plan shape
-        cdc_schema = StructType(
-            list(data_schema.fields)
-            + [StructField("_change_type", StringType(), True)]
+        # the change files carry `_change_type` by that literal name
+        change_type = StructField("_change_type", StringType(), True)
+        cdc_ts = replace(
+            ts,
+            data_fields=ts.data_fields + [change_type],
+            scan_schema=StructType(ts.scan_schema.fields + [change_type]),
         )
         frames: list[DataFrame] = []
         for v in sorted(window_actions):
             acts = window_actions[v]
             cdcs = [a["cdc"] for a in acts if "cdc" in a]
             if cdcs:
-                scan = (
-                    spark.read.schema(cdc_schema)
-                    .parquet(
-                        *sorted(store.spark_path(c["path"]) for c in cdcs)
-                    )
-                    .select(
-                        "*", F.col("_metadata.file_path").alias("__rawpath")
-                    )
-                )
-                scan = join_partitions(
+                scan = scan_files(
                     spark,
-                    scan,
-                    [
-                        _log_file(store, c["path"], c, partition_cols, phys_all)
-                        for c in cdcs
-                    ],
-                    partition_cols,
+                    cdc_ts,
+                    [_log_file(store, c["path"], c, ts) for c in cdcs],
                 )
                 frames.append(
                     scan.select(
-                        # name mode reads physical column names (mapped
-                        # back here); id mode resolves by field id and
-                        # already surfaces logical names
-                        *[
-                            F.col(phys.get(n, n)).alias(n)
-                            for n in logical_data_cols
-                        ],
-                        *[F.col(cc) for cc in partition_cols],
+                        *[c for c in scan.columns if c != "_change_type"],
                         F.when(
                             F.col("_change_type").isin(
                                 "insert", "update_postimage"
@@ -1190,7 +1064,7 @@ def read_delta_changelog(
                     fr.withColumn("_change_type", F.lit("insert"))
                 )
         if not frames:
-            return spark.createDataFrame([], empty)
+            return _empty()
         return reduce(DataFrame.unionByName, frames)
 
     recorded = _cdf_scan()
@@ -1225,5 +1099,5 @@ def read_delta_changelog(
         d = deletes.withColumn("_change_type", F.lit("delete"))
         out = d if out is None else out.unionByName(d)
     if out is None:
-        return spark.createDataFrame([], empty)
+        return _empty()
     return out

@@ -26,6 +26,7 @@ import os
 import shutil
 import time
 import uuid
+from dataclasses import replace
 from glob import glob
 from urllib.parse import unquote
 
@@ -38,9 +39,16 @@ from ..errors import (
     BuzzExecutionError,
     BuzzSchemaError,
 )
-from .delta_catalog import LogState, replay_log
+from .delta_catalog import (
+    LogState,
+    _log_file,
+    _mapping_info,
+    _replay_actions,
+    replay_log,
+    scan_files,
+    table_schema,
+)
 from .logstore import LogStore
-from .manifest import CatalogFile, attach_partitions, join_partitions
 from .write_store import commit_with_retry, default_store
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -166,7 +174,10 @@ def _check_writer_protocol(proto: dict, meta: dict, log_dir: str) -> None:
     USE: rules on fields this writer cannot address row-wise (identity
     or generation metadata on nested fields, invariants inside
     array/map elements).  Writer 7 iff every listed writerFeature is
-    implemented."""
+    implemented.  An unknown column-mapping mode refuses too
+    (:func:`~.delta_catalog._mapping_info`): no reader resolves the files
+    a write under it would stage."""
+    _mapping_info(meta, os.path.dirname(log_dir))
     writer_v = int(proto.get("minWriterVersion", 2))
 
     def _unenforceable() -> list[str]:
@@ -269,24 +280,6 @@ def _check_writer_protocol(proto: dict, meta: dict, log_dir: str) -> None:
     )
 
 
-def _writer_mapping(meta: dict) -> tuple[str, dict[str, str], dict[str, int]]:
-    """(columnMapping mode, logical→physical names, logical→mapping ids)
-    from the table metaData — the write-side twin of the catalog's
-    ``_mapping_info`` (duplicated to keep writer↔reader import-acyclic)."""
-    config = (meta or {}).get("configuration") or {}
-    mode = config.get("delta.columnMapping.mode", "none") or "none"
-    if mode == "none":
-        return "none", {}, {}
-    phys: dict[str, str] = {}
-    ids: dict[str, int] = {}
-    for f in json.loads(meta["schemaString"])["fields"]:
-        md = f.get("metadata") or {}
-        phys[f["name"]] = md.get("delta.columnMapping.physicalName", f["name"])
-        if md.get("delta.columnMapping.id") is not None:
-            ids[f["name"]] = int(md["delta.columnMapping.id"])
-    return mode, phys, ids
-
-
 def _require_id_rewritable(meta: dict, table_uri: str, op: str) -> None:
     """Rewrites under columnMapping mode=id re-emit ``parquet.field.id``
     footers on every staged file: top-level ids ride Spark's StructField
@@ -343,7 +336,7 @@ def _nested_id_restamp_needed(meta: dict | None) -> bool:
     """Whether staged files need the pyarrow nested-field-id post-pass:
     columnMapping mode=id AND nested top-level columns (flat tables get
     every id through Spark's field-id metadata already)."""
-    mode, _, _ = _writer_mapping(meta or {})
+    mode, _, _ = _mapping_info(meta or {})
     if mode != "id":
         return False
     from pyspark.sql.types import ArrayType, MapType, StructType
@@ -376,7 +369,7 @@ def _restamp_nested_ids(
     import pyarrow.parquet as pq
 
     fields_json = json.loads(meta["schemaString"])["fields"]
-    _, phys, _ = _writer_mapping(meta)
+    _, phys, _ = _mapping_info(meta)
     by_phys = {phys.get(f["name"], f["name"]): f for f in fields_json}
 
     def field_with_ids(pa_field, dj):
@@ -740,7 +733,7 @@ def _identity_bump(meta: dict, adds: list[dict], id_cols: list[dict]):
     record), zero data reads.  Returns None when nothing advances."""
     if not id_cols or not adds:
         return None
-    _, phys, _ = _writer_mapping(meta)
+    _, phys, _ = _mapping_info(meta)
     new_hwm: dict[str, int] = {}
     for c in id_cols:
         key = "maxValues" if c["step"] > 0 else "minValues"
@@ -847,21 +840,29 @@ def _file_stats_json(path: str, rename: dict[str, str] | None = None) -> str:
     )
 
 
-def _partition_values(
-    relpath: str, partition_by: list[str]
-) -> dict[str, str | None]:
-    """Parse Hive-style ``col=value`` directories from a staged relative path.
+def _hive_values(relpath: str) -> dict[str, str | None]:
+    """The Hive-style ``col=value`` directory segments of a relative path.
     Values are the url-decoded directory strings — Delta stores partition
     values as strings in the log, matching the reference's string-typed
     partition semantics (delta_catalog.rs:73-77, README.md:113) — except
     Spark's null directory, which the spec logs as null."""
     values: dict[str, str | None] = {}
     for seg in relpath.split(os.sep)[:-1]:
-        col, _, raw = seg.partition("=")
-        if col in partition_by:
+        col, eq, raw = seg.partition("=")
+        if eq:
             values[col] = (
                 None if raw == "__HIVE_DEFAULT_PARTITION__" else unquote(raw)
             )
+    return values
+
+
+def _partition_values(
+    relpath: str, partition_by: list[str]
+) -> dict[str, str | None]:
+    """The partition values of a staged file, from its Hive-style
+    directories (:func:`_hive_values`)."""
+    segs = _hive_values(relpath)
+    values = {c: segs[c] for c in partition_by if c in segs}
     missing = [c for c in partition_by if c not in values]
     if missing:
         raise BuzzExecutionError(
@@ -1123,7 +1124,11 @@ def _commit_protocol_extensions(
 
 
 def _claim_commit(
-    log_dir: str, st: LogState, actions: list[dict], store=None
+    log_dir: str,
+    st: LogState,
+    actions: list[dict],
+    store=None,
+    checkpoint_interval: int = 0,
 ) -> int:
     """Write the commit JSON of the version after ``st`` (the replay the
     operation is based on) and return that version, claiming the filename
@@ -1133,7 +1138,11 @@ def _claim_commit(
     retryable :class:`~..errors.BuzzCommitConflictError`, never a torn log.
     Stateful-feature obligations (inCommitTimestamp, rowTracking) are
     applied here from ``st`` so every commit path satisfies them
-    (:func:`_commit_protocol_extensions`)."""
+    (:func:`_commit_protocol_extensions`).
+
+    Every ``checkpoint_interval``-th version is checkpointed from ``st``
+    with the claimed actions applied (:func:`_replay_actions`) — the state
+    a replay of the new version would give, without a second replay."""
     if store is None:
         store = default_store()
     version = st.version + 1
@@ -1142,6 +1151,16 @@ def _claim_commit(
     store.put_if_absent(
         commit_path, "".join(json.dumps(a) + "\n" for a in actions).encode()
     )
+    if checkpoint_interval and (version + 1) % checkpoint_interval == 0:
+        post = replace(
+            st,
+            adds=dict(st.adds),
+            txns=dict(st.txns),
+            domains=dict(st.domains),
+        )
+        _replay_actions(actions, post)
+        post.version = version
+        _write_checkpoint(log_dir, post)
     return version
 
 
@@ -1168,10 +1187,9 @@ def _claim_rewrite_commit(
     as it would have if it had won the original race."""
 
     def _attempt(st_a: LogState) -> int:
-        version_a = _claim_commit(log_dir, st_a, actions, store)
-        if (version_a + 1) % checkpoint_interval == 0:
-            _write_checkpoint(log_dir, version_a)
-        return version_a
+        return _claim_commit(
+            log_dir, st_a, actions, store, checkpoint_interval
+        )
 
     def _refresh() -> LogState:
         st_f = _log_state(log_dir)
@@ -1313,27 +1331,9 @@ def _stage_change_files(
     physical (the directory names).  ``_change_type`` itself is never
     mapped (the spec stores it by that literal name)."""
     if meta is not None:
-        from pyspark.sql import functions as F
-
-        cm_mode, phys, cm_ids = _writer_mapping(meta)
-        if cm_mode != "none":
-            cols = []
-            for c in df.columns:
-                if c == "_change_type":
-                    cols.append(F.col(c))
-                    continue
-                md = None
-                if cm_mode == "id":
-                    if c not in cm_ids:
-                        raise BuzzSchemaError(
-                            "columnMapping.mode=id table lacks a mapping "
-                            f"id for column {c!r} — cannot stage "
-                            "resolvable change files"
-                        )
-                    md = {"parquet.field.id": cm_ids[c]}
-                cols.append(F.col(c).alias(phys.get(c, c), metadata=md))
-            df = df.select(*cols)
-            partition_by = [phys.get(c, c) for c in partition_by]
+        df, partition_by = _to_physical_frame(
+            df, meta, partition_by, keep=("_change_type",)
+        )
     staging = os.path.join(
         table_dir, f".cdc-{version:020d}-{uuid.uuid4().hex[:8]}"
     )
@@ -1587,27 +1587,7 @@ def write_delta(
     # physical under both modes — the reader maps them back); id mode
     # additionally stamps parquet.field.id footers so field-id readers
     # resolve without names.
-    cm_mode, phys, cm_ids = _writer_mapping(meta) if meta else ("none", {}, {})
-    stage_df, stage_parts = df, partition_by
-    if cm_mode in ("name", "id"):
-        from pyspark.sql import functions as F
-
-        cols = []
-        for f in df.schema.fields:
-            md = dict(f.metadata or {})
-            if cm_mode == "id":
-                if f.name not in cm_ids:
-                    raise BuzzSchemaError(
-                        f"columnMapping.mode=id table lacks a mapping id "
-                        f"for column {f.name!r} — cannot write resolvable "
-                        "files"
-                    )
-                md["parquet.field.id"] = cm_ids[f.name]
-            cols.append(
-                F.col(f.name).alias(phys.get(f.name, f.name), metadata=md)
-            )
-        stage_df = df.select(*cols)
-        stage_parts = [phys.get(c, c) for c in partition_by]
+    stage_df, stage_parts = _to_physical_frame(df, meta, partition_by)
 
     # Stage the data write (distributed; nothing passes through the driver)
     # and promote the files (names are unique part-...-uuid, so moves cannot
@@ -1732,10 +1712,9 @@ def write_delta(
                     }
                 }
             )
-        version_a = _claim_commit(log_dir, st_a, actions, store)
-        if (version_a + 1) % checkpoint_interval == 0:
-            _write_checkpoint(log_dir, version_a)
-        return version_a
+        return _claim_commit(
+            log_dir, st_a, actions, store, checkpoint_interval
+        )
 
     def _refresh() -> LogState | None:
         st_f = _log_state(log_dir)
@@ -1797,10 +1776,11 @@ def write_delta(
     return commit_with_retry(_attempt, _refresh, st, max_commit_retries)
 
 
-def _write_checkpoint(log_dir: str, version: int) -> None:
-    """Materialize the live snapshot at ``version`` as a checkpoint +
-    ``_last_checkpoint`` pointer (the layout :class:`DeltaCatalog` replays:
-    one action per row, non-null column = the action kind).
+def _write_checkpoint(log_dir: str, st: LogState) -> None:
+    """Materialize the table state ``st`` as the checkpoint of
+    ``st.version`` + the ``_last_checkpoint`` pointer (the layout
+    :class:`DeltaCatalog` replays: one action per row, non-null column =
+    the action kind).
 
     Tables whose protocol carries the ``v2Checkpoint`` feature get a
     spec-V2 checkpoint instead of the classic single file: a UUID-named
@@ -1811,7 +1791,7 @@ def _write_checkpoint(log_dir: str, version: int) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    st = _log_state(log_dir, version)
+    version = st.version
     # the table's ACTUAL protocol (a DV-upgraded table checkpointed as
     # reader1/writer2 would let feature-unaware readers replay it wrongly)
     proto = st.protocol
@@ -2067,8 +2047,9 @@ def optimize_delta(
     Scale: compaction is the standard fix for the small-file problem of
     incremental ingestion (many commits → many sub-row-group files → task
     overhead and poor scan locality).  The rewrite itself is a distributed
-    ``spark.read.parquet(files).coalesce(n).write`` per partition; the driver
-    only handles the O(files) listing, exactly like Delta's own OPTIMIZE.
+    scan of the partition's files (:func:`_read_table_files`), coalesced
+    to ``n`` files and written; the driver only handles the O(files)
+    listing, exactly like Delta's own OPTIMIZE.
 
     ``zorder_by`` is Delta's ``OPTIMIZE ... ZORDER BY``: EVERY partition's
     files are rewritten (re-clustering is the point, so the
@@ -2085,13 +2066,11 @@ def optimize_delta(
     live, meta = st.adds, st.meta
     if st.version < 0:
         raise BuzzBadRequestError(f"not a Delta table: {table_uri!r}")
-    # the rewrite is read+coalesce+write, which RE-ENCODES parquet and
-    # DROPS footer field ids (Spark schema inference discards them) — on
-    # an id-mode table each compacted file re-stamps them below;
-    # nested-typed id tables stay refused (top-level-only metadata)
+    # the rewrite re-encodes parquet: on an id-mode table each compacted
+    # file is staged with its field ids (top-level through the frame's
+    # metadata, nested ones by the re-stamp below)
     _require_id_rewritable(meta, table_uri, "optimize_delta")
-    cm_mode_opt, _phys_opt, _ids_opt = _writer_mapping(meta)
-    phys_ids = {_phys_opt.get(l, l): i for l, i in _ids_opt.items()}
+    data_cols = [f.name for f in table_schema(meta, table_uri).data_fields]
     zorder_by = list(zorder_by or [])
     if zorder_by:
         from pyspark.sql.types import (
@@ -2152,18 +2131,6 @@ def optimize_delta(
     }
     if not to_compact:
         return None
-    # positions are decoded ONLY for the files actually being rewritten
-    # (their whole content is being read anyway — the decode is a rounding
-    # error next to the rewrite, and driver payload stays O(compacted DVs))
-    dv_by_rel = _dv_positions_by_rel(
-        table_dir,
-        {
-            a["path"]: live[a["path"]]
-            for adds in to_compact.values()
-            for a in adds
-            if a["path"] in dv_members
-        },
-    )
 
     now_ms = int(time.time() * 1000)
     new_adds: list[dict] = []
@@ -2171,117 +2138,40 @@ def optimize_delta(
     staging = os.path.join(
         table_dir, f".optimize-{st.version + 1:020d}-{uuid.uuid4().hex[:8]}"
     )
-    for key, adds in sorted(to_compact.items()):
-        paths = [os.path.join(table_dir, a["path"]) for a in adds]
+    # str keys: a null partition value (None) does not order against str
+    for key, adds in sorted(to_compact.items(), key=lambda kv: str(kv[0])):
         total = sum(a["size"] for a in adds)
         n_out = max(1, -(-total // target_file_bytes))  # ceil
         part_dir = os.path.dirname(adds[0]["path"])  # "" for unpartitioned
         if os.path.isabs(part_dir):
             # externally-registered files (add_files_delta absolute
             # paths) compact back INTO the table root; partition values
-            # (if any) ride the new add action, which the read path's
-            # flat branch (_files_scan) attaches
+            # (if any) ride the new add action, which every scan attaches
             part_dir = ""
         out_dir = os.path.join(staging, part_dir) if part_dir else staging
-        # Data files never contain partition columns (written via
-        # partitionBy), so a plain read+coalesce round-trips them exactly.
-        # DV-carrying files contribute their LOGICAL content (deleted rows
-        # filtered out) — the compacted file purges the vector.
-        if cm_mode_opt == "id":
-            # id-mode files may carry per-file physical names (only the
-            # ids agree): read by field id against the DECLARED physical
-            # schema minus partition columns, never one sampled footer
-            from pyspark.sql.types import StructType as _ST
-
-            spark.conf.set(
-                "spark.sql.parquet.fieldId.read.enabled", "true"
-            )
-            part_phys = set(meta.get("partitionColumns") or [])
-            df = spark.read.schema(
-                _ST(
-                    [
-                        f
-                        for f in _physical_read_schema(meta).fields
-                        if f.name not in part_phys
-                    ]
-                )
-            ).parquet(*paths)
-        else:
-            # explicit physical data schema (partition columns excluded):
-            # footer inference would sample one file, breaking on mixed
-            # pre/post-evolution sets and on externally-registered files
-            # that physically CONTAIN the partition columns (column
-            # pruning drops them here; the add action carries the values)
-            from pyspark.sql.types import StructType as _ST
-
-            part_phys_all = {
-                _phys_opt.get(c, c)
-                for c in (meta.get("partitionColumns") or [])
-            }
-            df = spark.read.schema(
-                _ST(
-                    [
-                        f
-                        for f in _physical_read_schema(meta).fields
-                        if f.name not in part_phys_all
-                    ]
-                )
-            ).parquet(*paths)
-        deleted = [
-            (os.path.abspath(os.path.join(table_dir, a["path"])), int(p))
-            for a in adds
-            for p in dv_by_rel.get(a["path"], ())
-        ]
-        if deleted:
-            from pyspark.sql import functions as F
-
-            from .deletion_vectors import filter_deleted_rows
-
-            df = filter_deleted_rows(
-                df.select(
-                    "*",
-                    F.col("_metadata.file_path").alias("__rawpath"),
-                    F.col("_metadata.row_index").alias("__ridx"),
-                ),
-                deleted,
-                spark,
-            )
-        if cm_mode_opt == "id":
-            from pyspark.sql import functions as F
-
-            missing = [c for c in df.columns if c not in phys_ids]
-            if missing:
-                raise BuzzSchemaError(
-                    f"columnMapping.mode=id table has data-file columns "
-                    f"{missing} with no mapping id in the declared schema "
-                    "— cannot re-stamp resolvable compacted files"
-                )
-            df = df.select(
-                *[
-                    F.col(c).alias(
-                        c, metadata={"parquet.field.id": phys_ids[c]}
-                    )
-                    for c in df.columns
-                ]
-            )
+        # The compacted files hold the data columns only (partition values
+        # ride the add action).  DV-carrying files contribute their
+        # LOGICAL content (deleted rows filtered out): the compacted file
+        # purges the vector, and positions are decoded only for the files
+        # being rewritten.
+        df = _read_table_files(
+            spark, table_dir, [a["path"] for a in adds], meta, live
+        ).select(*data_cols)
         if zorder_by:
             from .writer import scaled_zorder_key
 
-            # raw compaction reads see PHYSICAL column names; the
-            # validated zorder_by names are logical
-            zorder_phys = [_phys_opt.get(c, c) for c in zorder_by]
             df = (
-                df.withColumn("__zorder", scaled_zorder_key(df, zorder_phys))
+                df.withColumn("__zorder", scaled_zorder_key(df, zorder_by))
                 .repartitionByRange(n_out, "__zorder")
                 .sortWithinPartitions("__zorder")
                 .drop("__zorder")
             )
-            df.write.mode("overwrite").parquet(out_dir)
         else:
-            df.coalesce(n_out).write.mode("overwrite").parquet(out_dir)
+            df = df.coalesce(n_out)
+        df, _ = _to_physical_frame(df, meta, [])
+        df.write.mode("overwrite").parquet(out_dir)
         compacted = sorted(glob(os.path.join(out_dir, "*.parquet")))
-        if cm_mode_opt == "id":
-            _restamp_nested_ids(compacted, meta)
+        _restamp_nested_ids(compacted, meta)
         for fpath in compacted:
             rel = os.path.join(part_dir, os.path.basename(fpath)) if part_dir else (
                 os.path.basename(fpath)
@@ -2350,39 +2240,6 @@ def _type_no_metadata(dt):
     return dt
 
 
-def _physical_read_schema(meta: dict):
-    """The declared schema with PHYSICAL field names, for
-    ``spark.read.schema(...)`` on table data files.  Passing it explicitly
-    (instead of footer inference) makes columns added by
-    :func:`evolve_delta` resolve as NULL in pre-evolution files — inference
-    samples one footer and raises UNRESOLVED_COLUMN whenever a touched file
-    predates the evolution — and makes mixed old/new file sets independent
-    of which footer Spark happens to sample.
-
-    Under mode=id the schema fields additionally carry
-    ``parquet.field.id`` metadata: external id-mode files may use
-    DIFFERENT physical names per file (only the ids agree — the spec's
-    contract), so resolution must go by field id
-    (:func:`_read_table_files` turns the fieldId read conf on)."""
-    from pyspark.sql.types import StructField, StructType
-
-    schema = _declared_schema(meta)
-    mode, phys, ids = _writer_mapping(meta)
-    return StructType(
-        [
-            StructField(
-                phys.get(f.name, f.name),
-                f.dataType,
-                True,
-                {"parquet.field.id": ids[f.name]}
-                if mode == "id" and f.name in ids
-                else None,
-            )
-            for f in schema.fields
-        ]
-    )
-
-
 def _dv_positions_by_rel(table_dir: str, live: dict) -> dict[str, list[int]]:
     """Decoded deleted row indexes for every live add that carries a
     deletion vector (empty dict when none do)."""
@@ -2402,160 +2259,49 @@ def _dv_positions_by_rel(table_dir: str, live: dict) -> dict[str, list[int]]:
     }
 
 
-def _hive_complete(rel: str, phys_parts: list[str]) -> bool:
-    """Whether an in-table relative path carries a ``col=value`` directory
-    segment for EVERY physical partition column (the only shape directory
-    inference can re-attach partition values from)."""
-    if os.path.isabs(rel):
-        return False
-    segs = {s.split("=", 1)[0] for s in rel.split("/")[:-1] if "=" in s}
-    return all(p in segs for p in phys_parts)
-
-
-def _files_scan(
+def _read_table_files(
     spark,
     table_dir: str,
     rels: list[str],
     meta: dict,
-    live: dict | None = None,
-    with_meta: bool = False,
+    live: dict,
+    keep_meta: bool = False,
+    apply_dvs: bool = True,
 ):
-    """PHYSICAL-schema scan of table data files with partition columns
-    re-attached.  In-table hive-layout files read in ONE basePath scan
-    (directory inference, cheap, no per-file bookkeeping); files
-    registered without hive layout — :func:`add_files_delta` external
-    absolute paths or in-table flat files — take their partition values
-    from the ADD ACTION's ``partitionValues`` (the spec's authoritative
-    source) through :func:`~.manifest.attach_partitions`, then cast to the
-    declared types.  ``with_meta`` additionally selects
-    ``__rawpath``/``__ridx`` (``_metadata`` resolves only on a scan
-    relation, never through a union, so the select happens inside each
-    scan; Spark reads it even when unused, hence the switch)."""
-    from functools import reduce
+    """Live data files ``rels`` read back to the DECLARED table schema
+    through the one Delta file scan (:func:`~.delta_catalog.scan_files`):
+    each file's partition values come from its add action in ``live`` —
+    the spec's authoritative source, whatever directory the file sits in
+    (hive layout, flat, or an external absolute path) — and are cast to
+    the declared types.
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    mode, phys, _ = _writer_mapping(meta)
-    if mode == "id":
-        # id-mode files resolve by footer field id (physical names can
-        # differ per file); the read schema carries parquet.field.id
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    full = _physical_read_schema(meta)
-    part_cols = list(meta.get("partitionColumns") or [])
-    phys_parts = [phys.get(c, c) for c in part_cols]
-
-    def _meta_cols():
-        return (
-            [
-                F.col("_metadata.file_path").alias("__rawpath"),
-                F.col("_metadata.row_index").alias("__ridx"),
-            ]
-            if with_meta
-            else []
-        )
-
-    if not part_cols:
-        raw = spark.read.schema(full).parquet(
-            *[os.path.join(table_dir, r) for r in rels]
-        )
-        return raw.select("*", *_meta_cols()) if with_meta else raw
-
-    part_types = {
-        f.name: f.dataType for f in full.fields if f.name in phys_parts
-    }
-    data_phys = StructType(
-        [f for f in full.fields if f.name not in phys_parts]
+    Deletion vectors on the requested files are APPLIED — every rewrite
+    path (merge, copy-on-write delete, update, optimize) must see the
+    logical content, or its rewritten files would resurrect DV-deleted
+    rows — unless ``apply_dvs`` is off (:func:`_dml_scan` decodes them
+    executor-side).  ``keep_meta`` keeps ``__rawpath`` (the raw
+    ``_metadata.file_path``, the scan key of :mod:`.uris`) and ``__ridx``
+    (``_metadata.row_index``): the keys of file attribution
+    (:func:`_rels_of`) and of deletion vectors."""
+    store = LogStore(os.path.abspath(table_dir))
+    ts = table_schema(meta, table_dir)
+    df = scan_files(
+        spark,
+        ts,
+        [_log_file(store, r, live[r], ts) for r in rels],
+        _deleted_positions(table_dir, rels, live) if apply_dvs else [],
+        keep_meta,
     )
-    # hive branch: basePath inference needs the live-add fallback only for
-    # rels absent from `live` (never happens via the public writers)
-    hive, flat = [], []
-    for r in rels:
-        if live is not None and r in live and not _hive_complete(r, phys_parts):
-            flat.append(r)
-        else:
-            hive.append(r)
-    branches = []
-    if hive:
-        branches.append(
-            spark.read.schema(full)
-            .option("basePath", table_dir)
-            .parquet(*[os.path.join(table_dir, r) for r in hive])
-            .select("*", *_meta_cols())
-        )
-    if flat:
-        # an absent partitionValues key stays None, like a null value
-        d = attach_partitions(
-            spark,
-            [
-                CatalogFile(
-                    key=os.path.join(table_dir, r),
-                    length=0,
-                    partitions=tuple(
-                        (p, (live[r].get("partitionValues") or {}).get(p))
-                        for p in phys_parts
-                    ),
-                )
-                for r in flat
-            ],
-            phys_parts,
-            lambda paths: spark.read.schema(data_phys)
-            .parquet(*paths)
-            .select("*", *_meta_cols()),
-        )
-        branches.append(
-            d.withColumns({p: F.col(p).cast(part_types[p]) for p in phys_parts})
-        )
-    return reduce(DataFrame.unionByName, branches)
+    meta_cols = ["__rawpath", "__ridx"] if keep_meta else []
+    return _declared_frame(df, meta, *meta_cols)
 
 
-def _read_table_files(
-    spark, table_dir: str, rels: list[str], meta: dict, live: dict | None = None
-):
-    """Read live data files back to the DECLARED table schema.  Partitioned
-    tables re-attach partition columns via :func:`_files_scan` (directory
-    inference for hive-layout files, add-action ``partitionValues`` for
-    registered flat/external files), then cast — directory inference types
-    numeric-looking strings as ints, the metaData schemaString is
-    authoritative.
-
-    With ``live`` provided, deletion vectors on the requested files are
-    APPLIED (anti-join on ``_metadata.row_index``) — every rewrite path
-    (merge, copy-on-write delete, optimize) must see the logical content,
-    or its rewritten files would resurrect DV-deleted rows."""
-    from .deletion_vectors import filter_deleted_rows
-
-    deleted = _deleted_positions(table_dir, rels, live)
-    df = _files_scan(
-        spark, table_dir, rels, meta, live, with_meta=bool(deleted)
-    )
-    if deleted:
-        df = filter_deleted_rows(df, deleted, spark)
-    return _declared_frame(df, meta)
-
-
-def _live_rows(
-    spark, table_dir: str, rels: list[str], meta: dict, live: dict | None = None
-):
-    """:func:`_read_table_files` plus each row's ``__rawpath``, the key
-    MERGE attributes matched rows to their files by (:func:`_rels_of`)."""
-    from .deletion_vectors import filter_deleted_rows
-
-    deleted = _deleted_positions(table_dir, rels, live)
-    df = _scan_with_meta(spark, table_dir, rels, meta, live)
-    if deleted:
-        df = filter_deleted_rows(df, deleted, spark, drop_path=False)
-    return df.drop("__ridx")
-
-
-def _deleted_positions(table_dir: str, rels: list[str], live: dict | None):
+def _deleted_positions(table_dir: str, rels: list[str], live: dict):
     """``[(absolute path, row index)]`` deleted by the vectors ``live``
     records on ``rels``.  Only the REQUESTED files' vectors are decoded: a
     rewrite of one partition must not pay a driver-side decode of every
     live file's DV."""
-    by_rel = _dv_positions_by_rel(
-        table_dir, {r: (live or {})[r] for r in rels if r in (live or {})}
-    )
+    by_rel = _dv_positions_by_rel(table_dir, {r: live[r] for r in rels})
     return [
         (os.path.abspath(os.path.join(table_dir, rel)), int(p))
         for rel in rels
@@ -2564,14 +2310,13 @@ def _deleted_positions(table_dir: str, rels: list[str], live: dict | None):
 
 
 def _declared_frame(df: DataFrame, meta: dict, *extra: str) -> DataFrame:
-    """``df``'s physical columns cast to the DECLARED schema, plus
-    ``extra``."""
+    """``df``'s logical columns cast to the DECLARED schema (partition
+    values arrive as strings), plus ``extra``."""
     from pyspark.sql import functions as F
 
-    _, phys, _ = _writer_mapping(meta)  # files + partition dirs are physical
     return df.select(
         *[
-            F.col(phys.get(f.name, f.name)).cast(f.dataType).alias(f.name)
+            F.col(f.name).cast(f.dataType).alias(f.name)
             for f in _declared_schema(meta).fields
         ],
         *extra,
@@ -2589,31 +2334,39 @@ def _rels_of(df: DataFrame, table_dir: str, live: dict):
     )
 
 
-def _to_physical_frame(df: DataFrame, meta: dict, partition_by: list[str]):
+def _to_physical_frame(
+    df: DataFrame, meta: dict, partition_by: list[str], keep: tuple = ()
+):
     """(df with PHYSICAL column names, physical partition cols) for staging
     writes into a column-mapped table — identity on unmapped tables.
     Under mode=id every column is additionally stamped with its mapping
     id as ``parquet.field.id`` alias metadata, which Spark's parquet
     writer emits as footer field ids (``fieldId.write.enabled``, default
-    on) — the invariant external field-id readers rely on."""
-    cm_mode, phys, cm_ids = _writer_mapping(meta)
+    on) — the invariant external field-id readers rely on.  ``keep``
+    names columns staged as they are (``_change_type`` on change files:
+    the spec stores it by that literal name)."""
+    cm_mode, phys, cm_ids = _mapping_info(meta)
     if cm_mode == "none":
         return df, partition_by
     from pyspark.sql import functions as F
 
     cols = []
-    for c in df.columns:
-        md = None
+    for f in df.schema.fields:
+        if f.name in keep:
+            cols.append(F.col(f.name))
+            continue
+        md = dict(f.metadata or {})
         if cm_mode == "id":
-            if c not in cm_ids:
+            if f.name not in cm_ids:
                 raise BuzzSchemaError(
                     f"columnMapping.mode=id table lacks a mapping id for "
-                    f"column {c!r} — cannot stage resolvable rewrite files"
+                    f"column {f.name!r} — cannot stage resolvable files"
                 )
-            md = {"parquet.field.id": cm_ids[c]}
-        cols.append(F.col(c).alias(phys.get(c, c), metadata=md))
-    out = df.select(*cols)
-    return out, [phys.get(c, c) for c in partition_by]
+            md["parquet.field.id"] = cm_ids[f.name]
+        cols.append(
+            F.col(f.name).alias(phys.get(f.name, f.name), metadata=md)
+        )
+    return df.select(*cols), [phys.get(c, c) for c in partition_by]
 
 
 def _key_overlap_candidates(live: dict[str, dict], ranges: dict) -> list[str]:
@@ -2711,7 +2464,7 @@ def _merge_delta_generalized(
             *[F.min(k).alias(f"_lo_{k}") for k in on],
             *[F.max(k).alias(f"_hi_{k}") for k in on],
         ).first()
-        _, _phys, _ = _writer_mapping(meta)
+        _, _phys, _ = _mapping_info(meta)
         ranges = {
             _phys.get(k, k): (row[f"_lo_{k}"], row[f"_hi_{k}"]) for k in on
         }
@@ -2739,7 +2492,9 @@ def _merge_delta_generalized(
         touched: list[str] = []
         tgt_keys = None
         if scan_rels:
-            cand_df = _live_rows(spark, table_dir, scan_rels, meta, live)
+            cand_df = _read_table_files(
+                spark, table_dir, scan_rels, meta, live, keep_meta=True
+            )
             tgt_keys = cand_df.select(*on)
             rel_of = _rels_of(cand_df, table_dir, live)
             if by_source:
@@ -3160,7 +2915,7 @@ def merge_delta(
             *[F.max(k).alias(f"_hi_{k}") for k in on],
         ).first()
         # add-action stats are keyed by PHYSICAL names on mapped tables
-        _, _phys, _ = _writer_mapping(meta)
+        _, _phys, _ = _mapping_info(meta)
         ranges = {
             _phys.get(k, k): (row[f"_lo_{k}"], row[f"_hi_{k}"]) for k in on
         }
@@ -3170,7 +2925,9 @@ def merge_delta(
         touched: list[str] = []
         tgt_keys = None
         if candidates:
-            cand_df = _live_rows(spark, table_dir, candidates, meta, live)
+            cand_df = _read_table_files(
+                spark, table_dir, candidates, meta, live, keep_meta=True
+            )
             # Key-column scan + file attribution; the join's source side is a
             # batch → broadcast by Spark's own sizing.
             hits = (
@@ -3307,24 +3064,11 @@ def merge_delta(
         source.unpersist()
 
 
-def _scan_with_meta(
-    spark, table_dir: str, rels: list[str], meta: dict, live: dict | None = None
-):
-    """Declared-schema read of table files PLUS ``__rawpath`` (the raw
-    ``_metadata.file_path``, the scan key of :mod:`.uris`) and ``__ridx``
-    (``_metadata.row_index``) — the columns file attribution and deletion
-    vectors key on.  Built on :func:`_files_scan` (which selects the
-    ``_metadata`` pseudo-columns inside each scan branch) so registered
-    flat/external files on partitioned tables attribute correctly too."""
-    df = _files_scan(spark, table_dir, rels, meta, live, with_meta=True)
-    return _declared_frame(df, meta, "__rawpath", "__ridx")
-
-
 def _dml_scan(spark, table_dir: str, meta: dict, live: dict):
     """DELETE/UPDATE's attribution scan: ``(scan, rel_of, old_pos_df)``.
 
-    ``scan`` is :func:`_scan_with_meta` of every live file minus the rows
-    its deletion vectors already delete (a predicate matching only them
+    ``scan`` is :func:`_read_table_files` of every live file, with
+    ``__rawpath``/``__ridx``, minus the rows its deletion vectors delete (a predicate matching only them
     is a logical no-op); ``rel_of`` maps a row's ``__rawpath`` to its log
     path (:func:`_rels_of`).  EXISTING deletion vectors are decoded
     EXECUTOR-side (:func:`~.deletion_vectors.decode_dvs_distributed`,
@@ -3338,7 +3082,10 @@ def _dml_scan(spark, table_dir: str, meta: dict, live: dict):
 
     from .deletion_vectors import decode_dvs_distributed
 
-    scan = _scan_with_meta(spark, table_dir, sorted(live), meta, live)
+    scan = _read_table_files(
+        spark, table_dir, sorted(live), meta, live, keep_meta=True,
+        apply_dvs=False,
+    )
     rel_of = _rels_of(scan, table_dir, live)
     dv_desc = {
         raw: live[rel]["deletionVector"]
@@ -3672,9 +3419,10 @@ def clone_delta(
     (schema, partitioning, configuration — constraints and column
     mapping included) under a fresh table id.
 
-    The external-file read machinery (:func:`_files_scan`,
-    :func:`add_files_delta`) is what makes the cloned absolute adds
-    first-class: scans, merges, deletes, updates, and OPTIMIZE over
+    Every scan takes a file's location and partition values from its add
+    action (:func:`_read_table_files`), which is what makes the cloned
+    absolute adds first-class: scans, merges, deletes, updates, and
+    OPTIMIZE over
     them all work, compacting results INTO the clone.  Boundary:
     sources carrying the ``rowTracking`` writer feature refuse typed
     (cloned adds would need fresh base row ids and domain metadata —
@@ -4296,54 +4044,28 @@ def _register_files_distributed(
 
 
 def _enforce_registered_files(
-    spark,
-    reg: list[tuple[str, dict]],
-    meta: dict,
-    read_schema,
-    declared,
-    part_cols: list[str],
-    phys: dict[str, str],
+    spark, table_dir: str, reg: list[tuple[str, dict]], meta: dict
 ) -> None:
     """Run :func:`_enforce_table_rules` over the files an
     ``add_files_delta`` call is about to register — ONE aggregate job
-    reading the data columns of every file (``read_schema`` is in the
-    FILE namespace: logical, physical, or field-id-resolved names),
-    renamed back to LOGICAL names so the declared rules resolve, with
-    partition columns re-attached from the derived per-file values
-    (broadcast manifest join) so constraints over them evaluate too.
-    Registration is the one writer path where rows reach the table
-    without passing through a staging write; skipping this check would
-    let a CHECK-constrained table onboard violating rows (round-11
-    verdict, wrong #1)."""
-    from pyspark.sql import functions as F
-
+    reading every file through the one Delta file scan, the partition
+    values ``reg`` derived for each file (keyed by PHYSICAL names, the
+    log's convention) attached and cast like any rewrite read's, so
+    constraints over them evaluate too.  Registration is the one writer
+    path where rows reach the table without passing through a staging
+    write; skipping this check would let a CHECK-constrained table
+    onboard violating rows."""
     checks, invariants, generated = _table_rules(meta)
     if not (checks or invariants or generated):
         return
-    data_logical = [f.name for f in declared.fields if f.name not in part_cols]
-    df = spark.read.schema(read_schema).parquet(*[ap for ap, _ in reg])
-    df = df.select(
-        *[F.col(phys.get(c, c)).alias(c) for c in data_logical],
-        F.col("_metadata.file_path").alias("__rawpath"),
+    ts = table_schema(meta, table_dir)
+    store = LogStore(os.path.abspath(table_dir))
+    files = [_log_file(store, ap, {"partitionValues": pv}, ts) for ap, pv in reg]
+    _enforce_table_rules(
+        _declared_frame(scan_files(spark, ts, files), meta),
+        meta,
+        "add_files_delta",
     )
-    # pv values are keyed by PHYSICAL names (the log's convention); the
-    # manifest re-surfaces them under the logical names
-    df = join_partitions(
-        spark,
-        df,
-        [
-            CatalogFile(
-                key=ap,
-                length=0,
-                partitions=tuple((c, pv.get(phys.get(c, c))) for c in part_cols),
-            )
-            for ap, pv in reg
-        ],
-        part_cols,
-    ).drop("__rawpath")
-    types = {f.name: f.dataType for f in declared.fields}
-    df = df.withColumns({c: F.col(c).cast(types[c]) for c in part_cols})
-    _enforce_table_rules(df, meta, "add_files_delta")
 
 
 def _verify_file_field_ids(ap: str, data_fields, cm_ids: dict, orig: str):
@@ -4409,16 +4131,16 @@ def add_files_delta(
       register by relative path, external ones by absolute path (the
       spec allows it; ``LogStore.spark_path`` passes absolutes through).
     - PARTITIONED tables take partition values from the in-table hive
-      directory segments (``<table>/<col>=<value>/...``) when present —
-      the basePath derivation the hive read branch uses — and otherwise
-      derive them from FOOTER STATISTICS with the partition-pure rule
-      :func:`add_files_iceberg` already applies (min == max, no nulls;
-      all-null → NULL value; anything else refuses typed): the file must
-      then physically CONTAIN the partition columns.  That lifts the
-      in-table-hive-layout requirement for external onboarding; reads
-      attach the committed ``partitionValues`` via
-      :func:`_files_scan`'s literal/manifest branch, so pruning and
-      rewrites keep working.
+      directory segments (``<table>/<col>=<value>/...``, url-decoded,
+      Spark's null directory as null — :func:`_hive_values`) when
+      present, and otherwise derive them from FOOTER STATISTICS with the
+      partition-pure rule :func:`add_files_iceberg` already applies
+      (min == max, no nulls; all-null → NULL value; anything else
+      refuses typed): the file must then physically CONTAIN the
+      partition columns.  That lifts the in-table-hive-layout
+      requirement for external onboarding; every read attaches the
+      committed ``partitionValues`` (:func:`_read_table_files`), so
+      pruning and rewrites keep working.
 
     Tables declaring CHECK constraints, column invariants, or generated
     columns validate the registered rows FIRST — one aggregate job over
@@ -4464,7 +4186,7 @@ def add_files_delta(
     live, meta = st.adds, st.meta
     if st.version < 0:
         raise BuzzBadRequestError(f"not a Delta table: {table_uri!r}")
-    cm_mode, phys, cm_ids = _writer_mapping(meta)
+    cm_mode, phys, cm_ids = _mapping_info(meta)
     declared = _declared_schema(meta)
     part_cols = list(meta.get("partitionColumns") or [])
     phys_parts = [phys.get(c, c) for c in part_cols]
@@ -4528,11 +4250,7 @@ def add_files_delta(
             )
         hive_pv: dict | None = None
         if part_cols:
-            segs = (
-                dict(s.split("=", 1) for s in rel.split("/")[:-1] if "=" in s)
-                if inside
-                else {}
-            )
+            segs = _hive_values(rel) if inside else {}
             if all(c in segs for c in phys_parts):
                 hive_pv = {c: segs[c] for c in phys_parts}
         jobs.append((p, ap, rel, hive_pv))
@@ -4578,14 +4296,7 @@ def add_files_delta(
                 }
             }
         )
-    if cm_mode == "id":
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        read_schema = _physical_read_schema(meta)
-    else:
-        read_schema = file_schema
-    _enforce_registered_files(
-        spark, reg, meta, read_schema, declared, part_cols, phys
-    )
+    _enforce_registered_files(spark, table_dir, reg, meta)
     id_bump = _identity_bump(
         meta, [a["add"] for a in actions], _identity_columns(meta)
     )

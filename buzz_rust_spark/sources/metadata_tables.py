@@ -638,7 +638,7 @@ def _delta_files_distributed(
             )
         if not meta:
             return None
-    _, phys = _mapping_info(meta, table_uri)
+    _, phys, _ = _mapping_info(meta, table_uri)
     inv = {p: l for l, p in (phys or {}).items()}
 
     adds_df = cp_df.where(F.col("add.path").isNotNull()).select("add.*")
@@ -727,7 +727,7 @@ def delta_files(
     from .delta_catalog import DeltaCatalog
 
     cat = DeltaCatalog("_metadata", table_uri, version=version, region=region)
-    inv = {p: l for l, p in (cat._phys or {}).items()}
+    inv = {p: l for l, p in cat._table_schema.rename.items()}
     rows = [
         _delta_file_row(rel, add, inv)
         for rel, add in sorted(cat._live_adds.items())

@@ -1094,6 +1094,15 @@ def test_column_mapping_unknown_mode_refused(spark, tmp_path):
     _write_commit(log, 1, [{"metaData": meta}])
     with pytest.raises(BuzzNotImplementedError, match="mode='weird'"):
         DeltaCatalog("cm", table)
+    # the writer refuses too: files staged under an unknown mode would be
+    # unreadable, and a rewrite cannot resolve the existing ones
+    from buzz_rust_spark.sources.delta_writer import delete_delta, write_delta
+
+    rows = spark.createDataFrame([("fin", 7)], "team_name string, staff long")
+    with pytest.raises(BuzzNotImplementedError, match="mode='weird'"):
+        write_delta(rows, table)
+    with pytest.raises(BuzzNotImplementedError, match="mode='weird'"):
+        delete_delta(spark, table, "staff = 5")
 
 
 def test_null_partition_value_is_sql_null(spark, tmp_path):
@@ -2075,6 +2084,52 @@ def test_id_mode_rewrites_survive_merge_delete_optimize(spark, tmp_path):
         assert {b"1", b"2"} <= ids, f"{rel} lost field ids: {sch}"
 
 
+def test_id_mode_optimize_keeps_partition_column_out_of_files(
+    spark, tmp_path
+):
+    """OPTIMIZE on a partitioned mode=id table whose partition column's
+    physical name (``col-yyy``) differs from its logical one (``year``):
+    the rows stay the same and no compacted file holds the partition
+    column — its values ride the add actions."""
+    import pyarrow.parquet as pq
+
+    from buzz_rust_spark.sources.delta_writer import optimize_delta, write_delta
+
+    table = _make_id_mapped_table(str(tmp_path), partitioned=True)
+    write_delta(
+        spark.createDataFrame(
+            [("fin", 7, "2020"), ("hr", 3, "2021")],
+            "team_name string, staff long, year string",
+        ),
+        table,
+        partition_by=["year"],
+    )
+
+    def state():
+        return sorted(
+            (r.team_name, r.staff, r.year)
+            for r in DeltaCatalog("im", table).to_dataframe(spark).collect()
+        )
+
+    before = state()
+    assert before == [
+        ("eng", 10, "2020"), ("fin", 7, "2020"), ("hr", 3, "2021"),
+        ("ops", 5, "2020"), ("sci", 12, "2021"),
+    ]
+    v = optimize_delta(spark, table, target_file_bytes=1 << 30)
+    assert v is not None
+    assert state() == before
+    commit = [
+        json.loads(line)
+        for line in open(os.path.join(table, "_delta_log", f"{v:020d}.json"))
+    ]
+    adds = [a["add"] for a in commit if "add" in a]
+    assert {a["partitionValues"]["col-yyy"] for a in adds} == {"2020", "2021"}
+    for add in adds:
+        names = pq.read_schema(os.path.join(table, add["path"])).names
+        assert not {"year", "col-yyy"} & set(names), names
+
+
 def test_id_mode_nested_rewrite_refused(spark, tmp_path):
     """Round-11 narrowed the nested id-mode refusal: rewrites now re-emit
     inner field ids via the pyarrow post-pass, so the only remaining
@@ -2928,13 +2983,16 @@ def test_checkpoint_replay_matches_json_replay(spark, tmp_path, build):
     import shutil
 
     from buzz_rust_spark.sources.delta_catalog import replay_log
-    from buzz_rust_spark.sources.delta_writer import _write_checkpoint
+    from buzz_rust_spark.sources.delta_writer import (
+        _log_state,
+        _write_checkpoint,
+    )
     from buzz_rust_spark.sources.logstore import LogStore
 
     root = build(spark, tmp_path)
     log = os.path.join(root, "_delta_log")
     last = replay_log(LogStore(root)).version
-    _write_checkpoint(log, last)
+    _write_checkpoint(log, _log_state(log, last))
     json_only = str(tmp_path / "json_only")
     shutil.copytree(root, json_only)
     jlog = os.path.join(json_only, "_delta_log")
@@ -3087,7 +3145,7 @@ def test_delta_id_mode_nested_rewrites_restamp_inner_ids(spark, tmp_path):
     }
 
 
-def test_files_scan_manifest_branch(spark, tmp_path, monkeypatch):
+def test_rewrite_scan_manifest_branch(spark, tmp_path, monkeypatch):
     """Past manifest.UNION_MAX_GROUPS distinct partition tuples among
     flat-registered files, the rewrite read switches from per-tuple
     literal unions to one scan + broadcast manifest join — same rows,

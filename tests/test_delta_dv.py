@@ -403,11 +403,16 @@ def test_vacuum_keeps_live_sidecar(spark, tmp_path):
 
 
 def test_checkpoint_preserves_dv(spark, tmp_path):
-    from buzz_rust_spark.sources.delta_writer import _write_checkpoint, delete_delta
+    from buzz_rust_spark.sources.delta_writer import (
+        _log_state,
+        _write_checkpoint,
+        delete_delta,
+    )
 
     table = _fresh_table(spark, str(tmp_path), "t", n=8)
     assert delete_delta(spark, table, "k IN (2, 6)", mode="dv") == 1
-    _write_checkpoint(os.path.join(table, "_delta_log"), 1)
+    log = os.path.join(table, "_delta_log")
+    _write_checkpoint(log, _log_state(log, 1))
     # DeltaCatalog replays FROM the checkpoint (no JSON commits after it) —
     # the DV must survive the parquet round-trip
     got = sorted(r.k for r in DeltaCatalog("t", table).to_dataframe(spark).collect())

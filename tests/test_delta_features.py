@@ -214,14 +214,17 @@ def test_row_tracking(spark, tmp_path):
     assert hwm3 > hwm2
 
     # checkpoint carries the domain state + the add fields
-    from buzz_rust_spark.sources.delta_writer import _write_checkpoint
+    from buzz_rust_spark.sources.delta_writer import (
+        _log_state,
+        _write_checkpoint,
+    )
 
     log_dir = os.path.join(root, "_delta_log")
     last = max(
         int(os.path.basename(p).split(".")[0])
         for p in glob(os.path.join(log_dir, "*.json"))
     )
-    _write_checkpoint(log_dir, last)
+    _write_checkpoint(log_dir, _log_state(log_dir, last))
     import pyarrow.parquet as pq
 
     cp = pq.read_table(
